@@ -296,11 +296,11 @@ def write_bucketed(df: DataFrame, table: str, buckets: int = 32,
 
 
 # Budgets at or above this are "unlimited": the per-host rank-limit can
-# never bind (no real round backlogs 10^9 URLs on ONE host), so those
-# hosts bypass the rank windows entirely. Without this, an
-# unlimited-budget round (the steady-state drain shape) would still push
-# every hot-host row through one phase-2 window task — measured ~8 s of
-# near-serial work per round at the 102k-page bench corpus.
+# never bind (no real round backlogs 10^9 URLs on ONE host), so those rows
+# always dequeue. A literal budget this large folds the whole rank-limit
+# out of the plan: ``_take`` simplifies to ``true``, both windows lose
+# their last consumer and are pruned, and ``deferred`` becomes an empty
+# relation.
 UNLIMITED_TOKENS = 10 ** 9
 
 
@@ -319,9 +319,14 @@ def politeness_dequeue(
     per-round token count. Budget is deterministic (fixed tokens/round, no
     wall clock) in correctness mode — SURVEY.md §7.0.
 
-    Hosts whose effective budget is >= ``UNLIMITED_TOKENS`` skip the rank
-    windows (every row dequeues; rank-limit provably cannot bind), so an
-    effectively-unbudgeted round costs zero window work.
+    One linear chain, no aggregate, join or union: phase 1 ranks ``_r1``
+    within (host, salt); the rows with ``_r1 <= budget`` of a capped host
+    are its survivors, and phase 2 ranks them exactly within the host by
+    moving them into one extra partition (salt -1), which holds at most
+    ``salt_buckets * budget`` rows. Free rows (budget >= UNLIMITED_TOKENS)
+    and phase-1 losers keep their salted partitions, so no partition grows
+    with the hot host's backlog. ``dequeued`` and ``deferred`` are the two
+    filters of the same ranked frame.
     """
     df = frontier
     if host_budget is not None:
@@ -329,42 +334,25 @@ def politeness_dequeue(
         budget = F.coalesce(F.col("tokens"), F.lit(tokens_per_host))
     else:
         budget = F.lit(tokens_per_host)
-    df = df.withColumn("_budget", budget).drop("tokens")
-
-    free = df.filter(F.col("_budget") >= UNLIMITED_TOKENS).drop("_budget")
-    capped = df.filter(F.col("_budget") < UNLIMITED_TOKENS)
-
+    order = (F.desc("priority"), F.asc("seq"))
     salt = F.pmod(F.xxhash64("canon_url"), F.lit(salt_buckets))
-    w1 = Window.partitionBy("host", "_salt").orderBy(
-        F.desc("priority"), F.asc("seq")
+    free = F.col("_budget") >= UNLIMITED_TOKENS
+    survivor = ~free & (F.col("_r1") <= F.col("_budget"))
+    take = free | (survivor & (F.col("_r2") <= F.col("_budget")))
+    ranked = (
+        df.withColumn("_budget", budget).drop("tokens")
+        .withColumn("_salt", salt)
+        .withColumn("_r1", F.row_number().over(
+            Window.partitionBy("host", "_salt").orderBy(*order)))
+        .withColumn("_r2", F.row_number().over(
+            Window.partitionBy(
+                "host", F.when(survivor, F.lit(-1)).otherwise(F.col("_salt"))
+            ).orderBy(*order)))
+        .withColumn("_take", take)
     )
-    staged = capped.withColumn("_salt", salt).withColumn(
-        "_r1", F.row_number().over(w1))
-    survivors = staged.filter(F.col("_r1") <= F.col("_budget"))
-    # phase-2 (exact per-host rank) funnels each host through ONE window
-    # task, so run it ONLY for hosts where it can actually bind: a
-    # parallel count decides, and the common case (survivors <= budget:
-    # the whole backlog dequeues) bypasses the sort entirely. The hot
-    # host still pays it when contended, but on a bounded input
-    # (<= salt_buckets * budget rows, phase 1's guarantee).
-    cnts = survivors.groupBy("host").agg(F.count("*").alias("_cnt"))
-    survivors = survivors.join(cnts, "host")
-    aux = ["_salt", "_r1", "_r2", "_budget", "_cnt"]
-    easy = survivors.filter(F.col("_cnt") <= F.col("_budget")).drop(
-        "_salt", "_r1", "_budget", "_cnt")
-    hard = survivors.filter(F.col("_cnt") > F.col("_budget"))
-    w2 = Window.partitionBy("host").orderBy(F.desc("priority"), F.asc("seq"))
-    ranked = hard.withColumn("_r2", F.row_number().over(w2))
-    dequeued = free.unionByName(easy).unionByName(
-        ranked.filter(F.col("_r2") <= F.col("_budget")).drop(*aux)
-    )
-    # deferred = phase-1-pruned ∪ phase-2 overflow — derived by filters over
-    # the same window subtrees (exchanges get reused), NOT by an extra
-    # frontier⋈dequeued anti-join shuffle
-    deferred = (
-        staged.filter(F.col("_r1") > F.col("_budget")).drop("_salt", "_r1", "_budget")
-        .unionByName(ranked.filter(F.col("_r2") > F.col("_budget")).drop(*aux))
-    )
+    aux = ["_budget", "_salt", "_r1", "_r2", "_take"]
+    dequeued = ranked.filter(F.col("_take")).drop(*aux)
+    deferred = ranked.filter(~F.col("_take")).drop(*aux)
     return dequeued, deferred
 
 

@@ -501,6 +501,13 @@ class CrawlEngine:
         return self._robots_rules, self._host_budget
 
     def run_round(self, rnd: int) -> dict:
+        # a committed round's frontier was already consumed: re-running it
+        # would overwrite its seen/items partitions with an empty delta
+        last = self.committed_round()
+        if rnd <= last:
+            raise ValueError(
+                f"round {rnd} is already committed (last committed round: "
+                f"{last}); run round {last + 1} or start fresh")
         # per-phase wall times land in self.last_round_phases — the
         # N→4N efficiency diagnostic (phases that do not shrink with
         # cores are the serial floor the scaling headline pays for)
@@ -548,8 +555,8 @@ class CrawlEngine:
             # every effective budget is >= UNLIMITED_TOKENS (checked once
             # per crawl when the budget table is built): drop the join so
             # the per-row budget is a LITERAL and Catalyst folds the
-            # entire capped branch — windows, count gate, deferred union
-            # — out of every consumer job's plan. An unbudgeted
+            # rank-limit out of every consumer job's plan (both windows
+            # pruned, deferred an empty relation). An unbudgeted
             # steady-state round otherwise pays the broadcast build plus
             # that dead plan's analysis in all six concurrent jobs.
             budget = None
@@ -569,7 +576,7 @@ class CrawlEngine:
 
         threading.Thread(
             target=lambda: dequeued.count(), daemon=True).start()
-        _mark("dequeue")          # incl. politeness phase-2 count gate
+        _mark("dequeue")          # plan build only; the warm-up count runs async
 
         # the fetch stage — pluggable (S1, r3 verdict #3). The default
         # CorpusFetcher equi-joins the pages corpus (build side per

@@ -138,6 +138,49 @@ def test_politeness_budget_defers(spark, corpus, tmp_path_factory):
     assert summary["rounds"] > 4  # budget forced extra rounds
 
 
+def test_run_round_refuses_committed_round(spark, corpus, tmp_path_factory):
+    """Re-running a committed round would overwrite its seen partition with
+    an empty delta (its frontier was already consumed); it must raise and
+    leave the state untouched."""
+    state = str(tmp_path_factory.mktemp("state_recommit"))
+    eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
+    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    eng.run_round(0)
+    assert eng.committed_round() == 0
+    n_seen = eng.seen().count()
+    assert n_seen > 0
+    with pytest.raises(ValueError, match="already committed"):
+        eng.run_round(0)
+    assert eng.seen().count() == n_seen
+
+
+# Jobs launched by one budgeted steady round (round 1) of this corpus:
+# 59-60 when the dequeue was a salted window, a count gate, a self-join and a
+# free/easy/hard union (each branch re-running phase 1), 35 as one linear
+# two-window pass (local[4], 4 shuffle partitions). Ceiling = 35 + 25 %.
+MAX_JOBS_PER_ROUND = 44
+
+
+def _last_job_id(sc) -> int:
+    sc.listenerBus().waitUntilEmpty()
+    it = sc.statusStore().jobsList(None).iterator()  # newest first
+    return it.next().jobId() if it.hasNext() else -1
+
+
+def test_budgeted_round_job_count(spark, corpus, tmp_path_factory):
+    """The round's writes run on pool threads, so jobs are counted from the
+    status store (every job the session launched), not by job group."""
+    state = str(tmp_path_factory.mktemp("state_jobs"))
+    eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
+    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    eng.run_round(0)
+    sc = spark.sparkContext._jsc.sc()
+    before = _last_job_id(sc)
+    eng.run_round(1)
+    jobs = _last_job_id(sc) - before
+    assert 0 < jobs <= MAX_JOBS_PER_ROUND, jobs
+
+
 def test_text_invariant(spark, corpus):
     """input_hint invariant: engine-side text extraction reproduces the
     corpus text column byte-identically per url."""

@@ -46,6 +46,34 @@ def test_politeness_salt_invariance(spark):
     assert all(p == 2 for p, _ in picks[0][:10]) or max(p for p, _ in picks[0]) == 2
 
 
+def _plan_nodes(df, name):
+    """Count the operator nodes called ``name`` in the optimized plan."""
+    import re
+
+    tree = df._jdf.queryExecution().optimizedPlan().treeString()
+    return sum(re.match(r"[\s:|+-]*(\w+)", line).group(1) == name
+               for line in tree.splitlines())
+
+
+def test_politeness_plan_shape(spark):
+    """The dequeue is one linear chain: a budgeted dequeue plans exactly the
+    two row_number windows (salted phase 1, exact phase 2) and no join; an
+    unlimited literal budget folds both windows away and leaves deferred
+    empty."""
+    rows = [("h1", 0, f"{i:04d}") for i in range(20)] + [("h2", 0, "0001")]
+    fr = _frontier_df(spark, rows)
+    dq, deferred = FR.politeness_dequeue(fr, tokens_per_host=5, salt_buckets=4)
+    assert _plan_nodes(dq, "Window") == 2
+    assert _plan_nodes(dq, "Join") == 0
+    dq, deferred = FR.politeness_dequeue(
+        fr, tokens_per_host=FR.UNLIMITED_TOKENS, salt_buckets=4)
+    for out in (dq, deferred):
+        assert _plan_nodes(out, "Window") == 0
+        assert _plan_nodes(out, "Join") == 0
+    assert dq.count() == len(rows)
+    assert deferred.isEmpty()
+
+
 def test_priority_score(spark):
     df = spark.createDataFrame(
         [("http://h/a.image",), ("http://h/fw.bin",), ("http://h/x.zip",),

@@ -94,15 +94,21 @@ def test_bloom_partition_parity_random(spark):
 def test_politeness_budget_properties_random(spark):
     """Randomized politeness invariants: dequeued ∪ deferred == frontier
     (no row lost or duplicated), per-host dequeue count <= budget, and the
-    dequeued set is the TOP-budget rows per host by (priority desc, seq)."""
+    dequeued set is the TOP-budget rows per host by (priority desc, seq).
+    The last three trials pass a ``host_budget`` frame that mixes unlimited
+    hosts (every row dequeues) with small per-host budgets; hosts it omits
+    keep ``tokens_per_host``."""
+    import collections
+
     from pyspark.sql import functions as F
 
     from firmwarescraper_spark.operators import frontier as FR
 
     rng = np.random.default_rng(7)
-    for _ in range(3):
+    for trial in range(6):
         n = int(rng.integers(100, 1200))
-        hosts = int(rng.integers(1, 9))
+        with_budget = trial >= 3
+        hosts = int(rng.integers(3 if with_budget else 1, 9))
         budget = int(rng.integers(1, 40))
         salts = int(rng.choice([1, 4, 8]))
         rows = [(f"h{int(rng.integers(0, hosts))}",
@@ -111,26 +117,41 @@ def test_politeness_budget_properties_random(spark):
         frontier = spark.createDataFrame(
             rows, "host string, canon_url string, priority int, seq string"
         ).withColumn("url_hash", F.xxhash64("canon_url"))
+        host_budget, per_host_budget = None, {}
+        if with_budget:
+            # host h: default budget, unlimited or small, in rotation
+            for h in range(hosts):
+                if (h + trial) % 3 == 1:
+                    per_host_budget[f"h{h}"] = FR.UNLIMITED_TOKENS + int(
+                        rng.integers(0, 2))
+                elif (h + trial) % 3 == 2:
+                    per_host_budget[f"h{h}"] = int(rng.integers(1, 6))
+            host_budget = spark.createDataFrame(
+                list(per_host_budget.items()), "host string, tokens int")
         deq, defer = FR.politeness_dequeue(
-            frontier, tokens_per_host=budget, salt_buckets=salts)
+            frontier, tokens_per_host=budget, salt_buckets=salts,
+            host_budget=host_budget)
         d = [(r["host"], r["seq"], r["priority"]) for r in deq.collect()]
         f = [(r["host"], r["seq"], r["priority"]) for r in defer.collect()]
         allrows = [(r[0], r[3], r[2]) for r in rows]
         assert sorted(d + f) == sorted(allrows), "partition property broken"
-        per_host = {}
-        for hhost, _, _ in d:
-            per_host[hhost] = per_host.get(hhost, 0) + 1
-        assert all(v <= budget for v in per_host.values())
-        # exact top-k per host
-        import collections
+        per_host = collections.Counter(hhost for hhost, _, _ in d)
+        assert all(v <= per_host_budget.get(hhost, budget)
+                   for hhost, v in per_host.items())
         by_host = collections.defaultdict(list)
         for hhost, seq, pri in allrows:
             by_host[hhost].append((-pri, seq))
         expect = []
         for hhost, lst in by_host.items():
-            for negp, seq in sorted(lst)[:budget]:
+            cap = per_host_budget.get(hhost, budget)
+            # unlimited hosts: the slice keeps every row
+            for negp, seq in sorted(lst)[:cap]:
                 expect.append((hhost, seq, -negp))
-        assert sorted(d) == sorted(expect), (n, hosts, budget, salts)
+        assert sorted(d) == sorted(expect), (n, hosts, budget, salts,
+                                             per_host_budget)
+        unlimited = {h for h, t in per_host_budget.items()
+                     if t >= FR.UNLIMITED_TOKENS}
+        assert not [r for r in f if r[0] in unlimited]
 
 
 # --- URL canonicalization fast path (round 5) --------------------------------
