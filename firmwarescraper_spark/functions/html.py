@@ -548,19 +548,6 @@ def extract_div_html(html, div_class: str | None = None, div_id: str | None = No
     return [doc.raw[b.inner_start:b.end] for b in matched]
 
 
-def extract_head_script_texts(html) -> list:
-    """Text of each ``<head><script>`` — ASUS redirect harvest
-    (/root/reference/firmware/spiders/asus.py:44-51)."""
-    return parse_html(html).head_scripts
-
-
-def extract_table_rows(html) -> list:
-    """All table rows as lists of cell texts — HP / Linksys-GPL table walks
-    (/root/reference/firmware/spiders/hp.py:20-30, linksys_gpl.py:54-70)."""
-    doc = parse_html(html)
-    return [row for table in doc.tables for row in table]
-
-
 def extract_text(html) -> str:
     """Pinned HTML->text rule (input_hint: byte-identical per url):
     stripped non-empty text nodes (anchors' text, <pre> chunks, cell and
@@ -607,21 +594,6 @@ def extract_text_udf():
 
     return _extract_text
 
-
-# ---------------------------------------------------------------------------
-# Arrow-batched pandas UDF factories
-# ---------------------------------------------------------------------------
-
-_ANCHOR_SCHEMA = ArrayType(
-    StructType(
-        [
-            StructField("href", StringType()),
-            StructField("text", StringType()),
-            StructField("title", StringType()),
-            StructField("onclick", StringType()),
-        ]
-    )
-)
 
 # ---------------------------------------------------------------------------
 # parse-once page struct: ONE parse per page yields every extraction product;
@@ -813,20 +785,6 @@ def extract_hrefs_udf():
 
 
 @lru_cache(maxsize=None)
-def extract_anchors_udf(div_class: str | None = None, div_id: str | None = None):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(_ANCHOR_SCHEMA)
-    def _extract_anchors(html: pd.Series) -> pd.Series:
-        return html.map(
-            lambda h: extract_anchors(h, div_class=div_class, div_id=div_id),
-            na_action="ignore",
-        )
-
-    return _extract_anchors
-
-
-@lru_cache(maxsize=None)
 def extract_pre_texts_udf():
     from pyspark.sql.functions import pandas_udf
 
@@ -835,41 +793,3 @@ def extract_pre_texts_udf():
         return html.map(extract_pre_texts, na_action="ignore")
 
     return _extract_pre_texts
-
-
-@lru_cache(maxsize=None)
-def extract_div_html_udf(div_class: str | None = None, div_id: str | None = None,
-                         parent_id: str | None = None):
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(ArrayType(StringType()))
-    def _extract_div_html(html: pd.Series) -> pd.Series:
-        return html.map(
-            lambda h: extract_div_html(h, div_class=div_class, div_id=div_id,
-                                       parent_id=parent_id),
-            na_action="ignore",
-        )
-
-    return _extract_div_html
-
-
-@lru_cache(maxsize=None)
-def extract_head_scripts_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(ArrayType(StringType()))
-    def _extract_head_scripts(html: pd.Series) -> pd.Series:
-        return html.map(extract_head_script_texts, na_action="ignore")
-
-    return _extract_head_scripts
-
-
-@lru_cache(maxsize=None)
-def extract_table_rows_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(ArrayType(ArrayType(StringType())))
-    def _extract_table_rows(html: pd.Series) -> pd.Series:
-        return html.map(extract_table_rows, na_action="ignore")
-
-    return _extract_table_rows

@@ -198,33 +198,6 @@ def date_dmy_from_dmb(col: Column) -> Column:
     return F.when(ok, converted).otherwise(col)
 
 
-def date_iso_from_ymd_slash(col: Column) -> Column:
-    """asus.py:94-97: '%Y/%m/%d' -> ISO."""
-    return F.date_format(F.try_to_date(col, "yyyy/M/d"), "yyyy-MM-dd")
-
-
-def date_dmy_from_iso(col: Column) -> Column:
-    """tplink.py:92: '%Y-%m-%d' -> '%d-%m-%Y'."""
-    return F.date_format(F.try_to_date(col, "yyyy-M-d"), "dd-MM-yyyy")
-
-
-def date_dmy_from_ymd_slash(col: Column) -> Column:
-    """dlink_gpl.py:195: '%Y/%m/%d' -> '%d-%m-%Y'."""
-    return F.date_format(F.try_to_date(col, "yyyy/M/d"), "dd-MM-yyyy")
-
-
-def date_iso_from_hp(col: Column) -> Column:
-    """hp.py:52-56: 4-char year '%Y' or 8-char '%Y%m%d' -> ISO, length-dispatched."""
-    return F.when(
-        F.length(col) == 4, F.date_format(F.try_to_date(col, "yyyy"), "yyyy-MM-dd")
-    ).otherwise(F.date_format(F.try_to_date(col, "yyyyMMdd"), "yyyy-MM-dd"))
-
-
-def epoch_from_ftp_ts(col: Column) -> Column:
-    """ftp/dlink.py:132-138: '%Y%m%d%H%M%S' -> unix epoch (double)."""
-    return F.unix_timestamp(F.try_to_timestamp(col, F.lit("yyyyMMddHHmmss"))).cast("double")
-
-
 # ---------------------------------------------------------------------------
 # X13 — AVM-GPL whitespace-collapsed (date, size) metadata split
 # (avm_gpl.py:90-108)

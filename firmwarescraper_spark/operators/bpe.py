@@ -175,15 +175,6 @@ def bpe_learn(
     return learned
 
 
-def bpe_learn_df(spark, df: DataFrame, merges: int, **kw) -> DataFrame:
-    """DataFrame wrapper over :func:`bpe_learn` for the driver contract:
-    (rank, left, right, merged, cnt), one row per learned merge."""
-    rows = bpe_learn(df, merges, **kw)
-    return spark.createDataFrame(
-        rows, "rank int, left string, right string, merged string, cnt bigint"
-    ).coalesce(1)
-
-
 def bpe_reference(word_freq: dict, merges: int) -> list:
     """Pure-Python reference BPE (test parity target; small inputs
     only). Same tie-break, same end-marker convention."""

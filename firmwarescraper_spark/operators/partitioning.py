@@ -9,11 +9,14 @@ over a 0.6 MB file). ``spread_input`` raises the scan parallelism ONLY
 in that regime:
 
 * the condition is the table's file count (a metadata-only lookup, no
-  job): fewer files than ``spark.default.parallelism`` means file splits
-  cannot feed every core, and only then is a repartition inserted. A
-  100 TB deployment table has thousands of files/row groups — the branch
-  provably never fires there, so the operators keep their "text never
-  shuffles at scale" property;
+  job): between one file and ``spark.default.parallelism`` files, file
+  splits cannot feed every core, and only then is a repartition inserted.
+  A 100 TB deployment table has thousands of files/row groups — the
+  branch provably never fires there, so the operators keep their "text
+  never shuffles at scale" property;
+* a relation that reports no input files — cached, checkpointed or
+  built in memory — is never spread: its partition count is not a
+  file-split artifact, and at scale it can be a full text table;
 * the inserted exchange hash-partitions on the row-id column —
   deterministic row placement (plain round-robin would make row
   distribution order-dependent), uniform because ids are unique.
@@ -32,10 +35,10 @@ from pyspark.sql import functions as F
 def spread_input(df: DataFrame, key, min_partitions: int | None = None,
                  ) -> DataFrame:
     """Repartition ``df`` by ``key`` to the session's default parallelism
-    IFF its file-scan parallelism is provably below it (see module doc).
-    ``key`` is a column name or Column used for deterministic placement.
-    A non-file-backed ``df`` (in-memory test relations) reports zero
-    input files and is spread too — harmless at test sizes."""
+    IFF it scans files and its file-scan parallelism is provably below
+    that (see module doc). ``key`` is a column name or Column used for
+    deterministic placement. A ``df`` with no input files is returned
+    unchanged."""
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     if target <= 1:
@@ -44,7 +47,7 @@ def spread_input(df: DataFrame, key, min_partitions: int | None = None,
         nfiles = len(df.inputFiles())
     except Exception:
         return df
-    if nfiles >= target:
+    if not 0 < nfiles < target:
         return df
     key_col = F.col(key) if isinstance(key, str) else key
     return df.repartition(target, key_col)

@@ -32,6 +32,8 @@ from __future__ import annotations
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,8 +64,11 @@ FRONTIER_SCHEMA = StructType([
     StructField("retry_count", IntegerType()),
 ])
 
-ITEM_COLS = ["vendor", "device_name", "firmware_version", "device_class",
-             "release_date", "file_urls"]
+
+def _union(dfs) -> DataFrame | None:
+    """unionByName of the non-None frames, or None if there are none."""
+    dfs = [df for df in dfs if df is not None]
+    return reduce(DataFrame.unionByName, dfs) if dfs else None
 
 
 class CrawlEngine:
@@ -76,7 +81,6 @@ class CrawlEngine:
         salt_buckets: int = 8,
         obey_robots: bool = True,
         round_seconds: float = 60.0,
-        broadcast_fetch: bool | str = "auto",
         max_fetch_bytes: int = 2_147_483_648,  # F12: 2 GiB download_maxsize
         max_retries: int = 2,  # T3: scrapy RETRY_TIMES default
         use_bloom_prefilter: bool = False,
@@ -93,7 +97,6 @@ class CrawlEngine:
         self.salt_buckets = salt_buckets
         self.obey_robots = obey_robots
         self.round_seconds = round_seconds
-        self.broadcast_fetch = broadcast_fetch
         self.max_fetch_bytes = max_fetch_bytes
         self.max_retries = max_retries
         self.use_bloom_prefilter = use_bloom_prefilter
@@ -116,6 +119,7 @@ class CrawlEngine:
         self._host_budget = None
         self._budget_all_unlimited = False
         self._has_fail_col = None
+        self._round_cache = []
 
     # -- state paths ---------------------------------------------------------
     def _p(self, *parts) -> str:
@@ -341,29 +345,25 @@ class CrawlEngine:
             ),
         )
 
-    def latest_round(self) -> int:
-        base = self._p("frontier")
+    def _max_round(self, table: str) -> int:
+        """Highest ``round=N`` entry under ``table``, or -1."""
+        base = self._p(table)
         if not os.path.exists(base):
             return -1
-        rounds = [
-            int(d.split("=")[1]) for d in os.listdir(base) if d.startswith("round=")
-        ]
-        return max(rounds) if rounds else -1
+        return max((int(d.split("=")[1]) for d in os.listdir(base)
+                    if d.startswith("round=")), default=-1)
+
+    def latest_round(self) -> int:
+        return self._max_round("frontier")
 
     # -- round commit protocol ---------------------------------------------------
-    # The four per-round state writes run concurrently (throughput), so none
+    # The five per-round state writes run concurrently (throughput), so none
     # of them can be the commit point. A round is committed only when its
     # marker exists; resume re-runs the first uncommitted round, and every
     # state reader rolls back partitions newer than the last marker
     # (see _rollback). On Iceberg this marker is the snapshot commit itself.
     def committed_round(self) -> int:
-        base = self._p("_commits")
-        if not os.path.exists(base):
-            return -1
-        rounds = [
-            int(d.split("=")[1]) for d in os.listdir(base) if d.startswith("round=")
-        ]
-        return max(rounds) if rounds else -1
+        return self._max_round("_commits")
 
     def _commit_round(self, rnd: int):
         base = self._p("_commits")
@@ -406,11 +406,9 @@ class CrawlEngine:
         join runs unhinted: AQE picks broadcast at runtime if the *actual*
         dequeued set turns out small (budget-capped round over a huge
         frontier), else SMJ — shuffle-free when the corpus is a bucketed
-        table (``pages_table`` / Iceberg SPJ, PLANS.md §2b).
-        ``broadcast_fetch=True/False`` still forces either path."""
-        if self.broadcast_fetch == "auto":
-            return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
-        return bool(self.broadcast_fetch)
+        table (``pages_table`` / Iceberg SPJ, PLANS.md §2b). A cap of 0
+        never broadcasts; a cap above any snapshot always does."""
+        return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
 
     def _fetch_join(self, dequeued: DataFrame, use_bcast: bool) -> DataFrame:
         """The fetch stage's corpus equi-join; build side per the gate."""
@@ -501,480 +499,280 @@ class CrawlEngine:
         return self._robots_rules, self._host_budget
 
     def run_round(self, rnd: int) -> dict:
-        # a committed round's frontier was already consumed: re-running it
-        # would overwrite its seen/items partitions with an empty delta
+        """One crawl round: a driver over the stage methods below. Phase
+        walls land in ``last_round_phases``; every frame the round persists
+        is unpersisted on exit, committed or not."""
         last = self.committed_round()
         if rnd <= last:
+            # its frontier was consumed: a re-run would overwrite its
+            # seen/items partitions with an empty delta
             raise ValueError(
                 f"round {rnd} is already committed (last committed round: "
                 f"{last}); run round {last + 1} or start fresh")
-        # per-phase wall times land in self.last_round_phases — the
-        # N→4N efficiency diagnostic (phases that do not shrink with
-        # cores are the serial floor the scaling headline pays for)
-        _ph, _t = {}, time.monotonic()
+        phases, t = {}, time.monotonic()
 
-        def _mark(name):
-            nonlocal _t
+        def mark(name):
+            nonlocal t
             now = time.monotonic()
-            _ph[name] = round(now - _t, 3)
-            _t = now
+            phases[name] = round(now - t, 3)
+            t = now
 
-        frontier = self._read_frontier(rnd)
-        seen = self.seen()
+        self._round_cache = []
+        pool = ThreadPoolExecutor(max_workers=5)
+        committed = False
+        try:
+            frontier, seen = self._read_frontier(rnd), self.seen()
+            candidates, blocked, budget = self._candidates(frontier, seen)
+            dequeued, deferred = self._dequeue(candidates, budget)
+            # the pool's first tasks compute the round's caches while the
+            # driver builds the remaining plans: the dequeue chain as soon
+            # as its plan exists, then the whole working set, which every
+            # write waits on so no two writes race to compute a cache block
+            warm = [pool.submit(dequeued.count)]
+            mark("dequeue")
+            use_bcast = self._fetch_broadcast_choice(rnd)
+            ok, terminal, retryable = self._fetch_parse(dequeued, use_bcast)
+            # new seen rows: every fetch resolved this round, robots-blocked
+            # rows included; retryable misses must pass the next anti-join.
+            # Cached, it is one leaf for the seen write and the children
+            # dedup instead of a copy of the whole round plan in each.
+            seen_add = self._persist(_union([
+                df.select("url_hash", "fetch_key")
+                for df in (ok, terminal, blocked) if df is not None]))
+            warm.append(pool.submit(seen_add.count))
+            mark("materialize")
+            children, items, quarantine = self._extract(frontier, ok)
+            next_frontier = self._next_frontier(
+                rnd, deferred, retryable, children,
+                # a projection keeps the union from flattening seen_add
+                # away, so its cache still matches
+                seen_add.select("url_hash", "fetch_key").unionByName(
+                    seen.select("url_hash", "fetch_key")))
+            metrics = self._metrics(ok, terminal, retryable, blocked)
+            mark("plan_build")
+            for fut in warm:
+                fut.result()
+            mark("mat_wait")
+            self._write_round(pool, [
+                (self._append, seen_add, "seen", rnd),
+                (self._append, metrics, "fetch_log", rnd),
+                (self._write_frontier, next_frontier, rnd + 1),
+                (self._append, items, "items", rnd),
+                (self._append, quarantine, "quarantine", rnd),
+            ])
+            mark("writes")
+            self._commit_round(rnd)
+            committed = True
+            mark("commit")
+            self.last_round_phases = phases
+        finally:
+            # after a failure, outstanding writes are rolled back by the
+            # commit protocol: stop feeding the pool, don't wait on it
+            pool.shutdown(wait=False, cancel_futures=not committed)
+            for df in reversed(self._round_cache):
+                df.unpersist()
+            self._round_cache = []
+        return {"round": rnd, "fetch_broadcast": use_bcast}
 
+    # -- round stages --------------------------------------------------------
+    def _persist(self, df: DataFrame) -> DataFrame:
+        """Cache ``df`` for the current round only (see run_round)."""
+        self._round_cache.append(df.persist())
+        return df
+
+    def _candidates(self, frontier: DataFrame, seen: DataFrame) -> tuple:
+        """Frontier rows not yet seen, split by robots. Returns (allowed,
+        blocked, host budget); blocked is None without robots, the budget
+        None when no per-host budget can bind."""
         if self._state_is_empty("seen"):
-            # nothing crawled yet (cold start / round 0): the seen
-            # anti-join is the identity, so skip its broadcast build +
-            # join outright — at a drained-state steady round that is a
-            # measurable slice of the per-round serial floor
-            candidates = frontier
+            candidates = frontier  # cold start: the anti-join is the identity
         else:
             candidates = FR.anti_join_seen(frontier, seen,
                                            bloom=self.use_bloom_prefilter)
-
-        blocked = None
-        robots_joined = None
-        if self.obey_robots:
-            rules, budget = self._robots(frontier)
-            # persist_split: allowed AND blocked filter one cached
-            # verdict-joined frame — blocked feeds the metrics and seen
-            # writes, which otherwise each re-ran the rules join +
-            # verdict aggregation (~2 extra frontier passes per round of
-            # pure serial floor). The cached parent also covers every
-            # dequeue branch, so no separate candidates cache is needed.
-            candidates, blocked, robots_joined = RB.robots_filter(
-                candidates, rules, persist_split=True)
-        else:
-            budget = None
-            # candidates feeds both dequeue branches (dequeued +
-            # deferred) across several actions this round — cache it so
-            # the anti-join subtree runs once
-            candidates = candidates.persist()
-        if (budget is not None and self._budget_all_unlimited
+        if not self.obey_robots:
+            # both dequeue outputs read it across several actions
+            return self._persist(candidates), None, None
+        rules, budget = self._robots(frontier)
+        # allowed and blocked filter one cached verdict-joined frame
+        candidates, blocked, joined = RB.robots_filter(
+            candidates, rules, persist_split=True)
+        self._round_cache.append(joined)
+        if (self._budget_all_unlimited
                 and self.tokens_per_host >= FR.UNLIMITED_TOKENS):
-            # every effective budget is >= UNLIMITED_TOKENS (checked once
-            # per crawl when the budget table is built): drop the join so
-            # the per-row budget is a LITERAL and Catalyst folds the
-            # rank-limit out of every consumer job's plan (both windows
-            # pruned, deferred an empty relation). An unbudgeted
-            # steady-state round otherwise pays the broadcast build plus
-            # that dead plan's analysis in all six concurrent jobs.
+            # a literal budget lets Catalyst fold both politeness windows
+            # out of every consumer's plan
             budget = None
+        return candidates, blocked, budget
+
+    def _dequeue(self, candidates: DataFrame, budget) -> tuple:
+        """Politeness dequeue: (dequeued, deferred) under the per-host
+        token budget."""
         dequeued, deferred = FR.politeness_dequeue(
-            candidates, self.tokens_per_host, self.salt_buckets, budget
+            candidates, self.tokens_per_host, self.salt_buckets, budget)
+        # read by the fetch, the miss anti-join and the seen/metrics writes
+        return self._persist(dequeued), deferred
+
+    def _fetch_parse(self, dequeued: DataFrame, use_bcast: bool) -> tuple:
+        """Fetch the dequeued rows and parse every 2xx page once. Returns
+        (ok, terminal, retryable): parsed pages, failures final this round
+        (404s and exhausted retries) and failures re-queued with their
+        retry_count bumped (None when only misses can fail)."""
+        from firmwarescraper_spark.functions.html import (
+            PAGE_STRUCT, parse_page_udf,
         )
-        # dequeued feeds three consumers (fetch join, seen append, metrics)
-        dequeued = dequeued.persist()
-        # fire-and-forget cache warmup: materialize the frontier-read →
-        # robots → politeness chain (and its broadcasts) NOW, while the
-        # driver spends the next ~2 s building the fetch/metrics/rule
-        # plans — otherwise that compute sits on the first write job's
-        # critical path as pure serial floor. Safe under concurrency:
-        # per-block cache locks make whichever job arrives first compute
-        # a partition and everyone else read it.
-        import threading
-
-        threading.Thread(
-            target=lambda: dequeued.count(), daemon=True).start()
-        _mark("dequeue")          # plan build only; the warm-up count runs async
-
-        # the fetch stage — pluggable (S1, r3 verdict #3). The default
-        # CorpusFetcher equi-joins the pages corpus (build side per
-        # _fetch_broadcast_choice: budget-bounded dequeued sets broadcast,
-        # so the huge pages table is never shuffled — one streamed,
-        # column-pruned scan per round; unbounded ones run unhinted so AQE
-        # / a bucketed-corpus SMJ / Iceberg SPJ takes over). HttpFetcher
-        # swaps in a mapInPandas real-HTTP stage with the same contract:
-        # dequeued columns + (html, status).
-        use_bcast = self._fetch_broadcast_choice(rnd)
-        from firmwarescraper_spark.functions.html import parse_page_udf
         from firmwarescraper_spark.plans.fetchers import RETRY_STATUS
 
         self.pages()  # resolves _has_fail_col for CorpusFetcher
         fetched = self.fetcher.fetch(dequeued, use_bcast)
-        # a fetcher with side effects (HttpFetcher: real network requests)
-        # must not be recomputed by the ok/failed consumer subtrees
-        fetched_cached = bool(getattr(self.fetcher, "materialize", False))
-        if fetched_cached:
-            fetched = fetched.persist()
-        if self.max_fetch_bytes < 2_147_483_648:
-            # F12 max-size guard (download_maxsize = 2 GiB, avm_gpl.py:27):
-            # an oversized 2xx payload is reclassified as a retryable
-            # failure (scrapy drops it; the engine retries, then terminally
-            # logs). Applied only under a non-default cap: F.length is an
-            # int, so the default 2 GiB can never bind, and skipping it
-            # keeps the corpus fetcher's status a per-branch literal — the
-            # failed/ok filters then fold each union branch away at plan
-            # time instead of re-scanning the fetch join.
-            is_2xx = (F.col("status") >= 200) & (F.col("status") < 300)
-            fetched = fetched.withColumn(
-                "status",
-                F.when(
-                    is_2xx & (F.length("html") > F.lit(self.max_fetch_bytes)),
-                    F.lit(503),
-                ).otherwise(F.col("status")),
-            )
+        resolves_all = getattr(self.fetcher, "resolves_all", True)
+        if resolves_all:
+            # a fetcher that returns every row (HttpFetcher: real network
+            # requests) must not be re-run by the ok/failed consumers
+            fetched = self._persist(fetched)
+        is_2xx = (F.col("status") >= 200) & (F.col("status") < 300)
+        capped = self.max_fetch_bytes < 2_147_483_648
+        if capped:
+            # F12 download_maxsize (avm_gpl.py:27): an oversized 2xx body
+            # is a retryable failure. Only under a non-default cap, so the
+            # corpus fetcher's literal status still folds failures away.
+            fetched = fetched.withColumn("status", F.when(
+                is_2xx & (F.length("html") > F.lit(self.max_fetch_bytes)),
+                F.lit(503)).otherwise(F.col("status")))
         ok = (
-            fetched
-            .filter((F.col("status") >= 200) & (F.col("status") < 300))
-            .drop("status")
+            fetched.filter(is_2xx).drop("status")
             .withColumn("page_bytes", F.length("html"))
-            # parse-once: each fetched page's HTML crosses the Arrow
-            # boundary a single time per round; the cached working set
-            # holds the extracted PAGE_STRUCT, not the raw bytes, and every
-            # downstream action is pure JVM column algebra over it.
-            .withColumn(
-                "parsed",
-                parse_page_udf(
-                    tuple(sorted(RP.RULE_PARSE_FIELDS.items()))
-                )(F.col("html"), F.col("rule")))
-            # raw bodies are nulled except for FTP rules, whose "pages" are
-            # JSON listings consumed via from_json downstream
-            # (rulepacks_vendors._ftp_entries_col). At scale this keeps
-            # full page bodies out of executor cache memory.
-            .withColumn(
-                "html",
-                F.when(F.col("rule").contains("ftp"), F.col("html")),
-            )
+            .withColumn("parsed", parse_page_udf(
+                tuple(sorted(RP.RULE_PARSE_FIELDS.items())))(
+                    F.col("html"), F.col("rule")))
+            # raw bodies are kept only for FTP rules, whose pages are JSON
+            # listings read downstream; the rest stay out of the cache
+            .withColumn("html",
+                        F.when(F.col("rule").contains("ftp"), F.col("html")))
         )
-        # Cache the parse products as one column PER PAGE_STRUCT FIELD,
-        # not one wide struct column: the in-memory columnar cache prunes
-        # by column, so each of the round's several working-set passes
-        # (per-rule children/items branches, metrics, seen projection)
-        # decodes only the fields it reads instead of the whole struct
-        # every time. The single-struct `parsed` the rule packs consume is
-        # rebuilt below as a zero-cost view — Catalyst folds
-        # parsed.<field> straight back to the cached column
-        # (SimplifyExtractValueOps), so no rule changes and no extra
-        # evaluation (the UDF still runs once in its own ArrowEvalPython
-        # node feeding the split projection).
-        from firmwarescraper_spark.functions.html import PAGE_STRUCT
+        # cache one column per PAGE_STRUCT field (the columnar cache prunes
+        # by column); the struct the rule packs read is a view Catalyst
+        # folds back onto the cached columns
+        names = [f.name for f in PAGE_STRUCT.fields]
+        ok = self._persist(ok.select("*", *[
+            F.col("parsed").getField(n).alias("_pf_" + n) for n in names
+        ]).drop("parsed")).withColumn(
+            "parsed", F.struct(*[F.col("_pf_" + n).alias(n) for n in names]))
 
-        _pf = [f.name for f in PAGE_STRUCT.fields]
-        _ok_cached = ok.select(
-            "*", *[F.col("parsed").getField(n).alias("_pf_" + n) for n in _pf]
-        ).drop("parsed").persist()
-        ok = _ok_cached.withColumn(
-            "parsed",
-            F.struct(*[F.col("_pf_" + n).alias(n) for n in _pf]))
-        # Rules scheduled this round: a column-pruned scan of the frontier
-        # snapshot (~0.3 s) instead of collect_set over the fetched+parsed
-        # working set. The frontier rule set is a SUPERSET of the fetched
-        # one (a rule whose rows all defer or 404 contributes empty
-        # relations to the unions below — same output, a little extra
-        # Catalyst analysis in degraded rounds only; <=23 strings either
-        # way). What this buys at steady state: the round no longer runs a
-        # dedicated materialize action before plan construction — the
-        # fetch+parse+cache work is triggered by the seen write
-        # below and runs on the executors WHILE the driver builds the rule
-        # and frontier plans, so the ~3 s of per-round driver-only
-        # expression construction (a direct serial-floor hit on the N→4N
-        # scaling headline) overlaps the round's heaviest parallel phase
-        # instead of following it. (Concurrent jobs hitting the same
-        # uncached partitions are safe: BlockManager.getOrElseUpdate
-        # write-locks per block, so each partition — and each side-
-        # effecting HttpFetcher fetch — is computed exactly once.)
-        # The scan itself runs AFTER the early write submits below, so
-        # even its ~0.3 s overlaps executor work.
-        _mark("materialize")      # plan-only now; kept for continuity
-        # T3 retry split: scrapy retries RETRY_HTTP_CODES (5xx/408/429 —
-        # simulated 5xx, oversize, network error) RETRY_TIMES=2 times; a
-        # 404 is terminal (not in RETRY_HTTP_CODES).
-        fetcher_resolves_all = getattr(self.fetcher, "resolves_all", True)
-        # Steady-state short-circuit: with the corpus fetcher, no fault
-        # column, and the default size cap, every RETURNED row is 2xx by
-        # construction — the only failures are 404s (dequeued minus the
-        # cached ok keys). Skipping the retryable/union subtrees entirely
-        # matters: keeping them (even though they fold to empty relations)
-        # adds driver-side Catalyst analysis to every one of the round's
-        # concurrent write jobs — measured ~15 s of per-round serial floor
-        # at the bench corpus, a direct hit on the N→4N efficiency.
-        can_fail = (fetcher_resolves_all or self._has_fail_col
-                    or self.max_fetch_bytes < 2_147_483_648)
-        if not can_fail:
-            retryable = None
-            ok_keys = ok.select("url_hash")
-            terminal = dequeued.join(
-                F.broadcast(ok_keys) if use_bcast else ok_keys,
-                "url_hash", "left_anti",
-            )
-        else:
-            failed = fetched.filter(
-                ~((F.col("status") >= 200) & (F.col("status") < 300))
-            ).drop("html")
-            if not fetcher_resolves_all:
-                # missing rows derive from the round's CACHED resolved keys
-                # — the corpus is scanned exactly once, in the ok subtree
-                resolved_keys = ok.select("url_hash").unionByName(
-                    failed.select("url_hash"))
-                missing = dequeued.join(
-                    F.broadcast(resolved_keys) if use_bcast else resolved_keys,
-                    "url_hash", "left_anti",
-                ).withColumn("status", F.lit(404))
-                failed = failed.unionByName(missing)
-            if not fetched_cached:
-                # failed feeds three consumers (metrics, seen, frontier)
-                failed = failed.persist()
-            retryable = (
-                failed.filter(
-                    F.col("status").isin(*RETRY_STATUS)
-                    & (F.col("retry_count") < F.lit(self.max_retries))
-                )
-                .drop("status")
-                .withColumn("retry_count", F.col("retry_count") + 1)
-                .persist()
-            )
-            retry_keys = retryable.select("url_hash")
-            terminal = failed.drop("status").join(
-                F.broadcast(retry_keys) if use_bcast else retry_keys,
-                "url_hash", "left_anti",
-            )
-        # terminal feeds three concurrent write jobs (metrics, seen,
-        # frontier-dedup): uncached, each would rebuild the ok_keys /
-        # retry_keys broadcast from scratch (collect + hash-relation
-        # build — driver-serial, ~1 s apiece at the bench corpus, for a
-        # set that is EMPTY at steady state). Cache it so the broadcast
-        # is built exactly once.
-        terminal = terminal.persist()
+        def minus(df, keys):
+            keys = keys.select("url_hash")
+            return df.join(F.broadcast(keys) if use_bcast else keys,
+                           "url_hash", "left_anti")
 
-        # per-partition lineage + fetch metrics (T4 / north_rule)
-        def _grp(df, fetched_expr, bytes_expr, errors_expr, retries_expr):
-            return df.groupBy(
-                F.spark_partition_id().alias("partition_id"), "host"
-            ).agg(
-                fetched_expr.alias("fetched"),
-                bytes_expr.alias("bytes"),
-                errors_expr.alias("errors"),
-                retries_expr.alias("retries"),
-            )
+        if not (resolves_all or self._has_fail_col or capped):
+            # every returned row is 2xx: the only failures are the misses
+            # (404, terminal), read off the cached ok keys
+            return ok, self._persist(minus(dequeued, ok)), None
+        # T3 retry split: scrapy retries RETRY_HTTP_CODES (5xx/408/429,
+        # oversize, network error) RETRY_TIMES times; a 404 is terminal
+        failed = fetched.filter(~is_2xx).drop("html")
+        if not resolves_all:
+            missing = minus(dequeued, ok.select("url_hash").unionByName(
+                failed.select("url_hash"))).withColumn("status", F.lit(404))
+            failed = self._persist(failed.unionByName(missing))
+        retryable = self._persist(
+            failed.filter(F.col("status").isin(*RETRY_STATUS)
+                          & (F.col("retry_count") < F.lit(self.max_retries)))
+            .drop("status")
+            .withColumn("retry_count", F.col("retry_count") + 1))
+        terminal = minus(failed.drop("status"), retryable)
+        return ok, self._persist(terminal), retryable
 
-        zero = F.lit(0).cast("long")
-        metrics = _grp(ok, F.count("*"), F.sum("page_bytes"), zero, zero)
-        # terminal failures are logged (as errors) exactly once
-        metrics = metrics.unionByName(
-            _grp(terminal, zero, zero, F.count("*"), zero)
-        )
+    def _extract(self, frontier: DataFrame, ok: DataFrame) -> tuple:
+        """Apply the rule packs scheduled this round. Returns (children,
+        items, quarantine), each None when no rule produced it; children
+        carry their rule's offsite pattern in ``_pat``. A rule's optional
+        third output is its quarantine rows (J3 class-map misses, kept
+        auditable where the reference raises)."""
+        # the frontier's rule set is a superset of the fetched one; a rule
+        # with nothing fetched only adds empty branches
+        present = set(frontier.agg(F.collect_set("rule")).first()[0])
+        children, items, quarantine = [], [], []
+        for rule, fn in RP.RULES.items():
+            if rule not in present:
+                continue
+            res = fn(ok.filter(F.col("rule") == rule))
+            if res[0] is not None:
+                children.append(res[0].withColumn(
+                    "_pat", F.lit(RP.allowed_host_pattern(rule))))
+            items.append(res[1])
+            quarantine.append(res[2] if len(res) > 2 else None)
+        return _union(children), _union(items), _union(quarantine)
+
+    def _next_frontier(self, rnd: int, deferred: DataFrame, retryable,
+                       children, known: DataFrame) -> DataFrame:
+        """frontier(r+1) = deferred ∪ retried ∪ new children. The raw
+        children are normalised in one projection after the union, filtered
+        offsite and deduplicated against ``known`` keys and the rows already
+        scheduled."""
+        cols = [f.name for f in FRONTIER_SCHEMA.fields]
+        carried = deferred.select(cols)
         if retryable is not None:
-            metrics = metrics.unionByName(
-                _grp(retryable, zero, zero, zero, F.count("*"))
-            )
-        if blocked is not None:
-            metrics = metrics.unionByName(
-                _grp(blocked, zero, zero, F.count("*"), zero)
-            )
-
-        # new seen rows: every fetch resolved this round — successes,
-        # terminal failures, and robots-blocked rows (scrapy drops those
-        # permanently too). Retryable misses are NOT seen yet: they must
-        # pass the next round's anti-join to be re-attempted.
-        seen_add = ok.select("url_hash", "fetch_key").unionByName(
-            terminal.select("url_hash", "fetch_key")
+            carried = carried.unionByName(retryable.select(cols))
+        if children is None:
+            return carried
+        # F8 offsite filter: each row checks its producing rule's pattern
+        offsite = F.coalesce(*[
+            F.when(F.col("_pat") == p, F.col("host").rlike(p))
+            for p in sorted(set(RP.ALLOWED_HOST_PATTERNS.values()))
+        ], F.lit(False))
+        fresh = (
+            # the pandas UDFs pay a Python round trip per partition: cap
+            # the partition count before they run
+            children.repartition(self.spark.sparkContext.defaultParallelism)
+            .withColumn("canon_url", U.canonicalize_url_udf()(F.col("url")))
+            .withColumn("fetch_key", U.fetch_key_col(F.col("canon_url"),
+                                                     F.col("form_data")))
+            .withColumn("url_hash", F.xxhash64("fetch_key"))
+            .withColumn("host", U.url_host_udf()(F.col("url")))
+            .filter(offsite)
+            .withColumn("priority", FR.priority_score(F.col("url")))
+            # seq is a lexicographically ordered DFS path key; %09d must
+            # match simulator._pad exactly
+            .withColumn("seq", F.concat_ws(
+                ".", F.col("parent_seq"),
+                F.format_string("%09d", F.col("pos"))))
+            .withColumn("round_added", F.lit(rnd + 1))
+            .withColumn("retry_count", F.lit(0))
+            .select(cols)
         )
-        if blocked is not None:
-            seen_add = seen_add.unionByName(blocked.select("url_hash", "fetch_key"))
+        # one anti-join covers the seen set and the rows already scheduled
+        # (ADVICE r1): the earlier-scheduled row wins, as with scrapy's
+        # enqueue-time RFPDupeFilter
+        fresh = FR.dedup_new_children(fresh, known.unionByName(
+            carried.select("url_hash", "fetch_key")))
+        return carried.unionByName(fresh)
 
-        # ONE materializer job — seen_add.localCheckpoint() — is
-        # submitted FIRST and ALONE: seen_add consumes ok ∪ terminal ∪
-        # blocked, the full working set, so the one job triggers the
-        # round's heavy fetch+parse+cache work on the executors while
-        # the driver builds the rule and frontier plans below (the ~3 s
-        # of core-count-insensitive expression construction overlaps the
-        # round's heaviest parallel phase instead of running as pure
-        # serial floor against the N→4N headline). EVERY state write
-        # waits for it: concurrent jobs racing on the same uncached
-        # partitions are CORRECT (BlockManager.getOrElseUpdate
-        # write-locks per block) but their blocked tasks occupy task
-        # slots while the partition computes — measured +24-60% total
-        # executor run time at local[4] vs local[1] for identical work,
-        # a direct multi-core-only tax on the scaling headline. The
-        # checkpoint (not persist) of the narrow (url_hash, fetch_key)
-        # result exists because the children-dedup anti-join consumes
-        # seen_add AGAIN under a unionByName, and Dataset.unionByName
-        # flattens nested Unions at construction (CombineUnions), so a
-        # cached seen_add subtree can never match there — the
-        # checkpointed rows are a leaf relation both consumers share.
-        # The commit marker still waits for EVERY write, and the whole
-        # window is try/finally-guarded (ADVICE r5): an exception
-        # between here and commit shuts the pool down and unpersists the
-        # working set instead of leaking executor cache + unsupervised
-        # write jobs.
-        from concurrent.futures import ThreadPoolExecutor
+    @staticmethod
+    def _metrics(ok, terminal, retryable, blocked) -> DataFrame:
+        """Per-partition fetch log (T4 / north_rule): fetched, bytes,
+        errors and retries per (partition_id, host). Terminal failures and
+        robots-blocked rows count as errors, once."""
+        zero, n = F.lit(0).cast("long"), F.count("*")
+        parts = [(ok, n, F.sum("page_bytes"), zero, zero),
+                 (terminal, zero, zero, n, zero),
+                 (retryable, zero, zero, zero, n),
+                 (blocked, zero, zero, n, zero)]
+        return _union([
+            df.groupBy(F.spark_partition_id().alias("partition_id"), "host")
+            .agg(fetched.alias("fetched"), nbytes.alias("bytes"),
+                 errors.alias("errors"), retries.alias("retries"))
+            for df, fetched, nbytes, errors, retries in parts
+            if df is not None
+        ])
 
-        pool = ThreadPoolExecutor(max_workers=5)
-        committed = False
-        try:
-            materialized = pool.submit(seen_add.localCheckpoint)
-            pending = []
-            present_rules = set(
-                frontier.agg(F.collect_set("rule")).first()[0]
-            )
-
-            # apply only the rule packs scheduled this round. A rule may
-            # return an optional third element: quarantine rows (J3
-            # class-map misses — the reference raises
-            # UnknownDeviceClassException; the engine keeps the offending
-            # rows auditable instead).
-            all_children, all_items, all_quar = [], [], []
-            for rule, fn in RP.RULES.items():
-                if rule not in present_rules:
-                    continue
-                subset = ok.filter(F.col("rule") == rule)
-                res = fn(subset)
-                children, items = res[0], res[1]
-                if children is not None:
-                    all_children.append(
-                        (children, RP.allowed_host_pattern(rule)))
-                if items is not None:
-                    all_items.append(items)
-                if len(res) > 2 and res[2] is not None:
-                    all_quar.append(res[2])
-
-            items_df = None
-            if all_items:
-                items_df = all_items[0]
-                for it in all_items[1:]:
-                    items_df = items_df.unionByName(it)
-
-            # normalize children into frontier rows. The per-rule raw
-            # children (uniform 7-col schema from rulepacks._children)
-            # UNION FIRST, tagged with their producing rule's offsite
-            # pattern as a literal, then repartition and run ONE
-            # normalization projection. The two pandas UDFs (canonicalize,
-            # host) each cost a fixed python-worker/Arrow round trip PER
-            # PARTITION PER EVALUATION — normalizing per rule branch paid
-            # that ~10x per round over the union's many thin partitions
-            # (profiled: the children chain alone was ~2.5 s of the steady
-            # round's write phase at local[4], core-count-insensitive —
-            # pure serial floor against the N->4N headline). The
-            # repartition exchange carries raw pre-canonicalization rows
-            # (url + small maps) and caps UDF evaluations at the core
-            # count; at cluster scale it doubles as the balance step for
-            # skewed per-rule child volumes.
-            fresh_raw = None
-            offsite_pats = []
-            for children, allowed_pattern in all_children:
-                offsite_pats.append(allowed_pattern)
-                tagged = children.withColumn("_pat", F.lit(allowed_pattern))
-                fresh_raw = tagged if fresh_raw is None \
-                    else fresh_raw.unionByName(tagged)
-
-            # frontier(r+1) = deferred ∪ retried misses ∪ fresh children
-            next_frontier = deferred.select(
-                [f.name for f in FRONTIER_SCHEMA.fields])
-            if retryable is not None:
-                next_frontier = next_frontier.unionByName(
-                    retryable.select([f.name for f in FRONTIER_SCHEMA.fields])
-                )
-            if fresh_raw is not None:
-                # F8 offsite filter: each row checks the pattern its
-                # producing rule declared (literal rlike per distinct
-                # pattern — JVM CASE)
-                offsite = F.coalesce(
-                    *[F.when(F.col("_pat") == p, F.col("host").rlike(p))
-                      for p in sorted(set(offsite_pats))],
-                    F.lit(False),
-                )
-                fresh = (
-                    fresh_raw.repartition(
-                        self.spark.sparkContext.defaultParallelism)
-                    .withColumn(
-                        "canon_url", U.canonicalize_url_udf()(F.col("url")))
-                    .withColumn(
-                        "fetch_key",
-                        U.fetch_key_col(F.col("canon_url"),
-                                        F.col("form_data")))
-                    .withColumn("url_hash", F.xxhash64("fetch_key"))
-                    .withColumn("host", U.url_host_udf()(F.col("url")))
-                    .filter(offsite)
-                    .withColumn("priority", FR.priority_score(F.col("url")))
-                    # seq is a lexicographically-ordered DFS path key: the
-                    # pad width bounds links-per-page (and seeds); %09d
-                    # holds to 10^9 per page — must match simulator._pad
-                    # exactly
-                    .withColumn(
-                        "seq",
-                        F.concat_ws(".", F.col("parent_seq"),
-                                    F.format_string("%09d", F.col("pos"))),
-                    )
-                    .withColumn("round_added", F.lit(rnd + 1))
-                    .withColumn("retry_count", F.lit(0))
-                    .select([f.name for f in FRONTIER_SCHEMA.fields])
-                )
-            else:
-                fresh = None
-
-            # every state write waits for the materializer, then runs
-            # concurrently over the cached working set — the round's
-            # wall time is parse + the slowest residual write, not their
-            # sum and not a cache-lock convoy. None of them is the
-            # commit point: the round-commit marker below is written
-            # only after every write has finished, and resume rolls back
-            # anything newer than it.
-            _mark("plan_build")   # driver-only: rule loop + frontier exprs
-            seen_add = materialized.result()  # working set cached from here
-            _mark("mat_wait")
-            if fresh is not None:
-                # ONE anti-join covers both dedup obligations: the seen
-                # set, AND (ADVICE r1) the rows already scheduled for next
-                # round — a URL deferred (or retried) this round and
-                # re-discovered as a child must not enter the frontier
-                # twice; scrapy's RFPDupeFilter dedups at enqueue time
-                # against ALL scheduled requests and the earlier-scheduled
-                # row wins. Unioning the key sets before the join (keys
-                # are fixed-width url_hash rows, the union is narrow)
-                # replaces what used to be TWO back-to-back shuffled
-                # anti-joins on the same key with one — the write-floor
-                # profile priced each at ~2 exchanges + sort.
-                fresh = FR.dedup_new_children(
-                    fresh,
-                    seen_add.unionByName(seen.select("url_hash", "fetch_key"))
-                    .unionByName(
-                        next_frontier.select("url_hash", "fetch_key")),
-                )
-                next_frontier = next_frontier.unionByName(fresh)
-            pending.append(
-                pool.submit(self._append, seen_add, "seen", rnd))
-            pending.append(
-                pool.submit(self._append, metrics, "fetch_log", rnd))
-            pending.append(
-                pool.submit(self._write_frontier, next_frontier, rnd + 1))
-            if items_df is not None:
-                pending.append(
-                    pool.submit(self._append, items_df, "items", rnd))
-            if all_quar:
-                quar = all_quar[0]
-                for q in all_quar[1:]:
-                    quar = quar.unionByName(q)
-                pending.append(
-                    pool.submit(self._append, quar, "quarantine", rnd))
-            for fut in pending:
-                fut.result()
-            _mark("writes")
-            self._commit_round(rnd)
-            committed = True
-            _mark("commit")
-            self.last_round_phases = _ph
-        finally:
-            if not committed:
-                # failure path (ADVICE r5): outstanding write jobs keep
-                # the JVM busy but are rolled back by the commit protocol;
-                # don't wait on them, just stop feeding the pool
-                pool.shutdown(wait=False, cancel_futures=True)
-            else:
-                pool.shutdown(wait=False)
-            dequeued.unpersist()
-            _ok_cached.unpersist()
-            candidates.unpersist()   # no-op on the robots path
-            if robots_joined is not None:
-                robots_joined.unpersist()
-            terminal.unpersist()
-            if retryable is not None:
-                retryable.unpersist()
-            if fetched_cached:
-                fetched.unpersist()
-            elif can_fail:
-                failed.unpersist()
-        return {"round": rnd, "fetch_broadcast": use_bcast}
+    @staticmethod
+    def _write_round(pool: ThreadPoolExecutor, writes: list):
+        """Run the state writes ``(writer, df, *args)`` concurrently on
+        ``pool``, skipping empty outputs, and wait for all of them. None of
+        them is the commit point: see committed_round."""
+        for fut in [pool.submit(fn, df, *args)
+                    for fn, df, *args in writes if df is not None]:
+            fut.result()
 
     # -- S7 feed export ----------------------------------------------------------
     _FILES_TYPE = "array<struct<url:string, path:string, checksum:string>>"

@@ -47,9 +47,9 @@ class CorpusFetcher:
     engine derives the missing rows (= 404, scrapy does not retry 404s)
     by anti-joining the dequeued set against the round's CACHED resolved
     keys — zero extra corpus scans (deriving misses here instead would
-    re-evaluate the corpus join subtree once per consumer job)."""
+    re-evaluate the corpus join subtree once per consumer job). The join
+    has no side effects, so the engine does not cache its output."""
 
-    materialize = False  # pure join — recomputation is safe and cheap
     resolves_all = False
 
     def __init__(self, engine=None):
@@ -150,8 +150,9 @@ class HttpFetcher:
     VOLUME); a task's batch paces independently — the aggregate per-host
     rate across tasks is still governed by the upstream budget."""
 
-    materialize = True  # network side effects: fetch exactly once per round
-    resolves_all = True  # every dequeued row returns with a real status
+    # every dequeued row returns with a real status; the engine caches
+    # the output, so each request runs once per round
+    resolves_all = True
 
     def __init__(self, engine=None, timeout: float = 320.0,
                  concurrency: int = 16, user_agent: str = "firmwarescraper",

@@ -18,8 +18,6 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta, timezone
 
-import pandas as pd
-
 from firmwarescraper_spark.functions.html import extract_text
 from firmwarescraper_spark.functions.url import canonicalize_url
 
@@ -296,16 +294,6 @@ def corpus_dict(n_avm: int = 8, n_linksys: int = 6, n_mirrors: int = 0,
 
         out.update(all_vendor_pages(vendor_scale))
     return out
-
-
-def pages_pdf(n_avm: int = 8, n_linksys: int = 6, n_mirrors: int = 0,
-              n_avm_mirror: int = 2, n_pad: int = 0,
-              vendor_scale: int = 0) -> pd.DataFrame:
-    """pages table as pandas, input_hint schema (driver-side small variant;
-    write_corpus generates distributed)."""
-    corpus = corpus_dict(n_avm, n_linksys, n_mirrors, n_avm_mirror, n_pad,
-                         vendor_scale)
-    return pd.DataFrame(_rows_from_pages(corpus))
 
 
 def _rows_from_pages(pages: dict) -> list:

@@ -181,6 +181,32 @@ def test_budgeted_round_job_count(spark, corpus, tmp_path_factory):
     assert 0 < jobs <= MAX_JOBS_PER_ROUND, jobs
 
 
+def _persistent_rdd_ids(spark) -> set:
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keys()}
+
+
+def test_executor_storage_flat_per_round(spark, corpus, tmp_path_factory):
+    """Executor storage stays bounded over a crawl: once the crawl-lifetime
+    robots caches are built, every round releases all that it persisted, so
+    after each round the session holds no persistent RDD it did not hold
+    before the first one. (A subset, not equality: the context cleaner may
+    drop caches that earlier tests left behind.)"""
+    state = str(tmp_path_factory.mktemp("state_storage"))
+    eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
+    rules, budget = eng._robots()
+    rules.count(), budget.count()
+    base = _persistent_rdd_ids(spark)
+    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    rnd, counts = 0, []
+    while not eng._read_frontier(rnd).isEmpty():
+        eng.run_round(rnd)
+        ids = _persistent_rdd_ids(spark)
+        counts.append(len(ids))
+        assert ids <= base, (rnd, len(base), counts)
+        rnd += 1
+    assert rnd > 4  # the budget forced several rounds
+
+
 def test_text_invariant(spark, corpus):
     """input_hint invariant: engine-side text extraction reproduces the
     corpus text column byte-identically per url."""

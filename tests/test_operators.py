@@ -638,3 +638,22 @@ def test_excise_spans_full_coverage_yields_empty(spark):
            DD.excise_spans(df, DD.dup_spans(df, L=4)).collect()}
     assert out[0]["clean_text"] == ""
     assert out[0]["n_removed_tokens"] == 5
+
+
+def test_spread_input_only_spreads_few_file_scans(spark, tmp_path):
+    """A one-file parquet scan is spread to the session's parallelism; a
+    relation with no input files (here a local checkpoint) is returned as
+    is, with no Exchange added."""
+    from firmwarescraper_spark.operators.partitioning import spread_input
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    path = str(tmp_path / "one_file")
+    spark.range(100).coalesce(1).write.parquet(path)
+    scan = spark.read.parquet(path)
+    assert len(scan.inputFiles()) == 1
+    assert "Exchange" in plan(spread_input(scan, "id"))
+    checkpointed = spark.range(100).localCheckpoint()
+    assert checkpointed.inputFiles() == []
+    assert "Exchange" not in plan(spread_input(checkpointed, "id"))

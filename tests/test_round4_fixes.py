@@ -121,7 +121,7 @@ def _physical_plan(df) -> str:
 
 
 def test_fetch_broadcast_autogate(spark, tmp_path):
-    """broadcast_fetch='auto' must broadcast the dequeued set only while
+    """The fetch-join size gate must broadcast the dequeued set only while
     the frontier snapshot (an upper bound on it) fits the cap; past the
     cap the join runs unhinted — no forced BroadcastExchange of an
     unbounded dequeued set — and the crawl result is identical."""
