@@ -10,9 +10,10 @@ Each rule exists twice, by design:
     test_linksys.py:190-204).
 
 The only Python-side member on the Spark path is the AVM powerline
-permutation search (X4), which is exposed as an Arrow-batched pandas UDF:
-its candidate set is exponential in the token count (2^(n-1)) and
-data-dependent, which a static column expression cannot express cleanly.
+permutation search (X4), which is exposed as an array-in/array-out
+Arrow-batched pandas UDF: its candidate set is exponential in the token
+count (2^(n-1)) and data-dependent, which a static column expression
+cannot express cleanly.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import re
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
+from pyspark.sql.types import ArrayType, StringType
 
 # ---------------------------------------------------------------------------
 # X3 / X4 — AVM version (/root/reference/firmware/spiders/avm.py:94-116)
@@ -67,28 +68,41 @@ from functools import lru_cache
 
 
 @lru_cache(maxsize=None)
-def avm_version_udf():
-    """Arrow-batched pandas UDF: (filename, device_name) -> version."""
+def avm_powerline_udf():
+    """Arrow-batched pandas UDF: (file names, device name) -> one version
+    per name, None for names outside the powerline family; [] for a null
+    array, so the result always zips back onto its input."""
     from pyspark.sql.functions import pandas_udf
 
-    @pandas_udf(StringType())
-    def _avm_version(fname: pd.Series, spec: pd.Series) -> pd.Series:
+    @pandas_udf(ArrayType(StringType()))
+    def _avm_powerline(fnames: pd.Series, spec: pd.Series) -> pd.Series:
         return pd.Series(
-            [avm_extract_version(f, s) for f, s in zip(fname, spec)],
-            index=fname.index,
+            [[] if names is None else
+             [avm_extract_version(f, s) if f and "fritz.powerline" in f else None
+              for f in names]
+             for names, s in zip(fnames, spec)],
+            index=fnames.index,
         )
 
-    return _avm_version
+    return _avm_powerline
 
 
-def avm_version_col(fname: Column, spec: Column) -> Column:
-    """Spark-side AVM version: codegen'd regexp for the main family, pandas
-    UDF only for the powerline permutation branch."""
-    main = F.regexp_extract(fname, _AVM_VERSION_RE, 6)
-    main = F.when(main == "", F.lit("0.0")).otherwise(main)
-    return F.when(
-        fname.contains("fritz.powerline"), avm_version_udf()(fname, spec)
-    ).otherwise(main)
+def avm_versions_col(fnames: Column, spec: Column) -> Column:
+    """Spark-side AVM version of every file name in the array ``fnames``:
+    codegen'd regexp for the main family. The powerline permutation branch
+    runs in a pandas UDF over the whole array, called outside any lambda
+    (Spark rejects a Python UDF inside a higher-order function) and zipped
+    back by index; only arrays holding a powerline name cross to Python."""
+    powerline = avm_powerline_udf()(
+        F.when(F.exists(fnames, lambda f: f.contains("fritz.powerline")), fnames),
+        spec)
+
+    def version(z):
+        main = F.regexp_extract(z["f"], _AVM_VERSION_RE, 6)
+        return (F.when(z["f"].contains("fritz.powerline"), z["p"])
+                .when(main == "", F.lit("0.0")).otherwise(main))
+
+    return F.transform(F.arrays_zip(fnames.alias("f"), powerline.alias("p")), version)
 
 
 # ---------------------------------------------------------------------------

@@ -103,16 +103,27 @@ def build_robots_rules(pages: DataFrame, persist: bool = False) -> tuple:
 
     rules_df: host, is_allow, rule_regex, rule_len
     delay_df: host, crawl_delay
-    Parsing runs inside one Arrow-batched ``mapInPandas`` over the filtered
-    robots scan (the pure-Python ``parse_robots_txt`` is shared with the
-    simulator oracle); consumers broadcast-join the result while it fits
-    and shuffle-join past the broadcast threshold — Spark picks per plan.
+    Consumers broadcast-join the result while it fits and shuffle-join past
+    the broadcast threshold — Spark picks per plan.
 
     ``persist=True`` caches the parsed table that BOTH outputs derive from
     (ADVICE r2: rules_df and delay_df are two filters over the same
     mapInPandas output — uncached, the robots scan + Python parse would
-    execute once per derived view).
+    execute once per derived view). A caller that must release that cache
+    builds it with ``robots_table`` and splits it with
+    ``split_robots_table``.
     """
+    table = robots_table(pages)
+    return split_robots_table(table.persist() if persist else table)
+
+
+def robots_table(pages: DataFrame) -> DataFrame:
+    """Every /robots.txt row of ``pages`` parsed into (host, is_allow,
+    rule_regex, rule_len, crawl_delay): one row per rule, crawl_delay null,
+    and one per crawl delay, the rule columns null. Parsing runs inside one
+    Arrow-batched ``mapInPandas`` over the filtered robots scan (the
+    pure-Python ``parse_robots_txt`` is shared with the simulator
+    oracle)."""
     import pandas as pd
 
     robots = pages.filter(
@@ -152,17 +163,19 @@ def build_robots_rules(pages: DataFrame, persist: bool = False) -> tuple:
                                   "rule_len", "crawl_delay"],
                 )
 
-    parsed = robots.mapInPandas(
+    return robots.mapInPandas(
         _parse,
         schema="host string, is_allow boolean, rule_regex string, "
                "rule_len int, crawl_delay double",
     )
-    if persist:
-        parsed = parsed.persist()
-    rules_df = parsed.filter(F.col("is_allow").isNotNull()).select(
+
+
+def split_robots_table(table: DataFrame) -> tuple:
+    """(rules_df, delay_df) of a ``robots_table``."""
+    rules_df = table.filter(F.col("is_allow").isNotNull()).select(
         "host", "is_allow", "rule_regex", "rule_len"
     )
-    delay_df = parsed.filter(F.col("crawl_delay").isNotNull()).select(
+    delay_df = table.filter(F.col("crawl_delay").isNotNull()).select(
         "host", "crawl_delay"
     )
     return rules_df, delay_df

@@ -71,6 +71,15 @@ def _union(dfs) -> DataFrame | None:
     return reduce(DataFrame.unionByName, dfs) if dfs else None
 
 
+def _release(df: DataFrame):
+    """Unpersist a cached or a locally checkpointed frame: a checkpoint's
+    blocks belong to its RDD, which DataFrame.unpersist does not reach."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 class CrawlEngine:
     def __init__(
         self,
@@ -114,12 +123,14 @@ class CrawlEngine:
         self.fetcher = fetcher
         self.robots_http = robots_http
         self._robots_hosts = None
+        self._robots_table = None
         self._pages = None
         self._robots_rules = None
         self._host_budget = None
         self._budget_all_unlimited = False
         self._has_fail_col = None
         self._round_cache = []
+        self._packs = {}  # rule -> its built columns (RP.extract)
 
     # -- state paths ---------------------------------------------------------
     def _p(self, *parts) -> str:
@@ -380,14 +391,9 @@ class CrawlEngine:
     # -- fetch build-side gating -------------------------------------------------
     def _frontier_bytes(self, rnd: int) -> int:
         """On-disk size of the round's frontier snapshot — a free metadata
-        upper bound on the dequeued set (dequeued ⊆ frontier). Goes through
-        Hadoop's FileSystem API (r4 verdict #6) so the gate works on ANY
-        supported filesystem (hdfs://, s3a://, file:), not just the local
-        os.listdir view — a deployment state_dir on object storage would
-        otherwise silently measure 0 bytes and force-broadcast every
-        frontier. On Iceberg this is the snapshot's content-file size from
-        the manifest. Marker/underscore files are counted too: this is an
-        upper bound, and they are O(bytes) noise."""
+        upper bound on the dequeued set (dequeued ⊆ frontier), marker files
+        included. Read through Hadoop's FileSystem API, so a state_dir on
+        any filesystem (hdfs://, s3a://, file:) measures its real size."""
         base = self._p("frontier", f"round={rnd}")
         jvm = self.spark._jvm
         path = jvm.org.apache.hadoop.fs.Path(base)
@@ -398,16 +404,11 @@ class CrawlEngine:
         return int(fs.getContentSummary(path).getLength())
 
     def _fetch_broadcast_choice(self, rnd: int) -> bool:
-        """Auto-gate the fetch join's build side (r3 verdict #1): broadcast
-        only while the frontier snapshot — an upper bound on this round's
-        dequeued set — is under ``broadcast_cap_bytes``. An unlimited-budget
-        round over a 10^10-URL frontier dequeues the whole frontier; forcing
-        that through a broadcast is a driver/executor OOM. Past the cap the
-        join runs unhinted: AQE picks broadcast at runtime if the *actual*
-        dequeued set turns out small (budget-capped round over a huge
-        frontier), else SMJ — shuffle-free when the corpus is a bucketed
-        table (``pages_table`` / Iceberg SPJ, PLANS.md §2b). A cap of 0
-        never broadcasts; a cap above any snapshot always does."""
+        """Broadcast the fetch join's build side only while the frontier
+        snapshot is under ``broadcast_cap_bytes``: an unlimited round over a
+        huge frontier would OOM a broadcast. Past the cap the join runs
+        unhinted, and AQE picks broadcast or SMJ (shuffle-free over a
+        bucketed ``pages_table``, PLANS.md §2b) from the actual size."""
         return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
 
     def _fetch_join(self, dequeued: DataFrame, use_bcast: bool) -> DataFrame:
@@ -422,13 +423,11 @@ class CrawlEngine:
     def _robots(self, frontier: DataFrame | None = None):
         if not self.robots_http:
             if self._robots_rules is None:
-                # persist=True caches the shared parsed table, so the robots
-                # scan + Python parse runs once per crawl — the rule/budget
-                # views derived below are then re-joined every round;
-                # persisting them too keeps the per-round filters off the
-                # parse path
-                rules, delay = RB.build_robots_rules(
-                    self._raw_pages(), persist=True)
+                # cached so the robots scan + Python parse runs once per
+                # run(); the rule/budget views are re-joined every round,
+                # and caching them too keeps those filters off the parse
+                self._robots_table = RB.robots_table(self._raw_pages()).persist()
+                rules, delay = RB.split_robots_table(self._robots_table)
                 self._robots_rules = rules.persist()
                 self._host_budget = RB.host_budget_from_delay(
                     delay, self.round_seconds, self.tokens_per_host
@@ -478,13 +477,9 @@ class CrawlEngine:
                 budget = self._host_budget.unionByName(budget)
                 hosts = self._robots_hosts.unionByName(hosts)
             old = (self._robots_rules, self._host_budget, self._robots_hosts)
-            # localCheckpoint (eager) instead of persist (r4 verdict #4 +
-            # ADVICE): materializes AND truncates lineage to depth 1, so a
-            # 10^4-round crawl's accumulated rules/budget/hosts never drag
-            # a 10^4-deep union chain through every round's Catalyst
-            # analysis. On a durable deployment this is a write+re-read of
-            # the rules table (the compact_state pattern); local-mode
-            # executor storage is equivalent here.
+            # localCheckpoint, not persist: it truncates the lineage, so a
+            # long crawl's accumulated rules/budget/hosts never drag a
+            # round-deep union chain through each round's analysis
             self._robots_rules = rules.localCheckpoint()
             self._host_budget = budget.localCheckpoint()
             self._robots_hosts = hosts.localCheckpoint()
@@ -493,10 +488,20 @@ class CrawlEngine:
                 row[0] is None or row[0] >= FR.UNLIMITED_TOKENS)
             for df in old:
                 if df is not None:
-                    df.unpersist()  # superseded snapshots: bounded storage
+                    _release(df)  # superseded snapshots: bounded storage
             pages.unpersist()
         new_bases.unpersist()
         return self._robots_rules, self._host_budget
+
+    def _release_robots(self):
+        """Drop the robots caches; the next round rebuilds them lazily."""
+        for df in (self._robots_rules, self._host_budget, self._robots_hosts,
+                   self._robots_table):
+            if df is not None:
+                _release(df)
+        self._robots_rules = self._host_budget = None
+        self._robots_hosts = self._robots_table = None
+        self._budget_all_unlimited = False
 
     def run_round(self, rnd: int) -> dict:
         """One crawl round: a driver over the stage methods below. Phase
@@ -683,25 +688,18 @@ class CrawlEngine:
         return ok, self._persist(terminal), retryable
 
     def _extract(self, frontier: DataFrame, ok: DataFrame) -> tuple:
-        """Apply the rule packs scheduled this round. Returns (children,
-        items, quarantine), each None when no rule produced it; children
-        carry their rule's offsite pattern in ``_pat``. A rule's optional
-        third output is its quarantine rows (J3 class-map misses, kept
-        auditable where the reference raises)."""
+        """Apply the rule packs scheduled this round (RP.extract). Returns
+        (children, items, quarantine), each None when no rule produces it.
+        Each rule's columns are built the first round it is present and
+        kept for the engine's life: building them is the plan cost."""
         # the frontier's rule set is a superset of the fetched one; a rule
-        # with nothing fetched only adds empty branches
-        present = set(frontier.agg(F.collect_set("rule")).first()[0])
-        children, items, quarantine = [], [], []
-        for rule, fn in RP.RULES.items():
-            if rule not in present:
-                continue
-            res = fn(ok.filter(F.col("rule") == rule))
-            if res[0] is not None:
-                children.append(res[0].withColumn(
-                    "_pat", F.lit(RP.allowed_host_pattern(rule))))
-            items.append(res[1])
-            quarantine.append(res[2] if len(res) > 2 else None)
-        return _union(children), _union(items), _union(quarantine)
+        # with nothing fetched only adds a dead CASE branch
+        present = sorted(
+            set(frontier.agg(F.collect_set("rule")).first()[0]) & RP.PACKS.keys())
+        for rule in present:
+            if rule not in self._packs:
+                self._packs[rule] = RP.PACKS[rule]()
+        return RP.extract(ok, {rule: self._packs[rule] for rule in present})
 
     def _next_frontier(self, rnd: int, deferred: DataFrame, retryable,
                        children, known: DataFrame) -> DataFrame:
@@ -715,15 +713,14 @@ class CrawlEngine:
             carried = carried.unionByName(retryable.select(cols))
         if children is None:
             return carried
-        # F8 offsite filter: each row checks its producing rule's pattern
+        # F8 offsite filter: each child checks its rule family's pattern
+        family = F.substring_index(F.col("rule"), ":", 1)
         offsite = F.coalesce(*[
-            F.when(F.col("_pat") == p, F.col("host").rlike(p))
-            for p in sorted(set(RP.ALLOWED_HOST_PATTERNS.values()))
+            F.when(family == f, F.col("host").rlike(p))
+            for f, p in sorted(RP.ALLOWED_HOST_PATTERNS.items())
         ], F.lit(False))
         fresh = (
-            # the pandas UDFs pay a Python round trip per partition: cap
-            # the partition count before they run
-            children.repartition(self.spark.sparkContext.defaultParallelism)
+            children
             .withColumn("canon_url", U.canonicalize_url_udf()(F.col("url")))
             .withColumn("fetch_key", U.fetch_key_col(F.col("canon_url"),
                                                      F.col("form_data")))
@@ -930,17 +927,20 @@ class CrawlEngine:
             self._write_frontier(self.seed_frontier(seeds), 0)
             rnd = 0
         rounds_run = 0
-        while rounds_run < max_rounds:
-            if self._read_frontier(rnd).isEmpty():
-                break
-            self.run_round(rnd)
-            rnd += 1
-            rounds_run += 1
-            # periodic small-files control: fold committed rounds into one
-            # snapshot per state table (r3 verdict #4); long crawls keep a
-            # bounded file count and the anti-join scan stays flat
-            if self.compact_every and rnd % self.compact_every == 0:
-                self.compact_state()
+        try:
+            while rounds_run < max_rounds:
+                if self._read_frontier(rnd).isEmpty():
+                    break
+                self.run_round(rnd)
+                rnd += 1
+                rounds_run += 1
+                # periodic small-files control: fold committed rounds into
+                # one snapshot per state table (r3 verdict #4); long crawls
+                # keep a bounded file count and the anti-join scan stays flat
+                if self.compact_every and rnd % self.compact_every == 0:
+                    self.compact_state()
+        finally:
+            self._release_robots()
         return {
             "rounds": rnd,
             "seen": self.seen().count(),

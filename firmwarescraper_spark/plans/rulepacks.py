@@ -1,309 +1,160 @@
-"""Declarative per-vendor rule packs — the Spark-side spider logic.
+"""Declarative per-vendor rule packs — the Spark-side spider logic, as the
+per-page function of the extraction layer (SURVEY.md §1, layer 1).
 
-Each rule is a function ``fetched_df -> (children_df | None, items_df | None)``:
+A rule is a builder (plans/rulepacks_vendors.py) that takes no DataFrame and
+returns a dict of up to three array Columns over one fetched page row:
 
-  fetched_df columns: url, canon_url, url_hash, host, depth, priority,
-                      rule, lineage (map<string,string>), seq,
-                      parsed (the parse-once PAGE_STRUCT —
-                      functions/html.py)
-  children_df columns: url (absolute), rule, lineage, pos (link position —
-                       the deterministic ordering key component), depth,
-                       parent_seq
-  items_df columns:   the FirmwareItem schema with ItemLoader list-wrapping
-                      (vendor, device_name, firmware_version, device_class,
-                      release_date: array<string>; file_urls: array<string>)
-                      — mirror of /root/reference/firmware/items.py:4-12.
+  page row columns:  url, depth, seq, rule, lineage (map<string,string>),
+                     html (kept for FTP listings only), parsed (the
+                     parse-once PAGE_STRUCT — functions/html.py)
+  children:   array<struct<url, rule, lineage, pos, form_data>> — one
+              request per element; pos is the deterministic ordering key
+              within the page, form_data the POST body (S2, empty for GET)
+  items:      array<struct<...>> of the FirmwareItem schema with
+              ItemLoader list-wrapping (vendor, device_name,
+              firmware_version, device_class, release_date, file_urls:
+              array<string>) — mirror of the reference's firmware/items.py
+  quarantine: array<struct<rule, reason, detail>> — J3 class-map misses
 
-Plan shape (the whole point of the ``parsed`` struct): HTML is parsed
-EXACTLY ONCE per fetched page per round, inside ``parse_page_udf``;
-everything below is JVM array functions (filter/transform/posexplode) and
-codegen'd column expressions — zero Python in the per-rule extraction.
-Positional joins (J1/J2) use posexplode: position is the join key,
-preserving document order exactly (SURVEY.md §2.3).
+``extract`` runs the built rules over a page frame as one select per output
+kind, ``inline(CASE rule WHEN r THEN <r's array> ... END)``, and adds
+depth + 1, parent_seq and url from the page row. A Column is an unresolved
+expression of one session, so the engine builds each rule's columns once
+and reuses them every round; building them is Python work (py4j round
+trips for every ``F.*`` call) that dominates the plan cost, not Catalyst.
+
+Plan shape: HTML is parsed EXACTLY ONCE per fetched page per round, inside
+``parse_page_udf``; everything here is JVM array functions and codegen'd
+column expressions. The one Python member is the AVM powerline version
+search (functions/versions.avm_versions_col).
 """
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from firmwarescraper_spark.functions import url as U
-from firmwarescraper_spark.functions import versions as V
-from firmwarescraper_spark.plans.simulator import (
-    AVM_DEVICE_CLASSES,
-    LINKSYS_DEVICE_CLASSES,
-)
+from firmwarescraper_spark.plans import rulepacks_vendors as RV
 
-
-def _ignore_filter(href, prefixes) -> F.Column:
-    """F2 prefix-ignore (avm.py:25,33): NOT startswith(any of prefixes)."""
-    cond = F.lit(False)
-    for p in prefixes:
-        cond = cond | href.startswith(p)
-    return ~cond
-
-
-def _children(df: DataFrame, rule: str, lineage=None, form=None) -> DataFrame:
-    """Normalize a (child_url, pos[, lineage[, form]]) frame into the
-    children schema. ``form`` carries POST form data (S2) — empty map for
-    plain GET requests."""
-    lineage_col = lineage if lineage is not None else F.col("lineage")
-    form_col = form if form is not None else F.create_map().cast("map<string,string>")
-    return df.select(
-        F.col("child_url").alias("url"),
-        F.lit(rule).alias("rule"),
-        lineage_col.alias("lineage"),
-        F.col("pos").cast("int").alias("pos"),
-        (F.col("depth") + 1).alias("depth"),
-        F.col("seq").alias("parent_seq"),
-        form_col.alias("form_data"),
-    )
-
-
-def _class_case(pairs, product: F.Column) -> F.Column:
-    """J3 lookup join as a generated first-match-wins CASE expression
-    (declaration order == reference iteration order). Miss -> NULL
-    (the reference raises; the engine quarantines — SURVEY.md §2.3 J3)."""
-    expr = None
-    for prefixes, cls in pairs:
-        cond = F.lit(False)
-        for p in prefixes:
-            cond = cond | product.startswith(p)
-        expr = F.when(cond, cls) if expr is None else expr.when(cond, cls)
-    return expr
-
-
-def _wrap_items(df: DataFrame) -> DataFrame:
-    """F10 projection to the fixed item schema with ItemLoader
-    list-wrapping (items.py:4-12; test_avm.py:111-118)."""
-    return df.select(
-        F.array("vendor").alias("vendor"),
-        F.array("device_name").alias("device_name"),
-        F.array("firmware_version").alias("firmware_version"),
-        F.array("device_class").alias("device_class"),
-        F.array("release_date").alias("release_date"),
-        F.array("file_url").alias("file_urls"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# AVM (/root/reference/firmware/spiders/avm.py)
-# ---------------------------------------------------------------------------
-
-def _explode_links(fetched: DataFrame, ignore: tuple) -> DataFrame:
-    """posexplode the page's hrefs with the F2 prefix filter applied and the
-    absolute child URL resolved JVM-side."""
-    exploded = fetched.select(
-        "url", "depth", "seq", "lineage",
-        F.posexplode("parsed.hrefs").alias("pos", "href"),
-    ).filter(_ignore_filter(F.col("href"), ignore))
-    return exploded.withColumn(
-        "child_url", U.url_join_col(F.col("url"), F.col("href"))
-    )
-
-
-def avm_parse(fetched: DataFrame):
-    """Index page -> product-directory requests (avm.py:24-26)."""
-    joined = _explode_links(fetched, ("beta", "tools", "license", ".."))
-    return _children(joined, "avm:parse_product"), None
-
-
-def avm_parse_product(fetched: DataFrame):
-    """Directory recursion or leaf firmware extraction, dispatched on the
-    URL's leaf directory (avm.py:28-34)."""
-    leaf_dir = V.url_path_part_col(F.col("url"), 1)
-    dirs = fetched.filter(leaf_dir != "fritz.os")
-    leaves = fetched.filter(leaf_dir == "fritz.os")
-
-    children = _children(
-        _explode_links(dirs, ("recover", "..")), "avm:parse_product"
-    )
-
-    # Leaf: J2 index-aligned link<->date join via posexplode — position is
-    # the join key; the 1:1 ordering assumption of avm.py:37-40 is
-    # preserved exactly (misalignment when a row lacks a date is reproduced,
-    # not fixed).
-    dates = F.filter(
-        F.transform(F.col("parsed.pre_texts"), V.avm_listing_date_col),
-        lambda d: d.isNotNull(),
-    )
-    filtered_hrefs = F.filter(F.col("parsed.hrefs"), lambda h: ~h.startswith(".."))
-    base = leaves.select(
-        "url", "seq", dates.alias("dates"),
-        F.posexplode(filtered_hrefs).alias("pos", "href"),
-        V.url_path_part_col(F.col("url"), 3).alias("device_name"),
-    )
-    items = (
-        base.withColumn("file_url", U.url_join_col(F.col("url"), F.col("href")))
-        .filter(F.col("file_url").endswith(".image"))
-        .select(
-            F.lit("AVM").alias("vendor"),
-            F.col("device_name"),
-            V.avm_version_col(
-                V.url_basename_col(F.col("file_url")), F.col("device_name")
-            ).alias("firmware_version"),
-            F.coalesce(
-                _class_case(AVM_DEVICE_CLASSES, F.col("device_name")), F.lit("Router")
-            ).alias("device_class"),
-            F.get(F.col("dates"), F.col("pos")).alias("release_date"),
-            F.col("file_url"),
-        )
-    )
-    return children, _wrap_items(items)
-
-
-# ---------------------------------------------------------------------------
-# Linksys (/root/reference/firmware/spiders/linksys.py)
-# ---------------------------------------------------------------------------
-
-def linksys_parse(fetched: DataFrame):
-    """Sitemap: positional zip join of product hrefs x device names
-    (linksys.py:68-72, J1) — lineage carries device_name downstream (J6)."""
-    item_anchors = F.filter(
-        F.col("parsed.anchors"),
-        lambda a: F.array_contains(a["div_classes"], "item") & a["href"].isNotNull(),
-    )
-    exploded = fetched.select(
-        "url", "depth", "seq", F.posexplode(item_anchors).alias("pos", "a")
-    )
-    joined = exploded.withColumn(
-        "child_url", U.url_join_col(F.col("url"), F.col("a.href"))
-    )
-    lineage = F.create_map(F.lit("device_name"), F.col("a.text"))
-    return _children(joined, "linksys:parse_product", lineage), None
-
-
-def linksys_parse_product(fetched: DataFrame):
-    """First 'Download Software' anchor -> versions page (linksys.py:74-78,
-    W2 first-match-in-list via element_at(filter(...), 1))."""
-    first_dl = F.try_element_at(
-        F.filter(
-            F.col("parsed.anchors"),
-            lambda a: F.array_contains(a["div_classes"], "support-downloads")
-            & (a["title"] == "Download Software") & a["href"].isNotNull(),
-        ),
-        F.lit(1),
-    )
-    hit = fetched.select(
-        "url", "depth", "seq", "lineage", first_dl["href"].alias("href")
-    ).filter(F.col("href").isNotNull())
-    joined = hit.withColumn(
-        "child_url", U.url_join_col(F.col("url"), F.col("href"))
-    ).withColumn("pos", F.lit(0))
-    return _children(joined, "linksys:parse_versions"), None
-
-
-def linksys_parse_versions(fetched: DataFrame):
-    """Accordion blocks -> firmware items (linksys.py:80-124): line-scoped
-    Ver..href span regex, extension predicate, scalar rule pack, and the
-    per-block PRODUCT_DICTIONARIES dedup (A1) as dropDuplicates scoped by
-    (page, block)."""
-    blocks = F.transform(
-        F.filter(
-            F.col("parsed.divs"),
-            lambda d: F.array_contains(d["classes"], "article-accordian-content")
-            & (d["parent_id"] == "support-article-downloads"),
-        ),
-        lambda d: d["html"],
-    )
-    spans = fetched.select(
-        "url", "seq", "lineage",
-        F.posexplode(blocks).alias("block_pos", "block"),
-    ).select(
-        "url", "seq", "lineage", "block_pos",
-        F.explode(
-            F.regexp_extract_all(
-                F.col("block"), F.lit(r'Ver.+href=".+(?:bin|img)"'), F.lit(0)
-            )
-        ).alias("fw"),
-    ).filter(F.col("fw").rlike(r"(\.img|\.bin)"))
-
-    device = F.col("lineage")["device_name"]
-    meta = spans.select(
-        "url", "block_pos",
-        F.lit("Linksys").alias("vendor"),
-        device.alias("device_name"),
-        V.linksys_version_col(F.col("fw")).alias("firmware_version"),
-        _class_case(LINKSYS_DEVICE_CLASSES, device).alias("device_class"),
-        V.linksys_date_col(F.col("fw")).alias("release_date"),
-        V.linksys_file_url_col(F.col("fw")).alias("file_url"),
-    )
-    # J3 class-map miss: the reference raises UnknownDeviceClassException
-    # (linksys.py:126-133), which scrapy logs and drops. The engine routes
-    # the offending rows to the auditable quarantine table instead of
-    # silently losing them (schema: CrawlEngine.quarantine()).
-    quarantine = (
-        meta.filter(F.col("device_class").isNull())
-        .select(
-            "url",
-            F.lit("linksys:parse_versions").alias("rule"),
-            F.lit("unknown_device_class").alias("reason"),
-            F.col("device_name").alias("detail"),
-        )
-        .dropDuplicates(["url", "detail"])
-    )
-    kept = meta.filter(F.col("device_class").isNotNull())
-
-    deduped = kept.dropDuplicates(
-        ["url", "block_pos", "vendor", "device_name", "firmware_version",
-         "device_class", "release_date", "file_url"]
-    )
-    return None, _wrap_items(deduped), quarantine
-
-
-# ---------------------------------------------------------------------------
-# Registry
-# ---------------------------------------------------------------------------
-
-RULES = {
-    "avm:parse": avm_parse,
-    "avm:parse_product": avm_parse_product,
-    "linksys:parse": linksys_parse,
-    "linksys:parse_product": linksys_parse_product,
-    "linksys:parse_versions": linksys_parse_versions,
+PACKS = {
+    "avm:parse": RV.avm_parse,
+    "avm:parse_product": RV.avm_parse_product,
+    "linksys:parse": RV.linksys_parse,
+    "linksys:parse_product": RV.linksys_parse_product,
+    "linksys:parse_versions": RV.linksys_parse_versions,
+    "tplink:parse": RV.tplink_parse,
+    "tplink:parse_product": RV.tplink_parse_product,
+    "tplink:parse_firmware": RV.tplink_parse_firmware,
+    "netgear_gpl:parse": RV.netgear_parse,
+    "linksys_gpl:parse": RV.linksys_gpl_parse,
+    "tplink_gpl:parse": RV.tplink_gpl_parse,
+    "tplink_gpl:parse_multi": RV.tplink_gpl_parse_multi,
+    "asus:parse": RV.asus_parse,
+    "asus:parse_firmware": RV.asus_parse_firmware,
+    "hp:parse": RV.hp_parse,
+    "hp:parse_firmware": RV.hp_parse_firmware,
+    "dlink_gpl:parse": RV.dlink_parse,
+    "dlink_gpl:detail": RV.dlink_detail,
+    "dlink_gpl:download": RV.dlink_download,
+    "dlink_ftp:root": RV.ftp_root,
+    "dlink_ftp:family": RV.ftp_family,
+    "dlink_ftp:device": RV.ftp_device,
+    "dlink_ftp:files": RV.ftp_files,
 }
 
-# PAGE_STRUCT fields each rule pack actually reads from `parsed` — the
-# parse UDF trims its per-row output to this set (functions/html.py
-# parse_page_udf), which cuts the Arrow struct conversion + executor
-# cache to a fraction for the listing-shaped rules that dominate a
-# crawl round. Vendor rules merge their own map in via
-# _register_vendor_rules (rulepacks_vendors.VENDOR_PARSE_FIELDS); a
-# rule absent from the merged map parses in full, so forgetting to map
-# a new rule costs speed, never correctness. Keep in sync with the
-# `parsed.` references in the rule functions.
+# PAGE_STRUCT fields each rule reads from `parsed` — the parse UDF trims its
+# per-row output to this set (functions/html.py parse_page_udf), which cuts
+# the Arrow struct conversion + executor cache to a fraction for the
+# listing-shaped rules that dominate a crawl round. A rule absent from the
+# map parses in full. The dlink_ftp rules read the raw `html` JSON listing
+# through from_json: their empty set skips the HTML parse entirely. A test
+# checks each entry against the `parsed.` fields of the rule's columns.
 RULE_PARSE_FIELDS = {
     "avm:parse": ("hrefs",),
     "avm:parse_product": ("hrefs", "pre_texts"),
     "linksys:parse": ("anchors",),
     "linksys:parse_product": ("anchors",),
     "linksys:parse_versions": ("divs",),
+    "tplink:parse": ("anchors",),
+    "tplink:parse_product": ("anchors", "texts"),
+    "tplink:parse_firmware": ("rows", "texts"),
+    "netgear_gpl:parse": ("paras",),
+    "linksys_gpl:parse": ("rows",),
+    "tplink_gpl:parse": ("anchors",),
+    "tplink_gpl:parse_multi": ("anchors", "rows"),
+    "asus:parse": ("scripts",),
+    "asus:parse_firmware": ("anchors", "texts"),
+    "hp:parse": ("rows",),
+    "hp:parse_firmware": ("anchors",),
+    "dlink_gpl:parse": ("anchors", "rows", "inputs"),
+    "dlink_gpl:detail": ("rows",),
+    "dlink_gpl:download": ("rows",),
+    "dlink_ftp:root": (),
+    "dlink_ftp:family": (),
+    "dlink_ftp:device": (),
+    "dlink_ftp:files": (),
 }
-
-
-def _register_vendor_rules():
-    """Deferred import: rulepacks_vendors imports helpers from this module."""
-    from firmwarescraper_spark.plans.rulepacks_vendors import (
-        VENDOR_HOST_PATTERNS,
-        VENDOR_PARSE_FIELDS,
-        VENDOR_RULES,
-    )
-
-    RULES.update(VENDOR_RULES)
-    RULE_PARSE_FIELDS.update(VENDOR_PARSE_FIELDS)
-    ALLOWED_HOST_PATTERNS.update(VENDOR_HOST_PATTERNS)
 
 # F8 offsite filter — allowed_domains per spider family as host regexes
 # (avm.py:16; linksys implicit single host; mirror hosts for the bench
-# corpus's many-host shape, sources/generate.py).
+# corpus's many-host shape, sources/generate.py). Every rule yields children
+# of its own family, so a child is checked against its own rule's family.
 ALLOWED_HOST_PATTERNS = {
     "avm": r"^(download\.avm\.de|mirror-\d+\.avm-mirror\.example)$",
     "linksys": r"^www\.linksys\.com$",
+    "tplink": r"^(www|static)\.tp-link\.com$",
+    "netgear_gpl": r"^www\.downloads\.netgear\.com$",
+    "linksys_gpl": r"^(www|downloads)\.linksys\.com$",
+    "tplink_gpl": r"^(www|static)\.tp-link\.com$",
+    # asus.py / hp.py declare no allowed_domains -> offsite filter disabled
+    "asus": r".*",
+    "hp": r".*",
+    "dlink_gpl": r"^(tsd\.dlink\.com\.tw|dlink-gpl\.s3\.amazonaws\.com)$",
+    "dlink_ftp": r"^ftp\.dlink\.de$",
+}
+
+# output kind -> (element array type, page columns added to each element;
+# a function, since a Column needs a live session)
+_OUTPUTS = {
+    "children": (
+        "array<struct<url:string, rule:string, lineage:map<string,string>, "
+        "pos:int, form_data:map<string,string>>>",
+        lambda: [(F.col("depth") + 1).alias("depth"),
+                 F.col("seq").alias("parent_seq")]),
+    "items": (
+        "array<struct<vendor:array<string>, device_name:array<string>, "
+        "firmware_version:array<string>, device_class:array<string>, "
+        "release_date:array<string>, file_urls:array<string>>>",
+        lambda: []),
+    "quarantine": (
+        "array<struct<rule:string, reason:string, detail:string>>",
+        lambda: [F.col("url")]),
 }
 
 
-def allowed_host_pattern(rule: str) -> str:
-    return ALLOWED_HOST_PATTERNS[rule.split(":", 1)[0]]
+def extract(pages: DataFrame, packs: dict) -> tuple:
+    """(children, items, quarantine) of the page rows ``pages`` under the
+    built rules ``packs`` (rule -> builder output): one select per output
+    kind, each a single generator over ``CASE rule``. A kind no rule
+    produces is None."""
+    out = []
+    for kind, (elem_type, page_cols) in _OUTPUTS.items():
+        case = None
+        for rule, pack in packs.items():
+            if pack.get(kind) is not None:
+                hit, arr = F.col("rule") == rule, pack[kind].cast(elem_type)
+                case = F.when(hit, arr) if case is None else case.when(hit, arr)
+        out.append(None if case is None
+                   else pages.select(*page_cols(), F.inline(case)))
+    return tuple(out)
 
 
-_register_vendor_rules()
+def _apply(rule: str, pages: DataFrame) -> tuple:
+    return extract(pages, {rule: PACKS[rule]()})
+
+
+# rule -> fn(pages) -> (children, items, quarantine): one rule's outputs as
+# DataFrames, through the same dispatch
+RULES = {rule: partial(_apply, rule) for rule in PACKS}

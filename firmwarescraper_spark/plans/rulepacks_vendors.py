@@ -1,30 +1,80 @@
-"""Spark rule packs for the remaining vendors: TP-Link (retail + GPL),
-Netgear GPL, Linksys GPL, ASUS, HP, D-Link GPL (POST forms + sequential
-pagination, S2/W4), and the D-Link FTP walker (JSON listings, S4/S5).
+"""Rule-pack builders for every vendor: AVM, Linksys, TP-Link (retail +
+GPL), Netgear GPL, Linksys GPL, ASUS, HP, D-Link GPL (POST forms +
+sequential pagination, S2/W4) and the D-Link FTP walker (JSON listings,
+S4/S5).
 
-Same contract as plans/rulepacks.py — every rule is JVM array/column
-algebra over the parse-once PAGE_STRUCT (or ``from_json`` for FTP listing
-bodies); the pure-Python twins live in plans/simulator.py and pin parity.
-Child `pos` values are contiguous over *yielded* children (filter the
-array first, then posexplode) so the deterministic seq path keys match the
-simulator's DFS order exactly.
+Each builder takes no DataFrame and returns a dict of up to three array
+Columns over one fetched page row — ``children``, ``items`` and
+``quarantine``; plans/rulepacks.py holds their element types, the registry
+and the dispatch. Everything is JVM array/column algebra over the
+parse-once PAGE_STRUCT (or ``from_json`` for FTP listing bodies): the
+page-scoped frame operators of a per-rule DataFrame map onto array
+functions — posexplode is ``transform`` with the element index, a union is
+``concat``, a per-page dedup is ``array_distinct``, a per-page window is a
+look-back over the page's array. The pure-Python twins live in
+plans/simulator.py and pin parity. Child ``pos`` values are the simulator's
+DFS keys: AVM counts links before its prefix filter, every other rule
+counts the children it yields.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from firmwarescraper_spark.functions import url as U
-from firmwarescraper_spark.plans.rulepacks import _children, _wrap_items
+from firmwarescraper_spark.functions import versions as V
 from firmwarescraper_spark.plans.simulator import (
     ASUS_DEVICE_DICT,
+    AVM_DEVICE_CLASSES,
     FTP_DEVICE_CLASSES,
     FTP_SKIPPED,
+    LINKSYS_DEVICE_CLASSES,
     LINKSYS_GPL_WHITELIST,
     NETGEAR_WHITELIST,
 )
 from firmwarescraper_spark.sources import vendors as VN
+
+
+# ---------------------------------------------------------------------------
+# Element builders. The dispatch casts each array to its element type in
+# plans/rulepacks.py; fields are named so that a rule can concat arrays.
+# ---------------------------------------------------------------------------
+
+def _c(x) -> Column:
+    return x if isinstance(x, Column) else F.lit(x)
+
+
+def _child(url, rule: str, pos, lineage=None, form=None) -> Column:
+    """One request: url, rule, lineage (default: the page's), pos, POST
+    form data (S2; empty for GET)."""
+    empty = F.create_map().cast("map<string,string>")
+    return F.struct(
+        _c(url).alias("url"), F.lit(rule).alias("rule"),
+        (F.col("lineage") if lineage is None else lineage).alias("lineage"),
+        _c(pos).alias("pos"), (empty if form is None else form).alias("form_data"))
+
+
+def _item(vendor, device_name, version, device_class, date, file_url) -> Column:
+    """F10 item with ItemLoader list-wrapping (items.py:4-12)."""
+    return F.struct(*[F.array(_c(x)) for x in (
+        vendor, device_name, version, device_class, date, file_url)])
+
+
+def _keep(arr, fn) -> Column:
+    """transform(arr, fn) minus the elements ``fn`` maps to null."""
+    return F.filter(F.transform(arr, fn), lambda e: e.isNotNull())
+
+
+def _flat(arr, fn) -> Column:
+    """flatMap: ``fn`` maps each element to an array or null."""
+    return F.flatten(_keep(arr, fn))
+
+
+def _opt(cond, elem) -> Column:
+    """[elem] where ``cond`` holds, else []."""
+    return F.filter(F.array(F.when(cond, elem)), lambda e: e.isNotNull())
+
 
 def _anchors():
     return F.col("parsed.anchors")
@@ -53,11 +103,138 @@ def _text_of(tag: str, token: str, by_id: bool = False):
     return _first(F.filter(_texts(), pred))["text"]
 
 
+def _join(href) -> Column:
+    return U.url_join_col(F.col("url"), href)
+
+
+def _class_case(pairs, product: str) -> Column:
+    """J3 lookup join as a generated first-match-wins CASE over the SQL
+    expression ``product`` (declaration order == reference iteration
+    order). Miss -> NULL (the reference raises; the engine quarantines —
+    SURVEY.md §2.3 J3). Generated as SQL text, the table costs one parse
+    instead of a py4j round trip per prefix."""
+    return F.expr("CASE " + " ".join(
+        "WHEN " + " OR ".join(f"startswith({product}, '{p}')" for p in prefixes)
+        + f" THEN '{cls}'" for prefixes, cls in pairs) + " END")
+
+
+# ---------------------------------------------------------------------------
+# AVM (avm.py)
+# ---------------------------------------------------------------------------
+
+def _avm_links(ignore: tuple, rule: str) -> Column:
+    """The page's hrefs minus the F2 prefix-ignore list (avm.py:25,33) as
+    ``rule`` requests; pos is the href's index before the filter."""
+    def kid(h, i):
+        dropped = F.lit(False)
+        for p in ignore:
+            dropped = dropped | h.startswith(p)
+        return F.when(~dropped, _child(_join(h), rule, i))
+    return _keep(F.col("parsed.hrefs"), kid)
+
+
+def avm_parse():
+    """Index page -> product-directory requests (avm.py:24-26)."""
+    return dict(children=_avm_links(("beta", "tools", "license", ".."),
+                                    "avm:parse_product"))
+
+
+def avm_parse_product():
+    """Directory recursion or leaf firmware extraction, dispatched on the
+    URL's leaf directory (avm.py:28-34). Leaf: J2 index-aligned link<->date
+    join — the index is the join key, so the 1:1 ordering assumption of
+    avm.py:37-40 holds exactly (misalignment when a row lacks a date is
+    reproduced, not fixed)."""
+    leaf_dir = V.url_path_part_col(F.col("url"), 1)
+    device = V.url_path_part_col(F.col("url"), 3)
+    dates = F.filter(F.transform(F.col("parsed.pre_texts"), V.avm_listing_date_col),
+                     lambda d: d.isNotNull())
+    files = F.transform(F.filter(F.col("parsed.hrefs"), lambda h: ~h.startswith("..")),
+                        _join)
+    versions = V.avm_versions_col(F.transform(files, V.url_basename_col), device)
+    cls = F.coalesce(  # device == the url's path part 3
+        _class_case(AVM_DEVICE_CLASSES, "element_at(split(url, '/'), -4)"),
+        F.lit("Router"))
+    items = _keep(
+        F.arrays_zip(files.alias("f"), versions.alias("v")),
+        lambda z, i: F.when(z["f"].endswith(".image"), _item(
+            "AVM", device, z["v"], cls, F.get(dates, i), z["f"])),
+    )
+    return dict(
+        children=F.when(leaf_dir != "fritz.os",
+                        _avm_links(("recover", ".."), "avm:parse_product")),
+        items=F.when(leaf_dir == "fritz.os", items),
+    )
+
+
+# ---------------------------------------------------------------------------
+# Linksys (linksys.py)
+# ---------------------------------------------------------------------------
+
+def linksys_parse():
+    """Sitemap: positional zip join of product hrefs x device names
+    (linksys.py:68-72, J1) — lineage carries device_name downstream (J6)."""
+    anchors = F.filter(
+        _anchors(),
+        lambda a: F.array_contains(a["div_classes"], "item") & a["href"].isNotNull(),
+    )
+    return dict(children=F.transform(anchors, lambda a, i: _child(
+        _join(a["href"]), "linksys:parse_product", i,
+        F.create_map(F.lit("device_name"), a["text"]))))
+
+
+def linksys_parse_product():
+    """First 'Download Software' anchor -> versions page (linksys.py:74-78,
+    W2 first-match-in-list via element_at(filter(...), 1))."""
+    href = _first(F.filter(
+        _anchors(),
+        lambda a: F.array_contains(a["div_classes"], "support-downloads")
+        & (a["title"] == "Download Software") & a["href"].isNotNull(),
+    ))["href"]
+    return dict(children=_opt(href.isNotNull(), _child(
+        _join(href), "linksys:parse_versions", 0)))
+
+
+def linksys_parse_versions():
+    """Accordion blocks -> firmware items (linksys.py:80-124): line-scoped
+    Ver..href span regex, extension predicate, scalar rule pack, and the
+    per-block PRODUCT_DICTIONARIES dedup (A1) as array_distinct over
+    (block, item)."""
+    blocks = F.transform(
+        F.filter(
+            F.col("parsed.divs"),
+            lambda d: F.array_contains(d["classes"], "article-accordian-content")
+            & (d["parent_id"] == "support-article-downloads"),
+        ),
+        lambda d: d["html"],
+    )
+    spans = _flat(blocks, lambda b, bi: F.transform(
+        F.filter(F.regexp_extract_all(b, F.lit(r'Ver.+href=".+(?:bin|img)"'), F.lit(0)),
+                 lambda fw: fw.rlike(r"(\.img|\.bin)")),
+        lambda fw: F.struct(bi.alias("b"), fw.alias("fw"))))
+    device = F.col("lineage")["device_name"]
+    cls = _class_case(LINKSYS_DEVICE_CLASSES, "lineage['device_name']")
+    items = F.array_distinct(F.transform(spans, lambda s: F.struct(
+        s["b"].alias("b"),
+        _item("Linksys", device, V.linksys_version_col(s["fw"]), cls,
+              V.linksys_date_col(s["fw"]), V.linksys_file_url_col(s["fw"])).alias("i"))))
+    # J3 class-map miss: the reference raises UnknownDeviceClassException
+    # (linksys.py:126-133), which scrapy logs and drops. The engine routes
+    # the offending page to the auditable quarantine table instead of
+    # silently losing it (schema: CrawlEngine.quarantine()).
+    quarantine = F.array_distinct(F.transform(spans, lambda s: F.struct(
+        F.lit("linksys:parse_versions"), F.lit("unknown_device_class"), device)))
+    return dict(
+        items=F.when(cls.isNotNull(), F.transform(items, lambda d: d["i"])),
+        quarantine=F.when(cls.isNull(), quarantine),
+    )
+
+
 # ---------------------------------------------------------------------------
 # TP-Link retail (tplink.py)
 # ---------------------------------------------------------------------------
 
-def tplink_parse(fetched: DataFrame):
+def tplink_parse():
     prods = F.filter(
         _anchors(),
         lambda a: F.array_contains(a["classes"], "tp-product-link") & a["href"].isNotNull(),
@@ -68,19 +245,12 @@ def tplink_parse(fetched: DataFrame):
         & F.array_contains(a["li_classes"], "tp-product-pagination-item")
         & a["href"].isNotNull(),
     )
-    c1 = fetched.select(
-        "url", "depth", "seq", "lineage", F.posexplode(prods).alias("pos", "a")
-    ).withColumn("child_url", U.url_join_col(F.col("url"), F.col("a.href")))
-    c2 = fetched.select(
-        "url", "depth", "seq", "lineage", F.size(prods).alias("_off"),
-        F.posexplode(pages).alias("pos", "a"),
-    ).withColumn("pos", F.col("pos") + F.col("_off")).withColumn(
-        "child_url", U.url_join_col(F.col("url"), F.col("a.href"))
-    )
-    children = _children(c1, "tplink:parse_product").unionByName(
-        _children(c2, "tplink:parse")
-    )
-    return children, None
+    return dict(children=F.concat(
+        F.transform(prods, lambda a, i: _child(
+            _join(a["href"]), "tplink:parse_product", i)),
+        F.transform(pages, lambda a, i: _child(
+            _join(a["href"]), "tplink:parse", i + F.size(prods))),
+    ))
 
 
 def _tplink_class_from_url(url):
@@ -96,7 +266,7 @@ def _tplink_class_from_url(url):
     )
 
 
-def tplink_parse_product(fetched: DataFrame):
+def tplink_parse_product():
     name = _text_of("h2", "product-name")
     support = _first(
         F.filter(
@@ -105,26 +275,21 @@ def tplink_parse_product(fetched: DataFrame):
             & a["class_attr"].contains("support") & a["href"].isNotNull(),
         )
     )["href"]
-    hit = fetched.select(
-        "url", "depth", "seq", name.alias("name"), support.alias("href")
-    ).filter(F.col("name").isNotNull() & F.col("href").isNotNull())
-    joined = hit.withColumn(
-        "child_url", U.url_join_col(F.col("url"), F.col("href"))
-    ).withColumn("pos", F.lit(0))
     lineage = F.create_map(
-        F.lit("device_name"), F.col("name"),
+        F.lit("device_name"), name,
         F.lit("device_class"), _tplink_class_from_url(F.col("url")),
     )
-    return _children(joined, "tplink:parse_firmware", lineage), None
+    return dict(children=_opt(name.isNotNull() & support.isNotNull(), _child(
+        _join(support), "tplink:parse_firmware", 0, lineage)))
 
 
-def tplink_parse_firmware(fetched: DataFrame):
+def tplink_parse_firmware():
     first_basic = _first(
         F.filter(_rows(), lambda r: F.array_contains(r["tr_classes"], "basic-info"))
     )
-    file_href = _first(
+    file_url = _join(_first(
         F.flatten(F.transform(first_basic["cells"], lambda c: c["classed_hrefs"]))
-    )
+    ))
     version = _text_of("span", "verison-hidden", by_id=True)
     first_detail = _first(
         F.filter(_rows(), lambda r: F.array_contains(r["tr_classes"], "detail-info"))
@@ -133,129 +298,90 @@ def tplink_parse_firmware(fetched: DataFrame):
         _first(first_detail["cells"])["span_first_texts"], F.lit(2)
     )
     device = F.col("lineage")["device_name"]
-    base = fetched.select(
-        "url", device.alias("device_name"),
-        F.col("lineage")["device_class"].alias("device_class"),
-        U.url_join_col(F.col("url"), file_href).alias("file_url"),
-        version.alias("v_raw"), date_raw.alias("d_raw"),
-    ).filter(
-        F.col("device_name").isNotNull() & F.col("device_class").isNotNull()
-        & F.col("file_url").isNotNull() & F.col("v_raw").isNotNull()
-        & F.col("d_raw").isNotNull()  # F7: reference raises ValueError
-    )
-    items = base.select(
-        F.lit("TP-Link").alias("vendor"),
-        "device_name",
-        F.trim(F.replace(F.col("v_raw"), F.col("device_name"), F.lit(""))).alias(
-            "firmware_version"),
-        "device_class",
-        F.date_format(F.try_to_date(F.trim("d_raw"), "yyyy-MM-dd"), "dd-MM-yyyy").alias(
-            "release_date"),
-        "file_url",
-    )
-    return None, _wrap_items(items)
+    cls = F.col("lineage")["device_class"]
+    found = (device.isNotNull() & cls.isNotNull() & file_url.isNotNull()
+             & version.isNotNull()
+             & date_raw.isNotNull())  # F7: reference raises ValueError
+    return dict(items=_opt(found, _item(
+        "TP-Link", device, F.trim(F.replace(version, device, F.lit(""))), cls,
+        F.date_format(F.try_to_date(F.trim(date_raw), "yyyy-MM-dd"), "dd-MM-yyyy"),
+        file_url)))
 
 
 # ---------------------------------------------------------------------------
 # Netgear GPL (netgear_gpl.py) — bold-paragraph zip join, exact-member whitelist
 # ---------------------------------------------------------------------------
 
-def netgear_parse(fetched: DataFrame):
+def netgear_parse():
     wl = F.array(*[F.lit(w) for w in NETGEAR_WHITELIST])
-    paras = fetched.select(
-        "url", F.explode("parsed.paras").alias("p")
-    ).filter(F.arrays_overlap(F.col("p.bold_texts"), wl))
-    zipped = paras.select(
-        "url", F.col("p.bold_texts").alias("device_name_list"),
-        F.explode(F.arrays_zip("p.a_texts", "p.a_hrefs")).alias("z"),
-    )
-    items = zipped.select(
-        F.array(F.lit("Netgear")).alias("vendor"),
-        F.col("device_name_list").alias("device_name"),  # list-valued (J1 quirk)
-        F.array(F.col("z.a_texts")).alias("firmware_version"),
-        F.array(F.lit("-")).alias("device_class"),
-        F.array(F.lit("01-01-1970")).alias("release_date"),
-        F.array(F.col("z.a_hrefs")).alias("file_urls"),
-    )
-    return None, items
+    paras = F.filter(F.col("parsed.paras"),
+                     lambda p: F.arrays_overlap(p["bold_texts"], wl))
+    return dict(items=_flat(paras, lambda p: F.transform(
+        F.arrays_zip(p["a_texts"].alias("t"), p["a_hrefs"].alias("h")),
+        lambda z: F.struct(
+            F.array(F.lit("Netgear")),
+            p["bold_texts"],  # list-valued device_name (J1 quirk)
+            F.array(z["t"]), F.array(F.lit("-")), F.array(F.lit("01-01-1970")),
+            F.array(z["h"])))))
 
 
 # ---------------------------------------------------------------------------
 # Linksys GPL (linksys_gpl.py) — 2/3-column table with device carry-over (X19)
 # ---------------------------------------------------------------------------
 
-def linksys_gpl_parse(fetched: DataFrame):
-    rows = fetched.select(
-        "url", F.posexplode(_rows()).alias("pos", "row")
-    ).filter(F.col("pos") >= 1)  # header skip, W3
-    rows = rows.filter(F.size("row.cells").isin(2, 3))
-    dev_arr = F.when(F.size("row.cells") == 3, F.col("row.cells")[0]["texts"])
-    w = Window.partitionBy("url").orderBy("pos")
-    carried = rows.withColumn(
-        "devices", F.last(dev_arr, ignorenulls=True).over(w)
-    )
-    offset = F.when(F.size("row.cells") == 3, 1).otherwise(0)
-    staged = carried.select(
-        "url",
-        F.trim(F.array_join(F.get(F.col("row.cells"), offset)["texts"], "")).alias("version"),
-        F.trim(F.array_join(F.get(F.col("row.cells"), offset + 1)["hrefs"], "")).alias("link"),
-        F.explode("devices").alias("device"),
-    )
-    wl_cond = F.lit(False)
-    for wlw in LINKSYS_GPL_WHITELIST:
-        wl_cond = wl_cond | F.col("device").contains(wlw)  # substring whitelist
-    items = staged.filter(wl_cond).select(
-        F.lit("Linksys").alias("vendor"),
-        F.trim("device").alias("device_name"),
-        F.col("version").alias("firmware_version"),
-        F.lit("-").alias("device_class"),
-        F.lit("01-01-1970").alias("release_date"),
-        F.col("link").alias("file_url"),
-    )
-    return None, _wrap_items(items)
+def linksys_gpl_parse():
+    # device carry-over: a row's devices are the first-cell texts of the
+    # latest 3-cell row at or above it, header (row 0, W3) excluded
+    heads = F.transform(_rows(), lambda r, i: F.when(
+        (i >= 1) & (F.size(r["cells"]) == 3), F.get(r["cells"], 0)["texts"]))
+
+    def row_items(r, i):
+        cells = r["cells"]
+        devices = F.try_element_at(
+            F.filter(F.slice(heads, 1, i + 1), lambda d: d.isNotNull()), F.lit(-1))
+        offset = F.when(F.size(cells) == 3, 1).otherwise(0)
+        version = F.trim(F.array_join(F.get(cells, offset)["texts"], ""))
+        link = F.trim(F.array_join(F.get(cells, offset + 1)["hrefs"], ""))
+
+        def listed(d):  # substring whitelist
+            cond = F.lit(False)
+            for w in LINKSYS_GPL_WHITELIST:
+                cond = cond | d.contains(w)
+            return cond
+
+        return F.when((i >= 1) & F.size(cells).isin(2, 3), F.transform(
+            F.filter(devices, listed),
+            lambda d: _item("Linksys", F.trim(d), version, "-", "01-01-1970", link)))
+
+    return dict(items=_flat(_rows(), row_items))
 
 
 # ---------------------------------------------------------------------------
 # TP-Link GPL (tplink_gpl.py)
 # ---------------------------------------------------------------------------
 
-def _tplink_gpl_scoped():
-    return F.filter(
+def tplink_gpl_parse():
+    scoped = F.filter(
         _anchors(),
         lambda a: F.array_contains(a["classes"], "ga-click") & a["href"].isNotNull()
         & F.array_contains(a["div_classes"], "data-wi-fi-routers")
         & F.array_contains(a["div_classes"], "item-box"),
     )
-
-
-def tplink_gpl_parse(fetched: DataFrame):
-    scoped = _tplink_gpl_scoped()
     ddl = F.filter(scoped, lambda a: a["href"].contains("static"))
     multi = F.filter(scoped, lambda a: ~a["href"].contains("static"))
-
-    items = fetched.select("url", F.explode(ddl).alias("a")).select(
-        F.lit("TP-Link").alias("vendor"),
-        F.trim(F.col("a.text")).alias("device_name"),
-        F.lit("0.0").alias("firmware_version"),
-        F.lit("Router").alias("device_class"),
-        F.lit("01/01/1970").alias("release_date"),
-        F.trim(F.col("a.href")).alias("file_url"),
+    return dict(
+        children=F.transform(multi, lambda a, i: _child(
+            F.concat(F.lit("https://www.tp-link.com/phppage/gpl-res-list.html"),
+                     F.trim(a["href"]), F.lit("&appPath=de")),
+            "tplink_gpl:parse_multi", i,
+            F.create_map(F.lit("device"), F.trim(a["text"])))),
+        items=F.transform(ddl, lambda a: _item(
+            "TP-Link", F.trim(a["text"]), "0.0", "Router", "01/01/1970",
+            F.trim(a["href"]))),
     )
 
-    kids = fetched.select(
-        "url", "depth", "seq", F.posexplode(multi).alias("pos", "a")
-    ).withColumn(
-        "child_url",
-        F.concat(
-            F.lit("https://www.tp-link.com/phppage/gpl-res-list.html"),
-            F.trim(F.col("a.href")), F.lit("&appPath=de"),
-        ),
-    )
-    lineage = F.create_map(F.lit("device"), F.trim(F.col("a.text")))
-    return _children(kids, "tplink_gpl:parse_multi", lineage), _wrap_items(items)
 
-
-def tplink_gpl_parse_multi(fetched: DataFrame):
+def tplink_gpl_parse_multi():
     versions = F.flatten(
         F.transform(
             _rows(),
@@ -279,19 +405,11 @@ def tplink_gpl_parse_multi(fetched: DataFrame):
         ),
         lambda a: a["href"],
     )
-    zipped = fetched.select(
-        "url", F.col("lineage")["device"].alias("device"),
-        F.explode(F.arrays_zip(versions.alias("v"), links.alias("l"))).alias("z"),
-    ).filter(F.col("z.v").isNotNull() & F.col("z.l").isNotNull())
-    items = zipped.select(
-        F.lit("TP-Link").alias("vendor"),
-        F.col("device").alias("device_name"),
-        F.trim("z.v").alias("firmware_version"),
-        F.lit("Router").alias("device_class"),
-        F.lit("01/01/1970").alias("release_date"),
-        F.trim("z.l").alias("file_url"),
-    )
-    return None, _wrap_items(items)
+    return dict(items=_keep(
+        F.arrays_zip(versions.alias("v"), links.alias("l")),
+        lambda z: F.when(z["v"].isNotNull() & z["l"].isNotNull(), _item(
+            "TP-Link", F.col("lineage")["device"], F.trim(z["v"]), "Router",
+            "01/01/1970", F.trim(z["l"])))))
 
 
 # ---------------------------------------------------------------------------
@@ -301,7 +419,7 @@ def tplink_gpl_parse_multi(fetched: DataFrame):
 ASUS_URL_RE = r'"url": "(https://[\w\d\-\_\./]+)"'
 
 
-def asus_parse(fetched: DataFrame):
+def asus_parse():
     redirects = F.filter(
         F.array_distinct(  # keeps first occurrence — A2 pin
             F.flatten(
@@ -313,13 +431,11 @@ def asus_parse(fetched: DataFrame):
         ),
         lambda u: u.endswith("/"),
     )
-    kids = fetched.select(
-        "url", "depth", "seq", "lineage", F.posexplode(redirects).alias("pos", "u")
-    ).withColumn("child_url", F.concat(F.col("u"), F.lit("HelpDesk_BIOS/")))
-    return _children(kids, "asus:parse_firmware"), None
+    return dict(children=F.transform(redirects, lambda u, i: _child(
+        F.concat(u, F.lit("HelpDesk_BIOS/")), "asus:parse_firmware", i)))
 
 
-def asus_parse_firmware(fetched: DataFrame):
+def asus_parse_firmware():
     name = _text_of("h1", "productTitle")
     version = _text_of("div", "ProductSupportDriverBIOS__version")
     date = _text_of("div", "ProductSupportDriverBIOS__releaseDate")
@@ -333,61 +449,51 @@ def asus_parse_firmware(fetched: DataFrame):
         )
     )["href"]
     class_map = F.create_map(*[F.lit(x) for kv in ASUS_DEVICE_DICT.items() for x in kv])
-    base = fetched.select(
-        name.alias("device_name"), version.alias("v"), date.alias("d"),
-        file_url.alias("file_url"),
-    ).filter(F.col("file_url").isNotNull())  # asus.py:60-61
-    items = base.select(
-        F.lit("asus").alias("vendor"),
-        "device_name",
-        F.trim(F.replace(F.col("v"), F.lit("Version"), F.lit(""))).alias("firmware_version"),
-        F.element_at(class_map, F.lower(F.substring("device_name", 1, 2))).alias(
-            "device_class"),
-        F.date_format(F.try_to_date(F.trim("d"), "yyyy/MM/dd"), "yyyy-MM-dd").alias(
-            "release_date"),
-        "file_url",
-    )
-    return None, _wrap_items(items)
+    return dict(items=_opt(file_url.isNotNull(), _item(  # asus.py:60-61
+        "asus", name,
+        F.trim(F.replace(version, F.lit("Version"), F.lit(""))),
+        F.element_at(class_map, F.lower(F.substring(name, 1, 2))),
+        F.date_format(F.try_to_date(F.trim(date), "yyyy/MM/dd"), "yyyy-MM-dd"),
+        file_url)))
 
 
 # ---------------------------------------------------------------------------
 # HP (hp.py) — table walk with lineage carry (X19/J6), multi-file items
 # ---------------------------------------------------------------------------
 
-def hp_parse(fetched: DataFrame):
+def hp_parse():
     candidates = F.filter(
         _rows(),
         lambda r: (F.size(r["cells"]) >= 5)
         & (F.size(F.get(r["cells"], 4)["hrefs"]) > 0),
     )
-    rows = fetched.select(
-        "url", "depth", "seq", F.posexplode(candidates).alias("pos", "row")
-    )
-    next_url = _first(F.get(F.col("row.cells"), 4)["hrefs"])
-    fixed = F.when(
-        ~next_url.contains("http://"), F.concat(F.lit("http://"), next_url)
-    ).otherwise(next_url)  # hp.py:24-25 quirk preserved
-    raw_date = F.get(F.col("row.cells"), 3)["direct_text"]
-    date = F.when(
-        F.length(raw_date) == 4,
-        F.date_format(F.try_to_date(raw_date, "yyyy"), "yyyy-MM-dd"),
-    ).otherwise(F.date_format(F.try_to_date(raw_date, "yyyyMMdd"), "yyyy-MM-dd"))
-    device = F.regexp_extract(
-        F.concat(F.lit("<div>"), F.get(F.col("row.cells"), 0)["inner_html"],
-                 F.lit("</div>")),
-        r"</a> ?(.*?)</div>", 1,
-    )
-    staged = rows.withColumn("child_url", fixed)
-    lineage = F.create_map(
-        F.lit("device_name"), device,
-        F.lit("device_class"), F.lit("Printer"),
-        F.lit("firmware_version"), F.get(F.col("row.cells"), 2)["direct_text"],
-        F.lit("release_date"), date,
-    )
-    return _children(staged, "hp:parse_firmware", lineage), None
+
+    def kid(r, i):
+        cells = r["cells"]
+        next_url = _first(F.get(cells, 4)["hrefs"])
+        fixed = F.when(
+            ~next_url.contains("http://"), F.concat(F.lit("http://"), next_url)
+        ).otherwise(next_url)  # hp.py:24-25 quirk preserved
+        raw_date = F.get(cells, 3)["direct_text"]
+        date = F.when(
+            F.length(raw_date) == 4,
+            F.date_format(F.try_to_date(raw_date, "yyyy"), "yyyy-MM-dd"),
+        ).otherwise(F.date_format(F.try_to_date(raw_date, "yyyyMMdd"), "yyyy-MM-dd"))
+        device = F.regexp_extract(
+            F.concat(F.lit("<div>"), F.get(cells, 0)["inner_html"], F.lit("</div>")),
+            r"</a> ?(.*?)</div>", 1,
+        )
+        return _child(fixed, "hp:parse_firmware", i, F.create_map(
+            F.lit("device_name"), device,
+            F.lit("device_class"), F.lit("Printer"),
+            F.lit("firmware_version"), F.get(cells, 2)["direct_text"],
+            F.lit("release_date"), date,
+        ))
+
+    return dict(children=F.transform(candidates, kid))
 
 
-def hp_parse_firmware(fetched: DataFrame):
+def hp_parse_firmware():
     file_urls = F.transform(
         F.filter(
             _anchors(),
@@ -396,15 +502,12 @@ def hp_parse_firmware(fetched: DataFrame):
         ),
         lambda a: a["href"],
     )
-    items = fetched.select(
-        F.array(F.lit("HP")).alias("vendor"),
-        F.array(F.col("lineage")["device_name"]).alias("device_name"),
-        F.array(F.col("lineage")["firmware_version"]).alias("firmware_version"),
-        F.array(F.col("lineage")["device_class"]).alias("device_class"),
-        F.array(F.col("lineage")["release_date"]).alias("release_date"),
-        file_urls.alias("file_urls"),
-    )
-    return None, items
+    lineage = F.col("lineage")
+    return dict(items=F.array(F.struct(
+        F.array(F.lit("HP")),
+        *[F.array(lineage[k]) for k in (
+            "device_name", "firmware_version", "device_class", "release_date")],
+        file_urls)))
 
 
 # ---------------------------------------------------------------------------
@@ -420,36 +523,21 @@ def _form_map(d: dict, **dynamic):
     return F.create_map(*args)
 
 
-def dlink_parse(fetched: DataFrame):
+def dlink_parse():
     devices = F.filter(
         _anchors(),
         lambda a: F.array_contains(a["td_classes"], "pord_3") & a["title"].isNotNull(),
     )
-    dev_rows = fetched.select(
-        "url", "depth", "seq", F.size(devices).alias("_n"),
-        F.posexplode(devices).alias("pos", "a"),
-    ).withColumn("product", F.get(F.split("a.title", "-", 2), 0)).withColumn(
-        "model", F.get(F.split("a.title", "-", 2), 1)
-    )
-    detail_form = _form_map(
-        dict(Enter="OK", ModelCategory="0", ModelSno="", Model_Sno="", OS="GPL"),
-        ModelCategory_=F.col("product"), ModelSno_=F.col("model"),
-    )
-    # built inline (not via _children): the form_data map depends on
-    # product/model columns that _children's projection would drop
-    kids1 = (
-        dev_rows.withColumn("child_url", F.lit(VN.DLINK_DETAIL_URL))
-        .select(
-            F.col("child_url").alias("url"),
-            F.lit("dlink_gpl:detail").alias("rule"),
-            F.create_map(F.lit("product"), F.col("product"),
-                         F.lit("model"), F.col("model")).alias("lineage"),
-            F.col("pos").cast("int").alias("pos"),
-            (F.col("depth") + 1).alias("depth"),
-            F.col("seq").alias("parent_seq"),
-            detail_form.alias("form_data"),
-        )
-    )
+
+    def detail(a, i):
+        product = F.get(F.split(a["title"], "-", 2), 0)
+        model = F.get(F.split(a["title"], "-", 2), 1)
+        return _child(
+            VN.DLINK_DETAIL_URL, "dlink_gpl:detail", i,
+            F.create_map(F.lit("product"), product, F.lit("model"), model),
+            _form_map(dict(Enter="OK", ModelCategory="0", ModelSno="",
+                           Model_Sno="", OS="GPL"),
+                      ModelCategory_=product, ModelSno_=model))
 
     cells_flat = F.flatten(F.transform(_rows(), lambda r: r["cells"]))
     pag_cells = F.filter(
@@ -461,71 +549,46 @@ def dlink_parse(fetched: DataFrame):
     )["value"].cast("int")
     g1 = F.regexp_extract(pag_text, r"^\((\d+)\s\/\s(\d+)\)$", 1).try_cast("int")
     g2 = F.regexp_extract(pag_text, r"^\((\d+)\s\/\s(\d+)\)$", 2).try_cast("int")
-    pager = fetched.select(
-        "url", "depth", "seq",
-        F.size(devices).alias("pos"),
-        current.alias("cur"), g1.alias("g1"), g2.alias("g2"),
-    ).filter(
-        F.col("cur").isNotNull() & F.col("g1").isNotNull()
-        & (F.col("cur") == F.col("g1")) & (F.col("cur") < F.col("g2"))
-    )
-    next_form = _form_map(
-        dict(Enter="OK", ModelCategory="0", ModelSno="0", ModelCategory_="",
-             ModelSno_="", search_string="", ModelVer="", Model_Sno="", OS="GPL"),
-        sel_PageNo=(F.col("cur") + 1).cast("string"),
-    )
-    kids2 = pager.select(
-        F.lit(VN.DLINK_PAGE_URL).alias("url"),
-        F.lit("dlink_gpl:parse").alias("rule"),
-        F.create_map().cast("map<string,string>").alias("lineage"),
-        F.col("pos").cast("int").alias("pos"),
-        (F.col("depth") + 1).alias("depth"),
-        F.col("seq").alias("parent_seq"),
-        next_form.alias("form_data"),
-    )
-    return kids1.unionByName(kids2), None
+    has_next = (current.isNotNull() & g1.isNotNull() & (current == g1)
+                & (current < g2))
+    next_page = _child(
+        VN.DLINK_PAGE_URL, "dlink_gpl:parse", F.size(devices),
+        F.create_map().cast("map<string,string>"),
+        _form_map(dict(Enter="OK", ModelCategory="0", ModelSno="0",
+                       ModelCategory_="", ModelSno_="", search_string="",
+                       ModelVer="", Model_Sno="", OS="GPL"),
+                  sel_PageNo=(current + 1).cast("string")))
+    return dict(children=F.concat(F.transform(devices, detail),
+                                  _opt(has_next, next_page)))
 
 
-def dlink_detail(fetched: DataFrame):
+def dlink_detail():
     fw_rows = F.filter(
         _rows(),
         lambda r: r["onclick"].isNotNull()
         & r["onclick"].rlike(r"^dwn\('([A-Z]+)',['\da-zA-Z]+\)$"),
     )
-    staged = fetched.select(
-        "url", "depth", "seq",
-        F.col("lineage")["product"].alias("product"),
-        F.col("lineage")["model"].alias("model"),
-        F.posexplode(fw_rows).alias("pos", "row"),
-    )
-    identifier = F.regexp_extract(
-        F.col("row.onclick"), r"^dwn\('([A-Z]+)',['\da-zA-Z]+\)$", 1
-    )
-    desc = F.trim(_first(F.get(F.col("row.cells"), 1)["texts"]))
-    vraw = F.regexp_extract(desc, r"FW\sv(\d+\..+)", 1)
-    version = F.when(vraw == "", "0.0").otherwise(vraw)
-    file_form = _form_map(
-        dict(Enter="OK", ModelCategory="0", ModelSno="0", Model_Sno="",
-             ModelVer="", docuSource="1"),
-        ModelCategory_=F.col("product"), ModelSno_=F.col("model"),
-        docuSno=identifier,
-    )
-    kids = staged.select(
-        F.lit(VN.DLINK_DDGO_URL).alias("url"),
-        F.lit("dlink_gpl:download").alias("rule"),
-        F.create_map(
-            F.lit("product"), F.col("product"), F.lit("model"), F.col("model"),
-            F.lit("version"), version,
-        ).alias("lineage"),
-        F.col("pos").cast("int").alias("pos"),
-        (F.col("depth") + 1).alias("depth"),
-        F.col("seq").alias("parent_seq"),
-        file_form.alias("form_data"),
-    )
-    return kids, None
+    product = F.col("lineage")["product"]
+    model = F.col("lineage")["model"]
+
+    def kid(r, i):
+        identifier = F.regexp_extract(r["onclick"], r"^dwn\('([A-Z]+)',['\da-zA-Z]+\)$", 1)
+        desc = F.trim(_first(F.get(r["cells"], 1)["texts"]))
+        vraw = F.regexp_extract(desc, r"FW\sv(\d+\..+)", 1)
+        version = F.when(vraw == "", "0.0").otherwise(vraw)
+        return _child(
+            VN.DLINK_DDGO_URL, "dlink_gpl:download", i,
+            F.create_map(F.lit("product"), product, F.lit("model"), model,
+                         F.lit("version"), version),
+            _form_map(dict(Enter="OK", ModelCategory="0", ModelSno="0",
+                           Model_Sno="", ModelVer="", docuSource="1"),
+                      ModelCategory_=product, ModelSno_=model,
+                      docuSno=identifier))
+
+    return dict(children=F.transform(fw_rows, kid))
 
 
-def dlink_download(fetched: DataFrame):
+def dlink_download():
     tds = F.filter(
         F.flatten(F.transform(_rows(), lambda r: r["cells"])),
         lambda c: F.array_contains(c["td_classes"], "MdDclist12"),
@@ -537,23 +600,11 @@ def dlink_download(fetched: DataFrame):
         )
     )
     date = F.trim(_first(F.try_element_at(tds, F.lit(4))["texts"]))
-    base = fetched.select(
-        F.col("lineage")["product"].alias("product"),
-        F.col("lineage")["model"].alias("model"),
-        F.col("lineage")["version"].alias("version"),
-        link.alias("file_url"), date.alias("d"),
-        F.size(tds).alias("_n"),
-    ).filter((F.col("_n") >= 4) & F.col("file_url").isNotNull())
-    items = base.select(
-        F.lit("D-Link").alias("vendor"),
-        F.concat("product", F.lit("-"), "model").alias("device_name"),
-        F.col("version").alias("firmware_version"),
-        F.lit("-").alias("device_class"),
-        F.date_format(F.try_to_date("d", "yyyy/MM/dd"), "dd-MM-yyyy").alias(
-            "release_date"),
-        "file_url",
-    )
-    return None, _wrap_items(items)
+    lineage = F.col("lineage")
+    return dict(items=_opt((F.size(tds) >= 4) & link.isNotNull(), _item(
+        "D-Link", F.concat(lineage["product"], F.lit("-"), lineage["model"]),
+        lineage["version"], "-",
+        F.date_format(F.try_to_date(date, "yyyy/MM/dd"), "dd-MM-yyyy"), link)))
 
 
 # ---------------------------------------------------------------------------
@@ -568,125 +619,54 @@ def _ftp_entries_col():
     return F.slice(arr, 4, F.greatest(F.size(arr) - 3, F.lit(0)))  # skip 3 (W3)
 
 
-def ftp_root(fetched: DataFrame):
+def _ftp_dirs(entries, rule: str, lineage=None) -> Column:
+    return F.transform(entries, lambda e, i: _child(
+        F.concat(F.col("url"), e["name"], F.lit("/")), rule, i,
+        None if lineage is None else lineage(e)))
+
+
+def ftp_root():
     skip = F.array(*[F.lit(x) for x in sorted(FTP_SKIPPED)])
     dirs = F.filter(
         _ftp_entries_col(),
         lambda e: (e["type"] == "dir") & ~F.array_contains(skip, e["name"]),
     )
-    kids = fetched.select(
-        "url", "depth", "seq", "lineage", F.posexplode(dirs).alias("pos", "e")
-    ).withColumn("child_url", F.concat("url", F.col("e.name"), F.lit("/")))
-    return _children(kids, "dlink_ftp:family"), None
+    return dict(children=_ftp_dirs(dirs, "dlink_ftp:family"))
 
 
-def ftp_family(fetched: DataFrame):
+def ftp_family():
     dirs = F.filter(_ftp_entries_col(), lambda e: e["type"] == "dir")
-    kids = fetched.select(
-        "url", "depth", "seq", F.posexplode(dirs).alias("pos", "e")
-    ).withColumn("child_url", F.concat("url", F.col("e.name"), F.lit("/")))
-    lineage = F.create_map(F.lit("device_name"), F.col("e.name"))
-    return _children(kids, "dlink_ftp:device", lineage), None
+    return dict(children=_ftp_dirs(
+        dirs, "dlink_ftp:device",
+        lambda e: F.create_map(F.lit("device_name"), e["name"])))
 
 
-def ftp_device(fetched: DataFrame):
+def ftp_device():
     hits = F.filter(_ftp_entries_col(), lambda e: e["name"] == "driver_software")
-    kids = fetched.select(
-        "url", "depth", "seq", "lineage", F.posexplode(hits).alias("pos", "e")
-    ).withColumn("child_url", F.concat("url", F.lit("driver_software/")))
-    return _children(kids, "dlink_ftp:files"), None
+    return dict(children=_ftp_dirs(hits, "dlink_ftp:files"))
 
 
-def ftp_files(fetched: DataFrame):
+def ftp_files():
     fw = F.filter(
         _ftp_entries_col(),
         lambda e: e["name"].rlike("zip$") & e["name"].contains("_fw_"),
     )
-    staged = fetched.select(
-        "url", F.col("lineage")["device_name"].alias("device_name"),
-        F.explode(fw).alias("e"),
-    )
-    version = F.try_element_at(F.split("e.name", "_"), F.lit(4))
-    epoch = F.unix_timestamp(
-        F.try_to_timestamp(F.col("e.modify"), F.lit("yyyyMMddHHmmss"))
-    ).cast("double")
-    initials = F.get(F.split("device_name", "-"), 0)
+    device = F.col("lineage")["device_name"]
+    initials = F.get(F.split(device, "-"), 0)
     class_map = F.create_map(*[F.lit(x) for kv in FTP_DEVICE_CLASSES.items() for x in kv])
     base_class = F.element_at(class_map, initials)
     device_class = F.when(
-        (initials == "dwl") & F.col("device_name").contains("ap") & base_class.isNotNull(),
+        (initials == "dwl") & device.contains("ap") & base_class.isNotNull(),
         F.lit("Access Point"),
     ).otherwise(base_class)
-    items = staged.select(
-        F.lit("D-Link").alias("vendor"),
-        "device_name",
-        version.alias("firmware_version"),
-        device_class.alias("device_class"),
-        F.format_string("%.1f", epoch).alias("release_date"),
-        F.concat("url", F.col("e.name")).alias("file_url"),
-    )
-    return None, _wrap_items(items)
 
+    def item(e):
+        epoch = F.unix_timestamp(
+            F.try_to_timestamp(e["modify"], F.lit("yyyyMMddHHmmss"))
+        ).cast("double")
+        return _item(
+            "D-Link", device, F.try_element_at(F.split(e["name"], "_"), F.lit(4)),
+            device_class, F.format_string("%.1f", epoch),
+            F.concat(F.col("url"), e["name"]))
 
-VENDOR_RULES = {
-    "tplink:parse": tplink_parse,
-    "tplink:parse_product": tplink_parse_product,
-    "tplink:parse_firmware": tplink_parse_firmware,
-    "netgear_gpl:parse": netgear_parse,
-    "linksys_gpl:parse": linksys_gpl_parse,
-    "tplink_gpl:parse": tplink_gpl_parse,
-    "tplink_gpl:parse_multi": tplink_gpl_parse_multi,
-    "asus:parse": asus_parse,
-    "asus:parse_firmware": asus_parse_firmware,
-    "hp:parse": hp_parse,
-    "hp:parse_firmware": hp_parse_firmware,
-    "dlink_gpl:parse": dlink_parse,
-    "dlink_gpl:detail": dlink_detail,
-    "dlink_gpl:download": dlink_download,
-    "dlink_ftp:root": ftp_root,
-    "dlink_ftp:family": ftp_family,
-    "dlink_ftp:device": ftp_device,
-    "dlink_ftp:files": ftp_files,
-}
-
-# PAGE_STRUCT fields each vendor rule actually reads from `parsed` —
-# merged into rulepacks.RULE_PARSE_FIELDS so the parse UDF trims its
-# per-row output for vendor pages too (round-6 audit, one entry per
-# `parsed.` / helper reference in the functions above). The dlink_ftp
-# rules consume the raw `html` JSON listing via from_json and never read
-# `parsed` at all: their empty tuple skips the HTML parse entirely.
-# Forgetting a field a rule reads breaks the vendor parity suite
-# (tests/test_crawl_vendors.py runs these rules through the full
-# engine), never silently.
-VENDOR_PARSE_FIELDS = {
-    "tplink:parse": ("anchors",),
-    "tplink:parse_product": ("anchors", "texts"),
-    "tplink:parse_firmware": ("rows", "texts"),
-    "netgear_gpl:parse": ("paras",),
-    "linksys_gpl:parse": ("rows",),
-    "tplink_gpl:parse": ("anchors",),
-    "tplink_gpl:parse_multi": ("anchors", "rows"),
-    "asus:parse": ("scripts",),
-    "asus:parse_firmware": ("anchors", "texts"),
-    "hp:parse": ("rows",),
-    "hp:parse_firmware": ("anchors",),
-    "dlink_gpl:parse": ("anchors", "rows", "inputs"),
-    "dlink_gpl:detail": ("rows",),
-    "dlink_gpl:download": ("rows",),
-    "dlink_ftp:root": (),
-    "dlink_ftp:family": (),
-    "dlink_ftp:device": (),
-    "dlink_ftp:files": (),
-}
-
-VENDOR_HOST_PATTERNS = {
-    "tplink": r"^(www|static)\.tp-link\.com$",
-    "netgear_gpl": r"^www\.downloads\.netgear\.com$",
-    "linksys_gpl": r"^(www|downloads)\.linksys\.com$",
-    "tplink_gpl": r"^(www|static)\.tp-link\.com$",
-    # asus.py / hp.py declare no allowed_domains -> offsite filter disabled
-    "asus": r".*",
-    "hp": r".*",
-    "dlink_gpl": r"^(tsd\.dlink\.com\.tw|dlink-gpl\.s3\.amazonaws\.com)$",
-    "dlink_ftp": r"^ftp\.dlink\.de$",
-}
+    return dict(items=F.transform(fw, item))

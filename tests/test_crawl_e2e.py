@@ -250,3 +250,16 @@ def test_cli_crawl_and_feed(spark, tmp_path):
     assert len(spider_seeds(["all"])) > len(spider_seeds(["avm"]))
     with pt.raises(SystemExit):
         spider_seeds(["nope"])
+
+
+def test_run_releases_robots_caches(spark, tmp_path):
+    """run() drops the robots caches it built: afterwards the session holds
+    no persistent RDD it did not hold before the engine existed. The corpus
+    path is this test's own, so no other engine's robots cache can match
+    this one's plans and be reused instead of built."""
+    corpus = str(tmp_path / "pages_robots_release")
+    G.write_corpus(spark, corpus, n_avm=1, n_linksys=1, partitions=2)
+    base = _persistent_rdd_ids(spark)
+    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"))
+    eng.run(G.seeds(), fresh=True)
+    assert _persistent_rdd_ids(spark) <= base

@@ -129,14 +129,19 @@ def test_avm_extract_version_python(fw, spec, expected):
 
 
 def test_avm_version_spark(spark):
+    """The array form the AVM rule pack calls, one file-name array per
+    page: each vector next to a main-family name, so the powerline
+    versions must zip back onto their own index."""
     df = spark.createDataFrame(
         [(fw, spec) for fw, spec, _ in AVM_VERSION_VECTORS], ["fname", "spec"]
     )
+    other = "FRITZ.Box_7490.113.07.29.image"
     got = [
         r["v"]
-        for r in df.select(V.avm_version_col(F.col("fname"), F.col("spec")).alias("v")).collect()
+        for r in df.select(V.avm_versions_col(
+            F.array(F.lit(other), "fname"), F.col("spec")).alias("v")).collect()
     ]
-    assert got == [e for _, _, e in AVM_VERSION_VECTORS]
+    assert got == [["113.07.29", e] for _, _, e in AVM_VERSION_VECTORS]
 
 
 def test_permutations_match_reference():
