@@ -57,8 +57,9 @@ def steady(cores: int) -> dict:
         shutil.rmtree(state, ignore_errors=True)
         eng = CrawlEngine(spark, CORPUS, state, tokens_per_host=10**9,
                           salt_buckets=8, round_seconds=1e9)
-        eng._write_frontier(bench.steady_frontier(spark, CORPUS), 0)
-        r, b = eng._robots(); r.count(); b.count()
+        frontier = bench.steady_frontier(spark, CORPUS)
+        eng._write_frontier(frontier, 0)
+        r, b = eng._robots(eng._survey(frontier)[1]); r.count(); b.count()
         c0, t0 = tree_cpu(), time.monotonic()
         eng.run_round(0)
         return {"cores": cores,

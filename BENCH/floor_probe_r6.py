@@ -31,8 +31,9 @@ def steady(cores: int) -> dict:
             spark, CORPUS, state,
             tokens_per_host=1_000_000_000, salt_buckets=8,
             round_seconds=1_000_000_000.0)
-        eng._write_frontier(bench.steady_frontier(spark, CORPUS), 0)
-        rules, budget = eng._robots()
+        frontier = bench.steady_frontier(spark, CORPUS)
+        eng._write_frontier(frontier, 0)
+        rules, budget = eng._robots(eng._survey(frontier)[1])
         rules.count(), budget.count()
 
         jobs_before = {j["jobId"] for j in rest(spark, "jobs")}

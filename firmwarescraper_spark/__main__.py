@@ -71,20 +71,12 @@ def cmd_crawl(args, spark=None) -> dict:
             from firmwarescraper_spark.plans.fetchers import HttpFetcher
 
             fetcher = HttpFetcher(timeout=args.http_timeout)
-        # ADVICE r4: a live-HTTP crawl must not source robots rules from
-        # the --pages corpus (a corpus with no robots rows would silently
-        # run allow-all) — --http implies live robots.txt fetching unless
-        # explicitly overridden either way.
-        robots_http = args.robots_http
-        if robots_http is None:
-            robots_http = bool(args.http)
         eng = CrawlEngine(
             spark, args.pages, args.state,
             obey_robots=not args.no_robots,
             use_bloom_prefilter=args.bloom,
             compact_every=args.compact_every,
             fetcher=fetcher,
-            robots_http=robots_http,
         )
         summary = eng.run(spider_seeds(args.spiders), fresh=args.fresh)
         if args.downloads:
@@ -182,21 +174,12 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--bloom", action="store_true",
                    help="enable the partitioned-Bloom seen prefilter")
     c.add_argument("--http", action="store_true",
-                   help="fetch over real HTTP (mapInPandas HttpFetcher) "
-                        "instead of joining the pages corpus; --pages is "
-                        "then used only for robots rules")
+                   help="fetch pages and robots.txt over real HTTP "
+                        "(mapInPandas HttpFetcher) instead of joining the "
+                        "pages corpus")
     c.add_argument("--http-timeout", type=float, default=320.0,
                    help="per-request timeout for --http (reference "
                         "DOWNLOAD_TIMEOUT default)")
-    rb = c.add_mutually_exclusive_group()
-    rb.add_argument("--robots-http", dest="robots_http",
-                    action="store_true", default=None,
-                    help="fetch robots.txt over live HTTP per discovered "
-                         "host (default: on when --http is on)")
-    rb.add_argument("--robots-from-pages", dest="robots_http",
-                    action="store_false",
-                    help="source robots rules from the --pages corpus "
-                         "even under --http")
     c.add_argument("--compact-every", type=int, default=64,
                    help="fold state-table round deltas into one snapshot "
                         "every K rounds (0 disables)")

@@ -22,7 +22,7 @@ Spark-first:
   non-overlapping fold (``F.aggregate``, JVM-side). Driver traffic is
   ONE row per merge; lineage over the iterated vocab table is bounded
   by ``localCheckpoint`` every ``checkpoint_every`` merges (the same
-  truncation pattern as plans/crawl.py robots_http state).
+  truncation pattern as the robots state in plans/crawl.py).
 
 At 10^10 documents the vocab table after a realistic ``min_freq`` floor
 is 10^6–10^7 rows — megabytes per merge iteration, so the M-merge loop
@@ -170,7 +170,7 @@ def bpe_learn(
         )
         if rank % checkpoint_every == 0:
             # bound lineage growth over long merge schedules — the same
-            # pattern plans/crawl.py uses for robots_http state
+            # pattern plans/crawl.py uses for its robots state
             vocab = vocab.localCheckpoint()
     return learned
 

@@ -185,7 +185,7 @@ def hyperball_centrality(
     in-link skew (everyone links to the homepage) combines map-side
     exactly like pagerank's contribution stream. ``checkpoint_every``
     truncates the per-iteration lineage growth (the compact_state /
-    robots_http pattern). Common Crawl's config is p=12-14 at host
+    robots-state pattern). Common Crawl's config is p=12-14 at host
     granularity (~KB per host, ~100M hosts) — same plan shape.
     """
     from .sketches import hll_estimate_from_regs, hll_register_table

@@ -5,8 +5,9 @@ The reference obeys robots globally (ROBOTSTXT_OBEY = True,
 longest-match-wins between the most specific Allow and Disallow rule, with
 Allow winning ties. The engine reproduces that as pure relational algebra:
 
-  1. ``build_robots_rules`` parses each host's /robots.txt page (they are
-     ordinary corpus rows) into a flat rule table
+  1. ``build_robots_rules`` parses robots.txt pages (``url``, ``html``
+     rows: the crawl engine fetches one per new ``scheme://authority``
+     through its page fetcher) into a flat rule table
      (host, is_allow, rule_regex, rule_len) plus (host, crawl_delay);
   2. ``robots_filter`` broadcast-joins rules to the frontier on host,
      evaluates each rule as a regex (wildcards * and $ compiled at table
@@ -248,9 +249,12 @@ def robots_filter(frontier: DataFrame, rules_df: DataFrame,
 def host_budget_from_delay(delay_df: DataFrame, round_seconds: float,
                            default_tokens: int) -> DataFrame:
     """Crawl-delay -> per-round token budget (deterministic: the engine's
-    correctness mode converts wall-clock delays into fixed tokens/round)."""
+    correctness mode converts wall-clock delays into fixed tokens/round).
+    One row per host, the smallest budget winning: a host serving robots.txt
+    under two schemes or ports has two delays, and a second row would
+    duplicate each of its frontier rows in the dequeue's join on host."""
     tokens = F.least(
         F.lit(default_tokens),
         F.greatest(F.lit(1), (F.lit(round_seconds) / F.col("crawl_delay")).cast("int")),
     )
-    return delay_df.select("host", tokens.alias("tokens"))
+    return delay_df.groupBy("host").agg(F.min(tokens).alias("tokens"))

@@ -97,7 +97,6 @@ class CrawlEngine:
         pages_table: str | None = None,
         compact_every: int | None = 64,
         fetcher=None,
-        robots_http: bool = False,
     ):
         self.spark = spark
         self.pages_path = pages_path
@@ -121,12 +120,8 @@ class CrawlEngine:
             fetcher = CorpusFetcher()
         fetcher.engine = self
         self.fetcher = fetcher
-        self.robots_http = robots_http
-        self._robots_hosts = None
-        self._robots_table = None
         self._pages = None
-        self._robots_rules = None
-        self._host_budget = None
+        self._robots_state = None  # see _robots
         self._budget_all_unlimited = False
         self._has_fail_col = None
         self._round_cache = []
@@ -420,87 +415,77 @@ class CrawlEngine:
         ).drop("_page_url")
 
     # -- the round job -----------------------------------------------------------
-    def _robots(self, frontier: DataFrame | None = None):
-        if not self.robots_http:
-            if self._robots_rules is None:
-                # cached so the robots scan + Python parse runs once per
-                # run(); the rule/budget views are re-joined every round,
-                # and caching them too keeps those filters off the parse
-                self._robots_table = RB.robots_table(self._raw_pages()).persist()
-                rules, delay = RB.split_robots_table(self._robots_table)
-                self._robots_rules = rules.persist()
-                self._host_budget = RB.host_budget_from_delay(
-                    delay, self.round_seconds, self.tokens_per_host
-                ).persist()
-                # one tiny agg per crawl (amortized over every round):
-                # when every per-host override is itself "unlimited", the
-                # budget join is the identity and run_round skips it at
-                # PLAN time — the politeness windows then fold away
-                # entirely for unbudgeted (steady-state drain) rounds
-                row = self._host_budget.agg(F.min("tokens")).first()
-                self._budget_all_unlimited = (
-                    row[0] is None or row[0] >= FR.UNLIMITED_TOKENS)
-            return self._robots_rules, self._host_budget
-        # robots over live HTTP (deployment twin of the corpus robots
-        # rows): each round, hosts not yet covered get their /robots.txt
-        # fetched via a mapInPandas stage and parsed into the SAME rules
-        # table shape; the cached rules extend incrementally so a host
-        # discovered in round 7 is still robots-checked from round 7 on.
-        # A missing/unreachable robots.txt = allow-all (scrapy semantics).
-        from firmwarescraper_spark.plans import fetchers as FT
+    def _survey(self, frontier: DataFrame) -> tuple:
+        """One job over the frontier: the rule packs it schedules and, under
+        robots, its bases (``scheme://authority``) whose robots.txt the
+        robots state does not hold yet. The covered bases join the job as a
+        union branch, not a join, so a round that reaches no new base pays
+        no job for robots of its own."""
+        rows = frontier.select(
+            "rule", F.nullif(F.regexp_extract("url", r"^([a-z]+://[^/?#]+)", 1),
+                             F.lit("")).alias("base"),
+            F.lit(False).alias("_covered"))
+        if self._robots_state is not None:
+            rows = rows.unionByName(self._robots_state.select(
+                F.lit(None).cast("string").alias("rule"), "base",
+                F.lit(True).alias("_covered")))
+        fresh = F.array_except(
+            F.collect_set(F.when(~F.col("_covered"), F.col("base"))),
+            F.collect_set(F.when(F.col("_covered"), F.col("base"))))
+        present, bases = rows.agg(
+            F.collect_set("rule"),
+            fresh if self.obey_robots else F.array().cast("array<string>"),
+        ).first()
+        return sorted(set(present) & RP.PACKS.keys()), sorted(bases)
 
-        assert frontier is not None, "robots_http needs the round frontier"
-        bases = frontier.select(
-            F.regexp_extract("url", r"^([a-z]+://[^/]+)", 1).alias("base")
-        ).filter(F.col("base") != "").distinct()
-        if self._robots_hosts is not None:
-            bases = bases.join(self._robots_hosts, "base", "left_anti")
-        new_bases = bases.persist()
-        if not new_bases.isEmpty():
-            # persist the fetched robots PAGES (not the parsed views): the
-            # rules/budget tables are two derivations of one live-HTTP
-            # fetch, and each is materialized separately below — caching
-            # here keeps that one network round-trip per host.
-            pages = FT.robots_pages_http(
-                new_bases,
-                timeout=getattr(self.fetcher, "timeout", 320.0),
-                concurrency=getattr(self.fetcher, "concurrency", 16),
-                user_agent=getattr(self.fetcher, "user_agent",
-                                   "firmwarescraper"),
-            ).persist()
-            rules, delay = RB.build_robots_rules(pages)
-            budget = RB.host_budget_from_delay(
-                delay, self.round_seconds, self.tokens_per_host)
-            hosts = new_bases.select("base")
-            if self._robots_rules is not None:
-                rules = self._robots_rules.unionByName(rules)
-                budget = self._host_budget.unionByName(budget)
-                hosts = self._robots_hosts.unionByName(hosts)
-            old = (self._robots_rules, self._host_budget, self._robots_hosts)
-            # localCheckpoint, not persist: it truncates the lineage, so a
-            # long crawl's accumulated rules/budget/hosts never drag a
-            # round-deep union chain through each round's analysis
-            self._robots_rules = rules.localCheckpoint()
-            self._host_budget = budget.localCheckpoint()
-            self._robots_hosts = hosts.localCheckpoint()
-            row = self._host_budget.agg(F.min("tokens")).first()
+    def _robots(self, bases: list, use_bcast: bool = True) -> tuple:
+        """Extend the robots state with the robots.txt of each of ``bases``
+        (bases it does not cover yet, see _survey) and return its (rules,
+        host budget) views. The requests go through the round's own
+        fetcher, as scrapy's robots middleware sends them through its
+        downloader; they never enter seen, fetch_log or the frontier. A
+        non-2xx answer is allow-all and is not retried.
+
+        The state is one relation: the parsed rule and crawl-delay rows of
+        ``RB.robots_table`` plus one marker row (``base`` set) per fetched
+        base. Each extension unions the new rows onto it and
+        localCheckpoints the result: the fetch and parse run once, and the
+        lineage stays flat over a long crawl."""
+        if self._robots_state is None:
+            self._robots_state = self.spark.createDataFrame(
+                [], "host string, is_allow boolean, rule_regex string, "
+                    "rule_len int, crawl_delay double, base string")
+        if bases:
+            requests = self.spark.createDataFrame(
+                [(u, U.fetch_key(U.canonicalize_url(u)), {}, 0)
+                 for u in (b + "/robots.txt" for b in bases)],
+                "url string, fetch_key string, form_data map<string,string>, "
+                "retry_count int")
+            fetched = self.fetcher.fetch(requests, use_bcast)
+            ok = fetched.filter((F.col("status") >= 200) & (F.col("status") < 300))
+            markers = self.spark.createDataFrame([(b,) for b in bases], "base string")
+            old = self._robots_state
+            self._robots_state = old.unionByName(RB.robots_table(ok).unionByName(
+                markers, allowMissingColumns=True)).localCheckpoint()
+            _release(old)
+        rules, delay = RB.split_robots_table(self._robots_state)
+        budget = RB.host_budget_from_delay(
+            delay, self.round_seconds, self.tokens_per_host)
+        if bases and self.tokens_per_host >= FR.UNLIMITED_TOKENS:
+            # when every per-host budget is itself unlimited, the budget
+            # join is the identity and _candidates drops it at plan time,
+            # so the politeness windows fold away; below an unlimited
+            # default some budget always binds and the flag stays False
+            low = budget.agg(F.min("tokens")).first()[0]
             self._budget_all_unlimited = (
-                row[0] is None or row[0] >= FR.UNLIMITED_TOKENS)
-            for df in old:
-                if df is not None:
-                    _release(df)  # superseded snapshots: bounded storage
-            pages.unpersist()
-        new_bases.unpersist()
-        return self._robots_rules, self._host_budget
+                low is None or low >= FR.UNLIMITED_TOKENS)
+        return rules, budget
 
     def _release_robots(self):
-        """Drop the robots caches; the next round rebuilds them lazily."""
-        for df in (self._robots_rules, self._host_budget, self._robots_hosts,
-                   self._robots_table):
-            if df is not None:
-                _release(df)
-        self._robots_rules = self._host_budget = None
-        self._robots_hosts = self._robots_table = None
+        """Drop the robots state; the next round rebuilds it lazily."""
+        if self._robots_state is not None:
+            _release(self._robots_state)
+        self._robots_state = None
         self._budget_all_unlimited = False
 
     def run_round(self, rnd: int) -> dict:
@@ -527,7 +512,10 @@ class CrawlEngine:
         committed = False
         try:
             frontier, seen = self._read_frontier(rnd), self.seen()
-            candidates, blocked, budget = self._candidates(frontier, seen)
+            use_bcast = self._fetch_broadcast_choice(rnd)
+            present, bases = self._survey(frontier)
+            candidates, blocked, budget = self._candidates(
+                frontier, seen, bases, use_bcast)
             dequeued, deferred = self._dequeue(candidates, budget)
             # the pool's first tasks compute the round's caches while the
             # driver builds the remaining plans: the dequeue chain as soon
@@ -535,7 +523,6 @@ class CrawlEngine:
             # write waits on so no two writes race to compute a cache block
             warm = [pool.submit(dequeued.count)]
             mark("dequeue")
-            use_bcast = self._fetch_broadcast_choice(rnd)
             ok, terminal, retryable = self._fetch_parse(dequeued, use_bcast)
             # new seen rows: every fetch resolved this round, robots-blocked
             # rows included; retryable misses must pass the next anti-join.
@@ -546,7 +533,7 @@ class CrawlEngine:
                 for df in (ok, terminal, blocked) if df is not None]))
             warm.append(pool.submit(seen_add.count))
             mark("materialize")
-            children, items, quarantine = self._extract(frontier, ok)
+            children, items, quarantine = self._extract(present, ok)
             next_frontier = self._next_frontier(
                 rnd, deferred, retryable, children,
                 # a projection keeps the union from flattening seen_add
@@ -585,10 +572,12 @@ class CrawlEngine:
         self._round_cache.append(df.persist())
         return df
 
-    def _candidates(self, frontier: DataFrame, seen: DataFrame) -> tuple:
-        """Frontier rows not yet seen, split by robots. Returns (allowed,
-        blocked, host budget); blocked is None without robots, the budget
-        None when no per-host budget can bind."""
+    def _candidates(self, frontier: DataFrame, seen: DataFrame, bases: list,
+                    use_bcast: bool) -> tuple:
+        """Frontier rows not yet seen, split by robots once the robots.txt
+        of the new ``bases`` is in. Returns (allowed, blocked, host budget);
+        blocked is None without robots, the budget None when no per-host
+        budget can bind."""
         if self._state_is_empty("seen"):
             candidates = frontier  # cold start: the anti-join is the identity
         else:
@@ -597,13 +586,12 @@ class CrawlEngine:
         if not self.obey_robots:
             # both dequeue outputs read it across several actions
             return self._persist(candidates), None, None
-        rules, budget = self._robots(frontier)
+        rules, budget = self._robots(bases, use_bcast)
         # allowed and blocked filter one cached verdict-joined frame
         candidates, blocked, joined = RB.robots_filter(
             candidates, rules, persist_split=True)
         self._round_cache.append(joined)
-        if (self._budget_all_unlimited
-                and self.tokens_per_host >= FR.UNLIMITED_TOKENS):
+        if self._budget_all_unlimited:
             # a literal budget lets Catalyst fold both politeness windows
             # out of every consumer's plan
             budget = None
@@ -687,15 +675,13 @@ class CrawlEngine:
         terminal = minus(failed.drop("status"), retryable)
         return ok, self._persist(terminal), retryable
 
-    def _extract(self, frontier: DataFrame, ok: DataFrame) -> tuple:
-        """Apply the rule packs scheduled this round (RP.extract). Returns
-        (children, items, quarantine), each None when no rule produces it.
-        Each rule's columns are built the first round it is present and
-        kept for the engine's life: building them is the plan cost."""
-        # the frontier's rule set is a superset of the fetched one; a rule
-        # with nothing fetched only adds a dead CASE branch
-        present = sorted(
-            set(frontier.agg(F.collect_set("rule")).first()[0]) & RP.PACKS.keys())
+    def _extract(self, present: list, ok: DataFrame) -> tuple:
+        """Apply the rule packs ``present`` in the frontier (_survey; a
+        superset of the fetched ones, where a rule with nothing fetched only
+        adds a dead CASE branch). Returns (children, items, quarantine),
+        each None when no rule produces it. Each rule's columns are built
+        the first round it is present and kept for the engine's life:
+        building them is the plan cost."""
         for rule in present:
             if rule not in self._packs:
                 self._packs[rule] = RP.PACKS[rule]()

@@ -9,7 +9,10 @@ dequeued columns plus::
                       retryable (scrapy RETRY_HTTP_CODES + network error)
 
 so the round loop's retry/terminal/seen semantics (T3/T4) are
-fetcher-independent. Two implementations:
+fetcher-independent. The engine sends each new base's ``/robots.txt``
+through the same ``fetch`` (a frame of ``url``, ``fetch_key``, empty
+``form_data`` and ``retry_count`` 0), as scrapy sends robots requests
+through its downloader. Two implementations:
 
 * ``CorpusFetcher`` — the sandbox default: an equi-join against the pages
   corpus (the corpus IS the web here; SURVEY.md §2.1 S1). Present row =
@@ -70,44 +73,6 @@ class CorpusFetcher:
             ).drop("fail_times")
         # literal status: downstream not-2xx filters fold this branch away
         return hits.withColumn("status", F.lit(200))
-
-
-def robots_pages_http(bases: DataFrame, timeout: float = 320.0,
-                      concurrency: int = 16,
-                      user_agent: str = "firmwarescraper") -> DataFrame:
-    """Fetch ``<base>/robots.txt`` over live HTTP for each row of
-    ``bases`` (column ``base`` = ``scheme://host``) — the deployment twin
-    of reading robots rows out of the corpus table. Returns a pages-shaped
-    DataFrame ``(url, html)`` ready for
-    ``operators.robots.build_robots_rules``. A missing or unreachable
-    robots.txt yields an empty body = allow-all, matching scrapy's
-    RobotsTxtMiddleware behavior for 4xx/errors."""
-    import pandas as pd
-
-    def _fetch(batches):
-        import concurrent.futures as cf
-        import urllib.request
-
-        def _one(base: str) -> tuple:
-            url = base + "/robots.txt"
-            req = urllib.request.Request(
-                url, headers={"User-Agent": user_agent})
-            try:
-                with urllib.request.urlopen(req, timeout=timeout) as resp:
-                    return url, resp.read().decode("utf-8", "replace")
-            except Exception:
-                return url, ""
-
-        for pdf in batches:
-            if len(pdf):
-                with cf.ThreadPoolExecutor(concurrency) as pool:
-                    res = list(pool.map(_one, pdf["base"]))
-                yield pd.DataFrame(res, columns=["url", "html"])
-            else:
-                yield pd.DataFrame({"url": pd.Series([], dtype=object),
-                                    "html": pd.Series([], dtype=object)})
-
-    return bases.mapInPandas(_fetch, "url string, html string")
 
 
 class HttpFetcher:

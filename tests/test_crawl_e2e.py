@@ -1,10 +1,14 @@
 """End-to-end crawl parity: the Spark engine vs the pinned pure-Python
 reference simulator over the same deterministic corpus (SURVEY.md §7.0/M7)."""
 
+import re
+
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from firmwarescraper_spark.plans.crawl import CrawlEngine
+from firmwarescraper_spark.plans.fetchers import CorpusFetcher
 from firmwarescraper_spark.plans.simulator import simulate
 from firmwarescraper_spark.sources import generate as G
 
@@ -193,10 +197,11 @@ def test_executor_storage_flat_per_round(spark, corpus, tmp_path_factory):
     drop caches that earlier tests left behind.)"""
     state = str(tmp_path_factory.mktemp("state_storage"))
     eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
-    rules, budget = eng._robots()
+    seeds = eng.seed_frontier(G.seeds())
+    rules, budget = eng._robots(eng._survey(seeds)[1])
     rules.count(), budget.count()
     base = _persistent_rdd_ids(spark)
-    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    eng._write_frontier(seeds, 0)
     rnd, counts = 0, []
     while not eng._read_frontier(rnd).isEmpty():
         eng.run_round(rnd)
@@ -263,3 +268,69 @@ def test_run_releases_robots_caches(spark, tmp_path):
     eng = CrawlEngine(spark, corpus, str(tmp_path / "state"))
     eng.run(G.seeds(), fresh=True)
     assert _persistent_rdd_ids(spark) <= base
+
+
+class RecordingFetcher(CorpusFetcher):
+    """The corpus fetcher, recording the URL of every request it gets."""
+
+    def __init__(self):
+        super().__init__()
+        self.requested = []
+
+    def fetch(self, df, use_bcast):
+        self.requested += [r["url"] for r in df.select("url").collect()]
+        return super().fetch(df, use_bcast)
+
+
+def _write_pages(spark, path, pages: dict, fail_times: dict | None = None):
+    pdf = pd.DataFrame(G._rows_from_pages(pages))
+    schema = "url string, warc_ts timestamp, html binary, text string, lang string"
+    if fail_times:
+        pdf["fail_times"] = [fail_times.get(u, 0) for u in pdf["url"]]
+        schema += ", fail_times int"
+    spark.createDataFrame(pdf, schema).write.mode("overwrite").parquet(path)
+
+
+def _robots_url(key: str) -> str:
+    return re.match(r"^[a-z]+://[^/?#]+", key).group(0) + "/robots.txt"
+
+
+def test_robots_requests_follow_reached_bases(spark, tmp_path):
+    """robots.txt is requested through the crawl's fetcher once for each
+    base the crawl reaches, and only for those: the corpus robots row of a
+    host no seed reaches is never requested."""
+    unreached = "http://unreached.example/robots.txt"
+    corpus = str(tmp_path / "pages")
+    _write_pages(spark, corpus, G.corpus_dict(1, 1)
+                 | {unreached: "User-agent: *\nDisallow: /\n"})
+    fetcher = RecordingFetcher()
+    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"), fetcher=fetcher)
+    eng.run(G.seeds(), fresh=True)
+    robots = [u for u in fetcher.requested if u.endswith("/robots.txt")]
+    reached = {_robots_url(r["fetch_key"]) for r in eng.seen().collect()}
+    assert sorted(robots) == sorted(reached)
+    assert unreached not in robots
+
+
+def test_robots_requests_leave_no_crawl_state(spark, tmp_path):
+    """A robots.txt answer outside 2xx is allow-all and is not retried;
+    robots requests never enter seen or fetch_log."""
+    host = G.AVM_HOST
+    robots = f"http://{host}/robots.txt"
+    pages = G.avm_family_pages(host, "fritzbox", 2) | {
+        robots: "User-agent: *\nDisallow: /fritzbox/fritzbox-7001/\n"}
+    corpus = str(tmp_path / "pages")
+    _write_pages(spark, corpus, pages, {robots: 1})  # answers 503 once
+    fetcher = RecordingFetcher()
+    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"), fetcher=fetcher)
+    eng.run([(f"http://{host}/fritzbox/", "avm:parse")], fresh=True)
+    assert fetcher.requested.count(robots) == 1
+    seen = [r["fetch_key"] for r in eng.seen().collect()]
+    assert any("/fritzbox/fritzbox-7001/" in k for k in seen)  # allow-all
+    assert not any(k.endswith("/robots.txt") for k in seen)
+    fetched, errors = eng.fetch_log().agg(
+        F.sum("fetched"), F.sum("errors")).first()
+    pages_requested = [u for u in fetcher.requested
+                       if not u.endswith("/robots.txt")]
+    assert errors == 0
+    assert fetched == len(pages_requested) == len(seen)

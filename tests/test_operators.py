@@ -148,6 +148,24 @@ def test_host_budget_from_delay(spark):
     assert got == {"h1": 30, "h2": 120}
 
 
+def test_host_budget_one_row_per_host(spark):
+    """A host that serves robots.txt under two schemes has two crawl delays;
+    its budget is one row, the smaller one, so the dequeue's join on host
+    does not duplicate its frontier rows."""
+    pages = spark.createDataFrame(
+        [("http://h.example/robots.txt", "User-agent: *\nCrawl-delay: 10\n"),
+         ("https://h.example/robots.txt", "User-agent: *\nCrawl-delay: 20\n")],
+        "url string, html string")
+    _, delay = RB.build_robots_rules(pages)
+    budget = RB.host_budget_from_delay(delay, round_seconds=60,
+                                       default_tokens=1000)
+    assert [tuple(r) for r in budget.collect()] == [("h.example", 3)]
+    fr = _frontier_df(spark, [("h.example", 0, f"{i:04d}") for i in range(3)])
+    dq, deferred = FR.politeness_dequeue(fr, tokens_per_host=1000,
+                                         salt_buckets=4, host_budget=budget)
+    assert dq.count() == 3 and deferred.count() == 0
+
+
 # --- dedup family -----------------------------------------------------------------
 
 DOCS = [

@@ -412,11 +412,11 @@ def test_cli_round4_flags_parse():
 
 
 def test_robots_over_http(spark, tmp_path, monkeypatch):
-    """Deployment robots path: with robots_http=True the engine fetches
-    each new host's /robots.txt over live HTTP (mapInPandas) and applies
-    the SAME longest-match filter — the corpus contains NO robots row, so
-    agreement with a corpus-robots control proves the rules came over the
-    wire."""
+    """Deployment robots path: under HttpFetcher the engine fetches each
+    new base's /robots.txt over live HTTP through the same fetcher as its
+    pages and applies the SAME longest-match filter — the corpus contains
+    NO robots row, so agreement with a corpus-robots control proves the
+    rules came over the wire."""
     from firmwarescraper_spark.plans import rulepacks as RP
     from firmwarescraper_spark.plans.fetchers import HttpFetcher
 
@@ -442,7 +442,7 @@ def test_robots_over_http(spark, tmp_path, monkeypatch):
         ctl = CrawlEngine(spark, corpus_with_robots, str(tmp_path / "ctl"))
         ctl.run(seeds, fresh=True)
         eng = CrawlEngine(spark, corpus, str(tmp_path / "http"),
-                          robots_http=True, max_retries=4,
+                          max_retries=4,
                           fetcher=HttpFetcher(timeout=60, concurrency=4))
         eng.run(seeds, fresh=True)
     finally:

@@ -1,7 +1,7 @@
 """Round-5 behaviors: r4 verdict fixes (HttpFetcher requests the ORIGINAL
-URL; stream-bounded body reads; robots_http lineage truncation; Hadoop-FS
-frontier size probe) plus ADVICE r4 (collect_downloads null-blob guard,
---robots-http CLI wiring)."""
+URL; stream-bounded body reads; robots state lineage truncation; Hadoop-FS
+frontier size probe) plus ADVICE r4 (collect_downloads null-blob guard;
+the robots source flags are gone from the CLI)."""
 
 import os
 
@@ -266,51 +266,62 @@ def test_http_fetcher_per_host_pacing(spark):
 
 
 # ---------------------------------------------------------------------------
-# r4 verdict #4 + ADVICE: robots_http lineage stays bounded over rounds
+# r4 verdict #4 + ADVICE: the robots state's lineage stays bounded over rounds
 # ---------------------------------------------------------------------------
 
-def test_robots_http_lineage_bounded(spark, tmp_path, monkeypatch):
-    """Each new-host round extends the accumulated rules/budget/hosts
-    tables; the accumulation must localCheckpoint so the plan carried into
-    round k is a flat RDD scan, not a k-deep union-of-mapInPandas chain
-    (which would re-fetch robots.txt on cache eviction AND bloat every
-    round's Catalyst analysis)."""
-    from firmwarescraper_spark.plans import fetchers as FT
-
+def test_robots_http_lineage_bounded(spark, tmp_path):
+    """Each round that reaches new bases extends the robots state through
+    the engine's fetcher; the state must localCheckpoint so the plan
+    carried into round k is a flat RDD scan, not a k-deep union of fetch +
+    mapInPandas parses (which would re-fetch robots.txt on cache eviction
+    AND bloat every round's Catalyst analysis)."""
     body = "User-agent: *\nDisallow: /private/\nCrawl-delay: 2\n"
 
-    def fake_robots(bases, **kw):
-        return bases.select(
-            F.concat(F.col("base"), F.lit("/robots.txt")).alias("url"),
-            F.lit(body).alias("html"))
+    class StubFetcher:
+        """Answers every request 200 with ``body``; records the URLs."""
 
-    monkeypatch.setattr(FT, "robots_pages_http", fake_robots)
+        def __init__(self):
+            self.requested = []
+
+        def fetch(self, df, use_bcast):
+            self.requested += [r["url"] for r in df.select("url").collect()]
+            return df.withColumn("html", F.lit(body)).withColumn(
+                "status", F.lit(200))
+
+    fetcher = StubFetcher()
     eng = CrawlEngine(spark, str(tmp_path / "nopages"),
-                      str(tmp_path / "state"), robots_http=True)
+                      str(tmp_path / "state"), fetcher=fetcher)
 
     def frontier_for(hosts):
         return spark.createDataFrame(
-            [(f"http://{h}/p", h) for h in hosts], "url string, host string")
+            [(f"http://{h}/p", h, "avm:parse") for h in hosts],
+            "url string, host string, rule string")
 
     plans = []
     for k in range(6):
-        eng._robots(frontier_for([f"h{j}.example" for j in range(k + 1)]))
+        eng._robots(eng._survey(
+            frontier_for([f"h{j}.example" for j in range(k + 1)]))[1])
         plans.append(
-            eng._robots_rules._jdf.queryExecution().analyzed().toString())
-    # flat plan: the accumulated table is a checkpointed RDD scan — no
+            eng._robots_state._jdf.queryExecution().analyzed().toString())
+    # flat plan: the accumulated state is a checkpointed RDD scan — no
     # union/mapInPandas chain survives into later rounds
     assert "Union" not in plans[-1]
     assert "MapInPandas" not in plans[-1]
     assert len(plans[-1]) <= len(plans[1]) + 50  # does not grow with k
     # and the data is complete + correct after 6 incremental extensions
-    hosts = {r["host"] for r in eng._robots_rules.collect()}
+    rules, budget = eng._robots([])
+    hosts = {r["host"] for r in rules.collect()}
     assert hosts == {f"h{j}.example" for j in range(6)}
-    budget = {r["host"] for r in eng._host_budget.collect()}
-    assert budget == hosts
-    # re-presenting only known hosts must not rebuild anything
-    before = eng._robots_rules
-    eng._robots(frontier_for(["h0.example", "h3.example"]))
-    assert eng._robots_rules is before
+    assert {r["host"] for r in budget.collect()} == hosts
+    # each base was requested exactly once
+    assert sorted(fetcher.requested) == sorted(
+        f"http://h{j}.example/robots.txt" for j in range(6))
+    # re-presenting only known bases must not rebuild anything
+    before = eng._robots_state
+    bases = eng._survey(frontier_for(["h0.example", "h3.example"]))[1]
+    assert bases == []
+    eng._robots(bases)
+    assert eng._robots_state is before
 
 
 # ---------------------------------------------------------------------------
@@ -621,24 +632,26 @@ def test_bench_headline_alldirty_fallback_is_minarm():
 
 
 # ---------------------------------------------------------------------------
-# ADVICE r4: --robots-http CLI wiring
+# ADVICE r4: robots rules have one source, the crawl's own fetcher
 # ---------------------------------------------------------------------------
 
-@pytest.mark.parametrize("argv,expected", [
-    (["--http"], True),                         # --http implies live robots
-    (["--http", "--robots-from-pages"], False), # explicit override
-    (["--robots-http"], True),                  # live robots, corpus fetch
-    ([], False),                                # default sandbox mode
+@pytest.mark.parametrize("argv,parses", [
+    (["--http"], True),                         # robots come with the pages
+    (["--http", "--robots-from-pages"], False), # removed flag
+    ([], True),                                 # default sandbox mode
+    (["--robots-http"], False),                 # removed flag
 ])
-def test_cli_robots_http_wiring(argv, expected):
+def test_cli_robots_http_wiring(argv, parses):
+    """There is no robots source to pick: both former flags are rejected
+    by the parser, and a crawl's parsed options carry no robots knob."""
     from firmwarescraper_spark.__main__ import build_parser
 
-    args = build_parser().parse_args(
-        ["crawl", "avm", "--pages", "/p", "--state", "/s"] + argv)
-    robots_http = args.robots_http
-    if robots_http is None:
-        robots_http = bool(args.http)
-    assert robots_http is expected
+    argv = ["crawl", "avm", "--pages", "/p", "--state", "/s"] + argv
+    if not parses:
+        with pytest.raises(SystemExit):
+            build_parser().parse_args(argv)
+        return
+    assert not hasattr(build_parser().parse_args(argv), "robots_http")
 
 
 # ---------------------------------------------------------------------------

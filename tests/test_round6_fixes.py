@@ -201,7 +201,9 @@ def test_unlimited_budget_fold_state_parity(spark, tmp_path_factory):
         eng = CrawlEngine(spark, corpus, state,
                           tokens_per_host=10 ** 9, salt_buckets=4,
                           round_seconds=10 ** 9)
-        eng._robots()  # computes _budget_all_unlimited
+        # the seeds reach every base of this corpus, so the crawl never
+        # extends the robots state again (nor recomputes the flag)
+        eng._robots(eng._survey(eng.seed_frontier(G.seeds()))[1])
         assert eng._budget_all_unlimited
         if force_join:
             eng._budget_all_unlimited = False  # take the joined path
