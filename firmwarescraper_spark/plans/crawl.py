@@ -427,8 +427,8 @@ class CrawlEngine:
             F.lit(False).alias("_covered"))
         if self._robots_state is not None:
             rows = rows.unionByName(self._robots_state.select(
-                F.lit(None).cast("string").alias("rule"), "base",
-                F.lit(True).alias("_covered")))
+                F.lit(None).cast("string").alias("rule"),
+                F.explode("bases").alias("base"), F.lit(True).alias("_covered")))
         fresh = F.array_except(
             F.collect_set(F.when(~F.col("_covered"), F.col("base"))),
             F.collect_set(F.when(F.col("_covered"), F.col("base"))))
@@ -446,15 +446,12 @@ class CrawlEngine:
         downloader; they never enter seen, fetch_log or the frontier. A
         non-2xx answer is allow-all and is not retried.
 
-        The state is one relation: the parsed rule and crawl-delay rows of
-        ``RB.robots_table`` plus one marker row (``base`` set) per fetched
-        base. Each extension unions the new rows onto it and
-        localCheckpoints the result: the fetch and parse run once, and the
-        lineage stays flat over a long crawl."""
+        The state is the compiled relation of ``RB.ROBOTS_SCHEMA``, one row
+        per host. Each extension compiles the old rows with the new files
+        and localCheckpoints the result: the fetch, parse and grouping run
+        once per change, and the lineage stays flat over a long crawl."""
         if self._robots_state is None:
-            self._robots_state = self.spark.createDataFrame(
-                [], "host string, is_allow boolean, rule_regex string, "
-                    "rule_len int, crawl_delay double, base string")
+            self._robots_state = self.spark.createDataFrame([], RB.ROBOTS_SCHEMA)
         if bases:
             requests = self.spark.createDataFrame(
                 [(u, U.fetch_key(U.canonicalize_url(u)), {}, 0)
@@ -463,14 +460,16 @@ class CrawlEngine:
                 "retry_count int")
             fetched = self.fetcher.fetch(requests, use_bcast)
             ok = fetched.filter((F.col("status") >= 200) & (F.col("status") < 300))
-            markers = self.spark.createDataFrame([(b,) for b in bases], "base string")
+            # every base also gets a file with no body, so a base whose
+            # answer is not 2xx (or absent) is covered and allow-all
+            files = ok.select("url", F.col("html").cast("string")).unionByName(
+                requests.select("url", F.lit(None).cast("string").alias("html")))
             old = self._robots_state
-            self._robots_state = old.unionByName(RB.robots_table(ok).unionByName(
-                markers, allowMissingColumns=True)).localCheckpoint()
+            self._robots_state = RB.compile_robots(
+                old.unionByName(RB.robots_table(files))).localCheckpoint()
             _release(old)
-        rules, delay = RB.split_robots_table(self._robots_state)
         budget = RB.host_budget_from_delay(
-            delay, self.round_seconds, self.tokens_per_host)
+            self._robots_state, self.round_seconds, self.tokens_per_host)
         if bases and self.tokens_per_host >= FR.UNLIMITED_TOKENS:
             # when every per-host budget is itself unlimited, the budget
             # join is the identity and _candidates drops it at plan time,
@@ -479,7 +478,7 @@ class CrawlEngine:
             low = budget.agg(F.min("tokens")).first()[0]
             self._budget_all_unlimited = (
                 low is None or low >= FR.UNLIMITED_TOKENS)
-        return rules, budget
+        return self._robots_state, budget
 
     def _release_robots(self):
         """Drop the robots state; the next round rebuilds it lazily."""

@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from firmwarescraper_spark.operators import robots as RB
 from firmwarescraper_spark.plans.crawl import CrawlEngine
 from firmwarescraper_spark.plans.fetchers import CorpusFetcher
 from firmwarescraper_spark.plans.simulator import simulate
@@ -334,3 +335,92 @@ def test_robots_requests_leave_no_crawl_state(spark, tmp_path):
                        if not u.endswith("/robots.txt")]
     assert errors == 0
     assert fetched == len(pages_requested) == len(seen)
+
+
+class AnswerFetcher:
+    """Answers each request from a url -> (status, body) dict; an unknown
+    url answers 404."""
+
+    def __init__(self, answers: dict):
+        self.answers = answers
+
+    def fetch(self, df, use_bcast):
+        rows = [(u, *self.answers.get(u, (404, None)))
+                for u in (r["url"] for r in df.select("url").collect())]
+        return df.sparkSession.createDataFrame(
+            rows, "url string, status int, html string")
+
+
+def _split_host_engine(spark, tmp_path):
+    """An engine whose fetcher serves h.example different robots.txt under
+    http and https and a 404 on port 8080; g.example answers 404."""
+    answers = {
+        "http://h.example/robots.txt":
+            (200, "User-agent: *\nDisallow: /a\nCrawl-delay: 10\n"),
+        "https://h.example/robots.txt":
+            (200, "User-agent: *\nDisallow: /b\nAllow: /b/c\nCrawl-delay: 20\n"),
+    }
+    eng = CrawlEngine(spark, str(tmp_path / "nopages"), str(tmp_path / "state"),
+                      fetcher=AnswerFetcher(answers))
+    frontier = eng.seed_frontier([
+        (f"{b}/b/c/p{i}", "avm:parse")
+        for i, b in enumerate(["http://h.example", "https://h.example",
+                               "http://h.example:8080", "http://g.example"])])
+    return eng, frontier
+
+
+def test_robots_state_one_row_per_host(spark, tmp_path):
+    """The robots state holds one compiled row per host: the union of the
+    rules of every file the host served, the largest delay and every base
+    it covers, a 404 base included."""
+    eng, frontier = _split_host_engine(spark, tmp_path)
+    eng._robots(eng._survey(frontier)[1])
+    rows = {r["host"]: r for r in eng._robots_state.collect()}
+    assert eng._robots_state.count() == len(rows) == 2
+    h, g = rows["h.example"], rows["g.example"]
+    assert sorted((r["rule_regex"], r["rule_len"], r["is_allow"])
+                  for r in h["rules"]) == [
+        ("^/a", 2, False), ("^/b", 2, False), ("^/b/c", 4, True)]
+    assert h["crawl_delay"] == 20.0
+    assert sorted(h["bases"]) == [
+        "http://h.example", "http://h.example:8080", "https://h.example"]
+    assert (g["rules"], g["crawl_delay"], g["bases"]) == (
+        [], None, ["http://g.example"])
+    assert eng._survey(frontier)[1] == []  # every base is covered
+
+
+def test_robots_consumers_do_not_regroup_state(spark, tmp_path):
+    """The verdict join and the dequeue read the compiled state as it is
+    stored: their executed plans hold no aggregate over its scan."""
+    eng, frontier = _split_host_engine(spark, tmp_path)
+    rules, budget = eng._robots(eng._survey(frontier)[1])
+    allowed, _, joined = RB.robots_filter(frontier, rules, persist_split=True)
+    dequeued, _ = eng._dequeue(allowed, budget)
+    try:
+        joined.collect()
+        assert len(dequeued.collect()) == 4
+        for df in (joined, dequeued):
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "Aggregate" not in plan, plan
+            assert re.search(r"Scan ExistingRDD\[host#\d+,rules#", plan)
+    finally:
+        dequeued.unpersist()
+        joined.unpersist()
+
+
+def test_round_with_zero_crawl_delay_commits(spark, tmp_path):
+    """A robots.txt saying ``Crawl-delay: 0`` sets no budget; the round
+    commits instead of dividing by zero."""
+    host = G.AVM_HOST
+    corpus = str(tmp_path / "pages")
+    _write_pages(spark, corpus, G.avm_family_pages(host, "fritzbox", 2) | {
+        f"http://{host}/robots.txt": "User-agent: *\nCrawl-delay: 0\n"})
+    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"))
+    eng._write_frontier(eng.seed_frontier(
+        [(f"http://{host}/fritzbox/", "avm:parse")]), 0)
+    try:
+        eng.run_round(0)
+    finally:
+        eng._release_robots()
+    assert eng.committed_round() == 0
+    assert eng.seen().count() == 1

@@ -307,11 +307,13 @@ def test_robots_http_lineage_bounded(spark, tmp_path):
     # union/mapInPandas chain survives into later rounds
     assert "Union" not in plans[-1]
     assert "MapInPandas" not in plans[-1]
+    assert "Aggregate" not in plans[-1]
     assert len(plans[-1]) <= len(plans[1]) + 50  # does not grow with k
     # and the data is complete + correct after 6 incremental extensions
     rules, budget = eng._robots([])
     hosts = {r["host"] for r in rules.collect()}
     assert hosts == {f"h{j}.example" for j in range(6)}
+    assert rules.count() == len(hosts)  # one compiled row per host
     assert {r["host"] for r in budget.collect()} == hosts
     # each base was requested exactly once
     assert sorted(fetcher.requested) == sorted(
