@@ -59,7 +59,7 @@ def steady(cores: int) -> dict:
                           salt_buckets=8, round_seconds=1e9)
         frontier = bench.steady_frontier(spark, CORPUS)
         eng._write_frontier(frontier, 0)
-        r, b = eng._robots(eng._survey(frontier)[1]); r.count(); b.count()
+        eng._robots(eng._survey(frontier)[1]).count()
         c0, t0 = tree_cpu(), time.monotonic()
         eng.run_round(0)
         return {"cores": cores,

@@ -33,8 +33,7 @@ def steady(cores: int) -> dict:
             round_seconds=1_000_000_000.0)
         frontier = bench.steady_frontier(spark, CORPUS)
         eng._write_frontier(frontier, 0)
-        rules, budget = eng._robots(eng._survey(frontier)[1])
-        rules.count(), budget.count()
+        eng._robots(eng._survey(frontier)[1]).count()
 
         jobs_before = {j["jobId"] for j in rest(spark, "jobs")}
         writes = {}

@@ -378,8 +378,7 @@ def bench_steady_round(cores: int, corpus_path: str, workdir: str,
         # the steady-state regime fetches each base's robots.txt once per
         # crawl and amortizes it over ~10^4 rounds; a single measured round
         # must not carry that one-off fetch and parse in both arms
-        rules, budget = eng._robots(eng._survey(frontier)[1])
-        rules.count(), budget.count()
+        eng._robots(eng._survey(frontier)[1]).count()
         t0 = time.monotonic()
         eng.run_round(0)
         dt = time.monotonic() - t0

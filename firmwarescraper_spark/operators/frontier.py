@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -308,16 +308,16 @@ def politeness_dequeue(
     frontier: DataFrame,
     tokens_per_host: int = 64,
     salt_buckets: int = 8,
-    host_budget: DataFrame | None = None,
+    budget: Column | None = None,
 ) -> tuple:
     """Dequeue up to ``budget`` URLs per host this round; returns
     (dequeued, deferred).
 
-    ``host_budget`` (optional, broadcast): (host, tokens) overrides from
-    robots Crawl-delay — the reference's per-domain DOWNLOAD_DELAY
-    (/root/reference/firmware/spiders/asus.py:38-42) maps to a reduced
-    per-round token count. Budget is deterministic (fixed tokens/round, no
-    wall clock) in correctness mode — SURVEY.md §7.0.
+    ``budget`` (optional): a token count per row over ``frontier``'s own
+    columns, default the literal ``tokens_per_host``. The crawl engine
+    passes ``robots.delay_budget``: Crawl-delay, the reference's per-domain
+    DOWNLOAD_DELAY (its firmware/spiders/asus.py:38-42), as fixed tokens
+    per round, no wall clock, in correctness mode — SURVEY.md §7.0.
 
     One linear chain, no aggregate, join or union: phase 1 ranks ``_r1``
     within (host, salt); the rows with ``_r1 <= budget`` of a capped host
@@ -328,19 +328,14 @@ def politeness_dequeue(
     with the hot host's backlog. ``dequeued`` and ``deferred`` are the two
     filters of the same ranked frame.
     """
-    df = frontier
-    if host_budget is not None:
-        df = df.join(F.broadcast(host_budget), "host", "left")
-        budget = F.coalesce(F.col("tokens"), F.lit(tokens_per_host))
-    else:
-        budget = F.lit(tokens_per_host)
     order = (F.desc("priority"), F.asc("seq"))
     salt = F.pmod(F.xxhash64("canon_url"), F.lit(salt_buckets))
     free = F.col("_budget") >= UNLIMITED_TOKENS
     survivor = ~free & (F.col("_r1") <= F.col("_budget"))
     take = free | (survivor & (F.col("_r2") <= F.col("_budget")))
     ranked = (
-        df.withColumn("_budget", budget).drop("tokens")
+        frontier.withColumn(
+            "_budget", F.lit(tokens_per_host) if budget is None else budget)
         .withColumn("_salt", salt)
         .withColumn("_r1", F.row_number().over(
             Window.partitionBy("host", "_salt").orderBy(*order)))

@@ -12,10 +12,10 @@ largest Crawl-delay and the ``scheme://authority`` bases it covers.
      crawl engine fetches one per new base through its page fetcher) into
      one row of that shape per file; ``compile_robots`` groups such rows
      per host, for the first build and for every merge into a state;
-  2. ``robots_filter`` joins the compiled rows to the frontier on host and
-     folds each URL's longest Allow and longest Disallow match over the
-     host's rule array; ``host_budget_from_delay`` projects the delay into
-     a per-round token budget.
+  2. ``robots_filter`` joins the compiled rows to the frontier on host,
+     carrying each host's Crawl-delay along for ``delay_budget``, and folds
+     each URL's longest Allow and longest Disallow match over the host's
+     rule array.
 
 No per-row Python on the Spark path past the parse, and no grouping past
 the compile: consumers read the stored rows as they are.
@@ -25,8 +25,9 @@ from __future__ import annotations
 
 import math
 import re
+import string
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -80,17 +81,27 @@ ROBOTS_SCHEMA = (
     "rules array<struct<rule_regex:string,rule_len:int,is_allow:boolean>>, "
     "crawl_delay double, bases array<string>")
 
-# the host drops the port because the frontier's host key (url_host_udf)
-# does: a row keyed "h:8080" would never join; the base keeps it
-_ROBOTS_URL = r"^([a-z]+://([^/]+?)(:\d+)?)/robots\.txt$"
+
+# lowercased as the frontier's host key (url_host_udf) is, so the robots.txt
+# request, the state row and the frontier row name a host alike. ASCII case
+# folding: the first F.lower in a fresh JVM costs about 1.5 s on the round's
+# serial path (measured on local[2], Spark 4.1).
+def url_base(url: Column) -> Column:
+    """The ``scheme://authority`` of ``url``, or null when it has none."""
+    return F.nullif(F.translate(F.regexp_extract(url, r"^([A-Za-z]+://[^/?#]+)", 1),
+                                string.ascii_uppercase, string.ascii_lowercase), F.lit(""))
 
 
 def robots_files(df: DataFrame) -> DataFrame:
     """The rows of ``df`` whose ``url`` is a robots.txt, with the ``host``
-    its rules apply to and the ``base`` (``scheme://authority``) it covers."""
-    return df.filter(F.col("url").rlike(_ROBOTS_URL)).withColumns({
-        "host": F.regexp_extract("url", _ROBOTS_URL, 2),
-        "base": F.regexp_extract("url", _ROBOTS_URL, 1),
+    its rules apply to and the ``base`` it covers."""
+    is_robots = F.col("url").rlike(r"^[A-Za-z]+://[^/?#]+/robots\.txt$")
+    base = url_base(F.col("url"))
+    # the host drops the port because the frontier's host key does: a row
+    # keyed "h:8080" would never join; the base keeps it
+    return df.filter(is_robots).withColumns({
+        "host": F.regexp_extract(base, r"://(.+?)(:\d+)?$", 1),
+        "base": base,
     })
 
 
@@ -168,7 +179,8 @@ def robots_filter(frontier: DataFrame, compiled: DataFrame,
                   persist_split: bool = False) -> tuple:
     """Split frontier into (allowed, blocked) by protego longest-match:
     a URL is blocked iff its longest matching Disallow rule is strictly
-    longer than its longest matching Allow rule.
+    longer than its longest matching Allow rule. Both carry the host's
+    ``crawl_delay`` (null without one), the input of ``delay_budget``.
 
     ``persist_split=True`` persists the verdict-joined parent and
     returns ``(allowed, blocked, joined)`` — both branches then filter
@@ -194,7 +206,8 @@ def robots_filter(frontier: DataFrame, compiled: DataFrame,
     )
     scored = (
         frontier.withColumn("_path", path)
-        .join(compiled.select("host", F.col("rules").alias("_rules")),
+        .join(compiled.select("host", F.col("rules").alias("_rules"),
+                              "crawl_delay"),
               "host", "left")
         .withColumn("_allow", F.when(F.col("_rules").isNotNull(),
                                      best(True)).otherwise(F.lit(-1)))
@@ -214,17 +227,12 @@ def robots_filter(frontier: DataFrame, compiled: DataFrame,
     return allowed, blocked
 
 
-def host_budget_from_delay(delay_df: DataFrame, round_seconds: float,
-                           default_tokens: int) -> DataFrame:
-    """Crawl-delay -> per-round token budget (deterministic: the engine's
-    correctness mode converts wall-clock delays into fixed tokens/round).
-    A projection of rows with ``host`` and ``crawl_delay`` (compiled rows
-    have one per host): one (host, tokens) row per host with a delay,
-    always in [1, default_tokens]. The bounds apply in double, before the
-    int cast, so a tiny delay cannot overflow it."""
-    tokens = F.least(
-        F.lit(float(default_tokens)),
-        F.greatest(F.lit(1.0), F.lit(float(round_seconds)) / F.col("crawl_delay")),
-    ).cast("int")
-    return delay_df.filter(F.col("crawl_delay").isNotNull()).select(
-        "host", tokens.alias("tokens"))
+def delay_budget(round_seconds: float, default_tokens: int) -> Column:
+    """Crawl-delay -> per-round token budget, deterministic (no wall
+    clock), as a column over rows that carry ``crawl_delay`` (robots_filter's
+    outputs): ``default_tokens`` for a null delay, always in [1,
+    default_tokens]; the bounds apply in double, before the cast."""
+    default = F.lit(float(default_tokens))
+    per_delay = F.lit(float(round_seconds)) / F.col("crawl_delay")
+    return F.least(default, F.greatest(F.lit(1.0), F.coalesce(per_delay, default))
+                   ).cast("long")

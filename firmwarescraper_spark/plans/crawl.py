@@ -98,6 +98,10 @@ class CrawlEngine:
         compact_every: int | None = 64,
         fetcher=None,
     ):
+        # zero tokens would dequeue nothing, round after round; zero salt
+        # buckets would divide by zero mid-round under ANSI mode
+        if min(tokens_per_host, salt_buckets) < 1:
+            raise ValueError("tokens_per_host and salt_buckets must be at least 1")
         self.spark = spark
         self.pages_path = pages_path
         self.state_dir = state_dir
@@ -422,8 +426,7 @@ class CrawlEngine:
         union branch, not a join, so a round that reaches no new base pays
         no job for robots of its own."""
         rows = frontier.select(
-            "rule", F.nullif(F.regexp_extract("url", r"^([a-z]+://[^/?#]+)", 1),
-                             F.lit("")).alias("base"),
+            "rule", RB.url_base(F.col("canon_url")).alias("base"),
             F.lit(False).alias("_covered"))
         if self._robots_state is not None:
             rows = rows.unionByName(self._robots_state.select(
@@ -438,13 +441,13 @@ class CrawlEngine:
         ).first()
         return sorted(set(present) & RP.PACKS.keys()), sorted(bases)
 
-    def _robots(self, bases: list, use_bcast: bool = True) -> tuple:
+    def _robots(self, bases: list, use_bcast: bool = True) -> DataFrame:
         """Extend the robots state with the robots.txt of each of ``bases``
-        (bases it does not cover yet, see _survey) and return its (rules,
-        host budget) views. The requests go through the round's own
-        fetcher, as scrapy's robots middleware sends them through its
-        downloader; they never enter seen, fetch_log or the frontier. A
-        non-2xx answer is allow-all and is not retried.
+        (bases it does not cover yet, see _survey) and return it. The
+        requests go through the round's own fetcher, as scrapy's robots
+        middleware sends them through its downloader; they never enter
+        seen, fetch_log or the frontier. A non-2xx answer is allow-all and
+        is not retried.
 
         The state is the compiled relation of ``RB.ROBOTS_SCHEMA``, one row
         per host. Each extension compiles the old rows with the new files
@@ -468,17 +471,16 @@ class CrawlEngine:
             self._robots_state = RB.compile_robots(
                 old.unionByName(RB.robots_table(files))).localCheckpoint()
             _release(old)
-        budget = RB.host_budget_from_delay(
-            self._robots_state, self.round_seconds, self.tokens_per_host)
-        if bases and self.tokens_per_host >= FR.UNLIMITED_TOKENS:
-            # when every per-host budget is itself unlimited, the budget
-            # join is the identity and _candidates drops it at plan time,
-            # so the politeness windows fold away; below an unlimited
-            # default some budget always binds and the flag stays False
-            low = budget.agg(F.min("tokens")).first()[0]
-            self._budget_all_unlimited = (
-                low is None or low >= FR.UNLIMITED_TOKENS)
-        return self._robots_state, budget
+            if self.tokens_per_host >= FR.UNLIMITED_TOKENS:
+                # when every per-host budget is itself unlimited, _dequeue
+                # passes the literal budget, so the politeness windows fold
+                # away; below an unlimited default some budget always binds
+                # and the flag stays False
+                low = self._robots_state.agg(F.min(RB.delay_budget(
+                    self.round_seconds, self.tokens_per_host))).first()[0]
+                self._budget_all_unlimited = (
+                    low is None or low >= FR.UNLIMITED_TOKENS)
+        return self._robots_state
 
     def _release_robots(self):
         """Drop the robots state; the next round rebuilds it lazily."""
@@ -513,9 +515,9 @@ class CrawlEngine:
             frontier, seen = self._read_frontier(rnd), self.seen()
             use_bcast = self._fetch_broadcast_choice(rnd)
             present, bases = self._survey(frontier)
-            candidates, blocked, budget = self._candidates(
+            candidates, blocked = self._candidates(
                 frontier, seen, bases, use_bcast)
-            dequeued, deferred = self._dequeue(candidates, budget)
+            dequeued, deferred = self._dequeue(candidates)
             # the pool's first tasks compute the round's caches while the
             # driver builds the remaining plans: the dequeue chain as soon
             # as its plan exists, then the whole working set, which every
@@ -574,9 +576,8 @@ class CrawlEngine:
     def _candidates(self, frontier: DataFrame, seen: DataFrame, bases: list,
                     use_bcast: bool) -> tuple:
         """Frontier rows not yet seen, split by robots once the robots.txt
-        of the new ``bases`` is in. Returns (allowed, blocked, host budget);
-        blocked is None without robots, the budget None when no per-host
-        budget can bind."""
+        of the new ``bases`` is in. Returns (allowed, blocked), both with
+        their host's ``crawl_delay``; blocked is None without robots."""
         if self._state_is_empty("seen"):
             candidates = frontier  # cold start: the anti-join is the identity
         else:
@@ -584,25 +585,27 @@ class CrawlEngine:
                                            bloom=self.use_bloom_prefilter)
         if not self.obey_robots:
             # both dequeue outputs read it across several actions
-            return self._persist(candidates), None, None
-        rules, budget = self._robots(bases, use_bcast)
+            return self._persist(candidates), None
         # allowed and blocked filter one cached verdict-joined frame
         candidates, blocked, joined = RB.robots_filter(
-            candidates, rules, persist_split=True)
+            candidates, self._robots(bases, use_bcast), persist_split=True)
         self._round_cache.append(joined)
-        if self._budget_all_unlimited:
-            # a literal budget lets Catalyst fold both politeness windows
-            # out of every consumer's plan
-            budget = None
-        return candidates, blocked, budget
+        return candidates, blocked
 
-    def _dequeue(self, candidates: DataFrame, budget) -> tuple:
+    def _dequeue(self, candidates: DataFrame) -> tuple:
         """Politeness dequeue: (dequeued, deferred) under the per-host
-        token budget."""
+        token budget, a column of the ``crawl_delay`` the verdict join
+        carries."""
+        budget = None
+        if self.obey_robots and not self._budget_all_unlimited:
+            budget = RB.delay_budget(self.round_seconds, self.tokens_per_host)
+        # else the literal budget folds both politeness windows out of
+        # every consumer's plan
         dequeued, deferred = FR.politeness_dequeue(
             candidates, self.tokens_per_host, self.salt_buckets, budget)
         # read by the fetch, the miss anti-join and the seen/metrics writes
-        return self._persist(dequeued), deferred
+        return (self._persist(dequeued.drop("crawl_delay")),
+                deferred.drop("crawl_delay"))
 
     def _fetch_parse(self, dequeued: DataFrame, use_bcast: bool) -> tuple:
         """Fetch the dequeued rows and parse every 2xx page once. Returns

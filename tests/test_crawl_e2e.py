@@ -159,11 +159,20 @@ def test_run_round_refuses_committed_round(spark, corpus, tmp_path_factory):
     assert eng.seen().count() == n_seen
 
 
-# Jobs launched by one budgeted steady round (round 1) of this corpus:
-# 59-60 when the dequeue was a salted window, a count gate, a self-join and a
-# free/easy/hard union (each branch re-running phase 1), 35 as one linear
-# two-window pass (local[4], 4 shuffle partitions). Ceiling = 35 + 25 %.
-MAX_JOBS_PER_ROUND = 44
+@pytest.mark.parametrize("option", ["tokens_per_host", "salt_buckets"])
+@pytest.mark.parametrize("value", [0, -1])
+def test_engine_rejects_politeness_below_one(spark, tmp_path, option, value):
+    """Zero tokens per host would run round after round that fetches
+    nothing; zero salt buckets would divide by zero mid-round. Both are
+    refused when the engine is built."""
+    with pytest.raises(ValueError, match="must be at least 1"):
+        CrawlEngine(spark, str(tmp_path / "pages"), str(tmp_path / "state"),
+                    **{option: value})
+
+
+# Jobs launched by one budgeted steady round (round 1) of this corpus: 33
+# (local[4], 4 shuffle partitions). Ceiling = 33 + 25 %.
+MAX_JOBS_PER_ROUND = 41
 
 
 def _last_job_id(sc) -> int:
@@ -199,8 +208,7 @@ def test_executor_storage_flat_per_round(spark, corpus, tmp_path_factory):
     state = str(tmp_path_factory.mktemp("state_storage"))
     eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
     seeds = eng.seed_frontier(G.seeds())
-    rules, budget = eng._robots(eng._survey(seeds)[1])
-    rules.count(), budget.count()
+    eng._robots(eng._survey(seeds)[1]).count()
     base = _persistent_rdd_ids(spark)
     eng._write_frontier(seeds, 0)
     rnd, counts = 0, []
@@ -337,6 +345,22 @@ def test_robots_requests_leave_no_crawl_state(spark, tmp_path):
     assert fetched == len(pages_requested) == len(seen)
 
 
+@pytest.mark.parametrize("seed", ["http://H.Example/b/x", "HTTP://h.example/b/x"])
+def test_robots_case_folds_scheme_and_host(spark, tmp_path, seed):
+    """A URL with an uppercase scheme or host is judged by the robots.txt
+    of its case-folded base, requested once under that base."""
+    corpus = str(tmp_path / "pages")
+    _write_pages(spark, corpus, {
+        "http://h.example/robots.txt": "User-agent: *\nDisallow: /b\n",
+        "http://h.example/b/x": "<html></html>"})
+    fetcher = RecordingFetcher()
+    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"), fetcher=fetcher)
+    eng.run([(seed, "avm:parse")], fresh=True)
+    assert fetcher.requested == ["http://h.example/robots.txt"]  # page blocked
+    assert [r["fetch_key"] for r in eng.seen().collect()] == ["http://h.example/b/x"]
+    assert eng.fetch_log().agg(F.sum("fetched"), F.sum("errors")).first() == (0, 1)
+
+
 class AnswerFetcher:
     """Answers each request from a url -> (status, body) dict; an unknown
     url answers 404."""
@@ -393,9 +417,9 @@ def test_robots_consumers_do_not_regroup_state(spark, tmp_path):
     """The verdict join and the dequeue read the compiled state as it is
     stored: their executed plans hold no aggregate over its scan."""
     eng, frontier = _split_host_engine(spark, tmp_path)
-    rules, budget = eng._robots(eng._survey(frontier)[1])
+    rules = eng._robots(eng._survey(frontier)[1])
     allowed, _, joined = RB.robots_filter(frontier, rules, persist_split=True)
-    dequeued, _ = eng._dequeue(allowed, budget)
+    dequeued, _ = eng._dequeue(allowed)
     try:
         joined.collect()
         assert len(dequeued.collect()) == 4
@@ -406,6 +430,34 @@ def test_robots_consumers_do_not_regroup_state(spark, tmp_path):
     finally:
         dequeued.unpersist()
         joined.unpersist()
+
+
+def test_dequeue_reads_robots_state_in_one_join(spark, tmp_path):
+    """A round reads the robots state in one join: each host's budget is a
+    column of the verdict-joined rows, so the plans of both dequeue outputs
+    hold the verdict join on host and no other, and the budget still binds
+    (h.example's Crawl-delay 20 over 40 s rounds: 2 of its 3 rows)."""
+    eng, frontier = _split_host_engine(spark, tmp_path)
+    eng.round_seconds = 40
+    try:
+        allowed, _ = eng._candidates(
+            frontier, eng.seen(), eng._survey(frontier)[1], True)
+        dequeued, deferred = eng._dequeue(allowed)
+        # read before any action: the cached verdict join then prints as
+        # one not yet adaptive physical plan, a join as "Join [host#";
+        # a logical join prints as "Join LeftOuter, (host#"
+        for df in (dequeued, deferred):
+            plan = df._jdf.queryExecution().optimizedPlan().toString()
+            joins = re.findall(r"Join (?:\w+, \(|\[)host#", plan)
+            assert len(joins) == 1, plan
+            assert "crawl_delay" not in df.columns
+        hosts = sorted(r["host"] for r in dequeued.collect())
+        assert hosts == ["g.example", "h.example", "h.example"]
+        assert [r["host"] for r in deferred.collect()] == ["h.example"]
+    finally:
+        for df in reversed(eng._round_cache):
+            df.unpersist()
+        eng._release_robots()
 
 
 def test_round_with_zero_crawl_delay_commits(spark, tmp_path):

@@ -145,16 +145,16 @@ def test_host_budget_from_delay(spark):
     compiled = spark.createDataFrame(
         [("h1", [], 2.0, ["http://h1"]), ("h2", [], 0.5, ["http://h2"]),
          ("h3", [], None, ["http://h3"])], RB.ROBOTS_SCHEMA)
-    got = {r["host"]: r["tokens"] for r in
-           RB.host_budget_from_delay(compiled, round_seconds=60, default_tokens=1000).collect()}
-    assert got == {"h1": 30, "h2": 120}  # no delay, no budget row
+    got = {r["host"]: r["tokens"] for r in compiled.select(
+        "host", RB.delay_budget(round_seconds=60, default_tokens=1000)
+        .alias("tokens")).collect()}
+    assert got == {"h1": 30, "h2": 120, "h3": 1000}  # no delay: the default
 
 
 def test_host_budget_one_row_per_host(spark):
     """A host that serves robots.txt under two schemes has two crawl delays;
-    its compiled row keeps the larger, so its budget is one row, the
-    smaller one, and the dequeue's join on host does not duplicate its
-    frontier rows."""
+    its compiled row keeps the larger, so its budget is the smaller one,
+    and the verdict join on host does not duplicate its frontier rows."""
     pages = spark.createDataFrame(
         [("http://h.example/robots.txt", "User-agent: *\nCrawl-delay: 10\n"),
          ("https://h.example/robots.txt", "User-agent: *\nCrawl-delay: 20\n")],
@@ -162,13 +162,14 @@ def test_host_budget_one_row_per_host(spark):
     compiled, delay = RB.build_robots_rules(pages)
     assert [(r["host"], r["crawl_delay"]) for r in compiled.collect()] == [
         ("h.example", 20.0)]
-    budget = RB.host_budget_from_delay(compiled, round_seconds=60,
-                                       default_tokens=1000)
-    assert [tuple(r) for r in budget.collect()] == [("h.example", 3)]
+    budget = RB.delay_budget(round_seconds=60, default_tokens=1000)
+    assert [tuple(r) for r in compiled.select("host", budget).collect()] == [
+        ("h.example", 3)]
     assert [tuple(r) for r in delay.collect()] == [("h.example", 20.0)]
     fr = _frontier_df(spark, [("h.example", 0, f"{i:04d}") for i in range(3)])
-    dq, deferred = FR.politeness_dequeue(fr, tokens_per_host=1000,
-                                         salt_buckets=4, host_budget=budget)
+    allowed, _ = RB.robots_filter(fr, compiled)
+    dq, deferred = FR.politeness_dequeue(allowed, tokens_per_host=1000,
+                                         salt_buckets=4, budget=budget)
     assert dq.count() == 3 and deferred.count() == 0
 
 
@@ -176,21 +177,22 @@ def test_host_budget_one_row_per_host(spark):
     ("0", None, None), ("1e-12", 1e-12, 1000), ("-3", None, None),
     ("inf", None, None), ("0.5", 0.5, 120)])
 def test_crawl_delay_budget_in_range(spark, value, delay, tokens):
-    """A zero, negative or non-finite Crawl-delay sets no budget; any
-    other lands in [1, default_tokens] without a divide-by-zero or a cast
-    overflow under ANSI mode."""
+    """A zero, negative or non-finite Crawl-delay sets no delay, so the
+    host keeps default_tokens; any other lands in [1, default_tokens]
+    without a divide-by-zero or a cast overflow under ANSI mode."""
     body = f"User-agent: *\nCrawl-delay: {value}\n"
     assert RB.parse_robots_txt(body)[1] == delay
     pages = spark.createDataFrame([("http://h.example/robots.txt", body)],
                                   "url string, html string")
     compiled, _ = RB.build_robots_rules(pages)
-    budget = RB.host_budget_from_delay(compiled, round_seconds=60,
-                                       default_tokens=1000)
-    assert {r["host"]: r["tokens"] for r in budget.collect()} == (
-        {} if tokens is None else {"h.example": tokens})
+    budget = RB.delay_budget(round_seconds=60, default_tokens=1000)
+    assert [tuple(r) for r in compiled.select(
+        "host", "crawl_delay", budget).collect()] == [
+        ("h.example", delay, 1000 if tokens is None else tokens)]
     fr = _frontier_df(spark, [("h.example", 0, f"{i:04d}") for i in range(3)])
-    dq, _ = FR.politeness_dequeue(fr, tokens_per_host=1000, salt_buckets=4,
-                                  host_budget=budget)
+    allowed, _ = RB.robots_filter(fr, compiled)
+    dq, _ = FR.politeness_dequeue(allowed, tokens_per_host=1000,
+                                  salt_buckets=4, budget=budget)
     assert dq.count() == 3
 
 

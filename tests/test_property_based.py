@@ -95,9 +95,9 @@ def test_politeness_budget_properties_random(spark):
     """Randomized politeness invariants: dequeued ∪ deferred == frontier
     (no row lost or duplicated), per-host dequeue count <= budget, and the
     dequeued set is the TOP-budget rows per host by (priority desc, seq).
-    The last three trials pass a ``host_budget`` frame that mixes unlimited
-    hosts (every row dequeues) with small per-host budgets; hosts it omits
-    keep ``tokens_per_host``."""
+    The last three trials join a per-host budget frame that mixes unlimited
+    hosts (every row dequeues) with small per-host budgets and pass its
+    column as the budget; hosts it omits keep ``tokens_per_host``."""
     import collections
 
     from pyspark.sql import functions as F
@@ -126,11 +126,13 @@ def test_politeness_budget_properties_random(spark):
                         rng.integers(0, 2))
                 elif (h + trial) % 3 == 2:
                     per_host_budget[f"h{h}"] = int(rng.integers(1, 6))
-            host_budget = spark.createDataFrame(
-                list(per_host_budget.items()), "host string, tokens int")
+            frontier = frontier.join(F.broadcast(spark.createDataFrame(
+                list(per_host_budget.items()), "host string, tokens int")),
+                "host", "left")
+            host_budget = F.coalesce("tokens", F.lit(budget))
         deq, defer = FR.politeness_dequeue(
             frontier, tokens_per_host=budget, salt_buckets=salts,
-            host_budget=host_budget)
+            budget=host_budget)
         d = [(r["host"], r["seq"], r["priority"]) for r in deq.collect()]
         f = [(r["host"], r["seq"], r["priority"]) for r in defer.collect()]
         allrows = [(r[0], r[3], r[2]) for r in rows]

@@ -9,6 +9,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from firmwarescraper_spark.operators import robots as RB
 from firmwarescraper_spark.plans.crawl import CrawlEngine
 from firmwarescraper_spark.sources import generate as G
 
@@ -294,8 +295,8 @@ def test_robots_http_lineage_bounded(spark, tmp_path):
 
     def frontier_for(hosts):
         return spark.createDataFrame(
-            [(f"http://{h}/p", h, "avm:parse") for h in hosts],
-            "url string, host string, rule string")
+            [(f"http://{h}/p", f"http://{h}/p", h, "avm:parse") for h in hosts],
+            "url string, canon_url string, host string, rule string")
 
     plans = []
     for k in range(6):
@@ -310,11 +311,13 @@ def test_robots_http_lineage_bounded(spark, tmp_path):
     assert "Aggregate" not in plans[-1]
     assert len(plans[-1]) <= len(plans[1]) + 50  # does not grow with k
     # and the data is complete + correct after 6 incremental extensions
-    rules, budget = eng._robots([])
+    rules = eng._robots([])
     hosts = {r["host"] for r in rules.collect()}
     assert hosts == {f"h{j}.example" for j in range(6)}
     assert rules.count() == len(hosts)  # one compiled row per host
-    assert {r["host"] for r in budget.collect()} == hosts
+    budget = RB.delay_budget(eng.round_seconds, eng.tokens_per_host)
+    assert {tuple(r) for r in rules.select("host", budget).collect()} == {
+        (h, 30) for h in hosts}  # Crawl-delay 2 over 60 s rounds
     # each base was requested exactly once
     assert sorted(fetcher.requested) == sorted(
         f"http://h{j}.example/robots.txt" for j in range(6))

@@ -186,18 +186,18 @@ def test_decontaminate_oracle_values_unchanged(spark):
 
 def test_unlimited_budget_fold_state_parity(spark, tmp_path_factory):
     """run_round's plan-time budget fold (every robots-derived budget >=
-    UNLIMITED_TOKENS -> skip the broadcast budget join so the politeness
-    windows fold away) must leave the crawl state bit-identical to the
-    joined path."""
+    UNLIMITED_TOKENS -> pass the literal budget instead of the per-host
+    Crawl-delay column, so the politeness windows fold away) must leave
+    the crawl state bit-identical to the per-host budget path."""
     from firmwarescraper_spark.plans.crawl import CrawlEngine
     from firmwarescraper_spark.sources import generate as G
 
     corpus = str(tmp_path_factory.mktemp("bfold") / "pages")
     G.write_corpus(spark, corpus, n_avm=3, n_linksys=2, partitions=2)
 
-    def run(force_join: bool):
+    def run(force_column: bool):
         state = str(tmp_path_factory.mktemp(
-            "bfold_state_" + ("join" if force_join else "fold")))
+            "bfold_state_" + ("column" if force_column else "fold")))
         eng = CrawlEngine(spark, corpus, state,
                           tokens_per_host=10 ** 9, salt_buckets=4,
                           round_seconds=10 ** 9)
@@ -205,8 +205,8 @@ def test_unlimited_budget_fold_state_parity(spark, tmp_path_factory):
         # extends the robots state again (nor recomputes the flag)
         eng._robots(eng._survey(eng.seed_frontier(G.seeds()))[1])
         assert eng._budget_all_unlimited
-        if force_join:
-            eng._budget_all_unlimited = False  # take the joined path
+        if force_column:
+            eng._budget_all_unlimited = False  # take the column path
         eng.run(G.seeds(), fresh=True)
         seen = sorted((r["url_hash"], r["fetch_key"], r["round"])
                       for r in eng.seen().collect())
