@@ -304,11 +304,39 @@ def write_bucketed(df: DataFrame, table: str, buckets: int = 32,
 UNLIMITED_TOKENS = 10 ** 9
 
 
+def politeness_columns(tokens_per_host: int = 64, salt_buckets: int = 8,
+                       budget: Column | None = None) -> dict:
+    """The columns of ``politeness_dequeue``: ``ranks``, the column dicts
+    its chain adds in order, and the ``dequeued`` and ``deferred``
+    filters. They name input columns only, so one build serves every
+    frontier: the crawl engine builds them once per setting."""
+    order = (F.desc("priority"), F.asc("seq"))
+    free = F.col("_budget") >= UNLIMITED_TOKENS
+    survivor = ~free & (F.col("_r1") <= F.col("_budget"))
+    take = free | (survivor & (F.col("_r2") <= F.col("_budget")))
+    return {
+        "ranks": (
+            {"_budget": F.lit(tokens_per_host) if budget is None else budget,
+             "_salt": F.pmod(F.xxhash64("canon_url"), F.lit(salt_buckets))},
+            {"_r1": F.row_number().over(
+                Window.partitionBy("host", "_salt").orderBy(*order))},
+            {"_r2": F.row_number().over(
+                Window.partitionBy(
+                    "host", F.when(survivor, F.lit(-1)).otherwise(F.col("_salt"))
+                ).orderBy(*order))},
+            {"_take": take},
+        ),
+        "dequeued": F.col("_take"),
+        "deferred": ~F.col("_take"),
+    }
+
+
 def politeness_dequeue(
     frontier: DataFrame,
     tokens_per_host: int = 64,
     salt_buckets: int = 8,
     budget: Column | None = None,
+    columns: dict | None = None,
 ) -> tuple:
     """Dequeue up to ``budget`` URLs per host this round; returns
     (dequeued, deferred).
@@ -318,6 +346,8 @@ def politeness_dequeue(
     passes ``robots.delay_budget``: Crawl-delay, the reference's per-domain
     DOWNLOAD_DELAY (its firmware/spiders/asus.py:38-42), as fixed tokens
     per round, no wall clock, in correctness mode — SURVEY.md §7.0.
+    ``columns`` is a ``politeness_columns`` build of the same three
+    settings to reuse.
 
     One linear chain, no aggregate, join or union: phase 1 ranks ``_r1``
     within (host, salt); the rows with ``_r1 <= budget`` of a capped host
@@ -328,27 +358,14 @@ def politeness_dequeue(
     with the hot host's backlog. ``dequeued`` and ``deferred`` are the two
     filters of the same ranked frame.
     """
-    order = (F.desc("priority"), F.asc("seq"))
-    salt = F.pmod(F.xxhash64("canon_url"), F.lit(salt_buckets))
-    free = F.col("_budget") >= UNLIMITED_TOKENS
-    survivor = ~free & (F.col("_r1") <= F.col("_budget"))
-    take = free | (survivor & (F.col("_r2") <= F.col("_budget")))
-    ranked = (
-        frontier.withColumn(
-            "_budget", F.lit(tokens_per_host) if budget is None else budget)
-        .withColumn("_salt", salt)
-        .withColumn("_r1", F.row_number().over(
-            Window.partitionBy("host", "_salt").orderBy(*order)))
-        .withColumn("_r2", F.row_number().over(
-            Window.partitionBy(
-                "host", F.when(survivor, F.lit(-1)).otherwise(F.col("_salt"))
-            ).orderBy(*order)))
-        .withColumn("_take", take)
-    )
+    if columns is None:
+        columns = politeness_columns(tokens_per_host, salt_buckets, budget)
+    ranked = frontier
+    for step in columns["ranks"]:
+        ranked = ranked.withColumns(step)
     aux = ["_budget", "_salt", "_r1", "_r2", "_take"]
-    dequeued = ranked.filter(F.col("_take")).drop(*aux)
-    deferred = ranked.filter(~F.col("_take")).drop(*aux)
-    return dequeued, deferred
+    return (ranked.filter(columns["dequeued"]).drop(*aux),
+            ranked.filter(columns["deferred"]).drop(*aux))
 
 
 def dedup_new_children(children: DataFrame, seen: DataFrame) -> DataFrame:

@@ -97,10 +97,11 @@ def robots_files(df: DataFrame) -> DataFrame:
     its rules apply to and the ``base`` it covers."""
     is_robots = F.col("url").rlike(r"^[A-Za-z]+://[^/?#]+/robots\.txt$")
     base = url_base(F.col("url"))
-    # the host drops the port because the frontier's host key does: a row
-    # keyed "h:8080" would never join; the base keeps it
+    # the host drops the userinfo and the port because the frontier's host
+    # key does: a row keyed "u@h" or "h:8080" would never join; the base
+    # keeps both
     return df.filter(is_robots).withColumns({
-        "host": F.regexp_extract(base, r"://(.+?)(:\d+)?$", 1),
+        "host": F.regexp_extract(base, r"://(?:[^@]*@)?(.+?)(:\d+)?$", 1),
         "base": base,
     })
 
@@ -175,24 +176,11 @@ def compile_robots(rows: DataFrame) -> DataFrame:
     )
 
 
-def robots_filter(frontier: DataFrame, compiled: DataFrame,
-                  persist_split: bool = False) -> tuple:
-    """Split frontier into (allowed, blocked) by protego longest-match:
-    a URL is blocked iff its longest matching Disallow rule is strictly
-    longer than its longest matching Allow rule. Both carry the host's
-    ``crawl_delay`` (null without one), the input of ``delay_budget``.
-
-    ``persist_split=True`` persists the verdict-joined parent and
-    returns ``(allowed, blocked, joined)`` — both branches then filter
-    ONE cached frame instead of each consumer re-running the rules join
-    and the verdict fold. The caller owns ``joined.unpersist()``.
-
-    Plan shape: one join on host against the compiled rows, then a
-    per-frontier-row fold over the host's rule array — no aggregate, no
-    Exchange of the frontier past the join's own. The join carries no
-    broadcast hint: the compiled rows scale with host count, so past the
-    broadcast threshold it degrades to a shuffle join."""
-    path = F.regexp_replace("canon_url", r"^[a-z]+://[^/]*", "")
+def verdict_columns() -> dict:
+    """The columns of ``robots_filter``, by the step of its chain that
+    adds them. They name input columns only, so one build serves every
+    frontier and every compiled state: the crawl engine builds them once
+    and passes them in each round."""
     best = lambda want_allow: F.aggregate(  # noqa: E731
         F.filter(F.col("_rules"),
                  lambda r: r["is_allow"] if want_allow
@@ -204,24 +192,53 @@ def robots_filter(frontier: DataFrame, compiled: DataFrame,
             r["rule_len"],
         ).otherwise(acc),
     )
-    scored = (
-        frontier.withColumn("_path", path)
-        .join(compiled.select("host", F.col("rules").alias("_rules"),
-                              "crawl_delay"),
-              "host", "left")
-        .withColumn("_allow", F.when(F.col("_rules").isNotNull(),
-                                     best(True)).otherwise(F.lit(-1)))
-        .withColumn("_deny", F.when(F.col("_rules").isNotNull(),
-                                    best(False)).otherwise(F.lit(-1)))
+    blocked = F.coalesce(F.col("_blocked"), F.lit(False))
+    return {
+        "path": {"_path": F.regexp_replace("canon_url", r"^[a-z]+://[^/]*", "")},
+        "rules": [F.col("host"), F.col("rules").alias("_rules"), F.col("crawl_delay")],
+        "scores": {
+            side: F.when(F.col("_rules").isNotNull(), best(want_allow))
+            .otherwise(F.lit(-1))
+            for side, want_allow in (("_allow", True), ("_deny", False))},
+        # tie (equal lengths) -> Allow wins (protego)
+        "verdict": {"_blocked": (F.col("_deny") >= 0)
+                    & (F.col("_deny") > F.col("_allow"))},
+        "allowed": ~blocked,
+        "blocked": blocked,
+    }
+
+
+def robots_filter(frontier: DataFrame, compiled: DataFrame,
+                  persist_split: bool = False,
+                  columns: dict | None = None) -> tuple:
+    """Split frontier into (allowed, blocked) by protego longest-match:
+    a URL is blocked iff its longest matching Disallow rule is strictly
+    longer than its longest matching Allow rule. Both carry the host's
+    ``crawl_delay`` (null without one), the input of ``delay_budget``.
+    ``columns`` is a ``verdict_columns()`` build to reuse.
+
+    ``persist_split=True`` persists the verdict-joined parent and
+    returns ``(allowed, blocked, joined)`` — both branches then filter
+    ONE cached frame instead of each consumer re-running the rules join
+    and the verdict fold. The caller owns ``joined.unpersist()``.
+
+    Plan shape: one join on host against the compiled rows, then a
+    per-frontier-row fold over the host's rule array — no aggregate, no
+    Exchange of the frontier past the join's own. The join carries no
+    broadcast hint: the compiled rows scale with host count, so past the
+    broadcast threshold it degrades to a shuffle join."""
+    c = verdict_columns() if columns is None else columns
+    joined = (
+        frontier.withColumns(c["path"])
+        .join(compiled.select(*c["rules"]), "host", "left")
+        .withColumns(c["scores"])
+        .withColumns(c["verdict"])
+        .drop("_path", "_rules", "_allow", "_deny")
     )
-    # tie (equal lengths) -> Allow wins (protego)
-    joined = scored.withColumn(
-        "_blocked", (F.col("_deny") >= 0) & (F.col("_deny") > F.col("_allow"))
-    ).drop("_path", "_rules", "_allow", "_deny")
     if persist_split:
         joined = joined.persist()
-    allowed = joined.filter(~F.coalesce(F.col("_blocked"), F.lit(False))).drop("_blocked")
-    blocked = joined.filter(F.coalesce(F.col("_blocked"), F.lit(False))).drop("_blocked")
+    allowed = joined.filter(c["allowed"]).drop("_blocked")
+    blocked = joined.filter(c["blocked"]).drop("_blocked")
     if persist_split:
         return allowed, blocked, joined
     return allowed, blocked

@@ -65,6 +65,157 @@ FRONTIER_SCHEMA = StructType([
 ])
 
 
+# -- the round's Columns: each builder runs once per engine and setting
+# (CrawlEngine._columns); the round stages reuse what it returns
+
+
+def _frontier_fixes() -> dict:
+    """The migrations ``_read_frontier`` applies to a snapshot's columns."""
+    return {
+        # state-dir forward compat (ADVICE r2): a frontier snapshot written
+        # before retry_count existed reads as null under the explicit
+        # schema, and null < max_retries would silently drop those rows
+        # from the retry path — coalesce to 0 so old state resumes intact
+        "retry_count": F.coalesce(F.col("retry_count"), F.lit(0)),
+        # seq-width migration (ADVICE r3): snapshots written by the
+        # %06d-era engine mix pad widths with new %09d rows on resume,
+        # breaking the lexicographic==numeric DFS-order invariant
+        # ('000123' > '000000456'). Left-pad every short all-digit
+        # dot-component to 9; non-numeric components (e.g. bench frontiers
+        # seeded with seq=url) pass through.
+        "seq": F.array_join(
+            F.transform(
+                F.split(F.col("seq"), r"\."),
+                lambda c: F.when(
+                    c.rlike("^[0-9]{1,8}$"), F.lpad(c, 9, "0")
+                ).otherwise(c),
+            ),
+            ".",
+        ),
+    }
+
+
+def _key_columns() -> tuple:
+    """The frontier keys of (url, form_data) rows, as the column dicts
+    that add them in order: canon_url and host, fetch_key, url_hash."""
+    return (
+        {"canon_url": U.canonicalize_url_udf()(F.col("url")),
+         "host": U.url_host_udf()(F.col("url"))},
+        {"fetch_key": U.fetch_key_col(F.col("canon_url"), F.col("form_data"))},
+        {"url_hash": F.xxhash64("fetch_key")},
+    )
+
+
+def _frontier_cols() -> list:
+    return [F.col(f.name) for f in FRONTIER_SCHEMA.fields]
+
+
+def _seen_cols() -> list:
+    return [F.col("url_hash"), F.col("fetch_key")]
+
+
+def _survey_columns(obey_robots: bool) -> dict:
+    """``CrawlEngine._survey``'s columns: the frontier's and the robots
+    state's rows of (rule, base, _covered) and the summary aggregates."""
+    fresh = F.array_except(
+        F.collect_set(F.when(~F.col("_covered"), F.col("base"))),
+        F.collect_set(F.when(F.col("_covered"), F.col("base"))))
+    return {
+        "frontier": [F.col("rule"), RB.url_base(F.col("canon_url")).alias("base"),
+                     F.lit(False).alias("_covered")],
+        "covered": [F.lit(None).cast("string").alias("rule"),
+                    F.explode("bases").alias("base"), F.lit(True).alias("_covered")],
+        "agg": [F.collect_set("rule"),
+                fresh if obey_robots else F.array().cast("array<string>")],
+    }
+
+
+def _politeness_columns(tokens_per_host: int, salt_buckets: int,
+                        round_seconds: float | None) -> dict:
+    """``FR.politeness_columns`` under the Crawl-delay budget over
+    ``round_seconds``, or, when None, the literal ``tokens_per_host``,
+    which folds both politeness windows out of every consumer's plan."""
+    budget = (None if round_seconds is None
+              else RB.delay_budget(round_seconds, tokens_per_host))
+    return FR.politeness_columns(tokens_per_host, salt_buckets, budget)
+
+
+def _fetch_on():
+    return F.col("_page_url") == F.col("fetch_key")
+
+
+def _fetch_columns(max_fetch_bytes: int, max_retries: int) -> dict:
+    """``CrawlEngine._fetch_parse``'s columns under these settings."""
+    from firmwarescraper_spark.functions.html import PAGE_STRUCT, parse_page_udf
+    from firmwarescraper_spark.plans.fetchers import RETRY_STATUS
+
+    is_2xx = (F.col("status") >= 200) & (F.col("status") < 300)
+    names = [f.name for f in PAGE_STRUCT.fields]
+    return {
+        "2xx": is_2xx,
+        "failed": ~is_2xx,
+        # F12 download_maxsize (avm_gpl.py:27): an oversized 2xx body is a
+        # retryable failure
+        "capped": {"status": F.when(
+            is_2xx & (F.length("html") > F.lit(max_fetch_bytes)),
+            F.lit(503)).otherwise(F.col("status"))},
+        "parse": {
+            "page_bytes": F.length("html"),
+            "parsed": parse_page_udf(tuple(sorted(RP.RULE_PARSE_FIELDS.items())))(
+                F.col("html"), F.col("rule")),
+            # raw bodies are kept only for FTP rules, whose pages are JSON
+            # listings read downstream; the rest stay out of the cache
+            "html": F.when(F.col("rule").contains("ftp"), F.col("html")),
+        },
+        "split": [F.col("*"), *[F.col("parsed").getField(n).alias("_pf_" + n)
+                                for n in names]],
+        "struct": {"parsed": F.struct(*[F.col("_pf_" + n).alias(n)
+                                        for n in names])},
+        "url_hash": F.col("url_hash"),
+        "missing": {"status": F.lit(404)},
+        "retry": (F.col("status").isin(*RETRY_STATUS)
+                  & (F.col("retry_count") < F.lit(max_retries))),
+        "retried": {"retry_count": F.col("retry_count") + 1},
+    }
+
+
+def _child_columns(patterns: tuple) -> dict:
+    """``CrawlEngine._next_frontier``'s columns for new children under the
+    offsite ``patterns`` ((family, host regex) pairs)."""
+    # F8 offsite filter: each child checks its rule family's pattern
+    family = F.substring_index(F.col("rule"), ":", 1)
+    return {
+        "offsite": F.coalesce(*[F.when(family == f, F.col("host").rlike(p))
+                                for f, p in patterns], F.lit(False)),
+        "fill": {
+            "priority": FR.priority_score(F.col("url")),
+            # seq is a lexicographically ordered DFS path key; %09d must
+            # match simulator._pad exactly
+            "seq": F.concat_ws(".", F.col("parent_seq"),
+                               F.format_string("%09d", F.col("pos"))),
+            "retry_count": F.lit(0),
+        },
+    }
+
+
+def _metrics_columns() -> dict:
+    """``CrawlEngine._metrics``' grouping and its aggregates per kind of
+    row: (fetched, bytes, errors, retries)."""
+    zero, n = F.lit(0).cast("long"), F.count("*")
+
+    def aggs(*cols):
+        return [c.alias(name) for c, name in
+                zip(cols, ("fetched", "bytes", "errors", "retries"))]
+
+    return {
+        "by": [F.spark_partition_id().alias("partition_id"), F.col("host")],
+        "ok": aggs(n, F.sum("page_bytes"), zero, zero),
+        "terminal": aggs(zero, zero, n, zero),
+        "retryable": aggs(zero, zero, zero, n),
+        "blocked": aggs(zero, zero, n, zero),
+    }
+
+
 def _union(dfs) -> DataFrame | None:
     """unionByName of the non-None frames, or None if there are none."""
     dfs = [df for df in dfs if df is not None]
@@ -129,7 +280,20 @@ class CrawlEngine:
         self._budget_all_unlimited = False
         self._has_fail_col = None
         self._round_cache = []
-        self._packs = {}  # rule -> its built columns (RP.extract)
+        self._built = {}  # key -> round-invariant Columns (see _columns)
+
+    def _columns(self, build, *settings):
+        """The round-invariant Columns ``build(*settings)``, built the first
+        time a round asks for them and reused by every later round. Every
+        round runs the same program, so rebuilding its expressions (py4j
+        round trips for every ``F.*`` call) is driver time each round pays
+        again. A Column is an unresolved expression of one session, so the
+        cache lives on the engine; ``settings`` are every value the
+        Columns read."""
+        key = (build, *settings)
+        if key not in self._built:
+            self._built[key] = build(*settings)
+        return self._built[key]
 
     # -- state paths ---------------------------------------------------------
     def _p(self, *parts) -> str:
@@ -190,56 +354,56 @@ class CrawlEngine:
         ]
         return max(cands) if cands else -1
 
-    def _read_state(self, table: str, empty_schema: str,
-                    explicit_schema: str | None = None) -> DataFrame:
+    # each table's schema, read explicitly: inferring it from the parquet
+    # footers is a Spark job at the start of every round, and a state dir
+    # mixing files written before and after a column existed (ADVICE r2:
+    # fetch_log's `retries`) must not depend on which footer the reader
+    # samples; a missing column reads null
+    _STATE_SCHEMAS = {
+        "seen": "url_hash long, fetch_key string, round int",
+        "items": (
+            "vendor array<string>, device_name array<string>, "
+            "firmware_version array<string>, device_class array<string>, "
+            "release_date array<string>, file_urls array<string>, round int"),
+        "fetch_log": (
+            "partition_id int, host string, fetched long, bytes long, "
+            "errors long, retries long, round int"),
+        "quarantine": (
+            "url string, rule string, reason string, detail string, round int"),
+    }
+    _STATE_TABLES = tuple(_STATE_SCHEMAS)
+
+    def _read_state(self, table: str) -> DataFrame:
+        schema = self._STATE_SCHEMAS[table]
         base = self._p(table)
         c = self._latest_compact(table)
         dfs = []
         if c >= 0:
-            reader = self.spark.read
-            if explicit_schema:
-                reader = reader.schema(explicit_schema)
-            dfs.append(reader.parquet(self._p(table + "_compact", f"upto={c}")))
+            dfs.append(self.spark.read.schema(schema).parquet(
+                self._p(table + "_compact", f"upto={c}")))
         if os.path.exists(base):
             deltas = [
                 os.path.join(base, d) for d in os.listdir(base)
                 if d.startswith("round=") and int(d.split("=")[1]) > c
             ]
             if deltas:
-                reader = self.spark.read.option("basePath", base)
-                if explicit_schema:
-                    reader = reader.schema(explicit_schema)
-                dfs.append(reader.parquet(*deltas))
+                dfs.append(self.spark.read.schema(schema)
+                           .option("basePath", base).parquet(*deltas))
         if not dfs:
-            return self.spark.createDataFrame([], empty_schema)
+            return self.spark.createDataFrame([], schema)
         df = dfs[0]
         for d in dfs[1:]:
             df = df.unionByName(d)
         return self._rollback(df)
 
     def seen(self) -> DataFrame:
-        return self._read_state(
-            "seen", "url_hash long, fetch_key string, round int"
-        )
+        return self._read_state("seen")
 
     def items(self) -> DataFrame:
-        return self._read_state(
-            "items",
-            "vendor array<string>, device_name array<string>, "
-            "firmware_version array<string>, device_class array<string>, "
-            "release_date array<string>, file_urls array<string>, round int",
-        )
+        return self._read_state("items")
 
     def fetch_log(self) -> DataFrame:
-        # explicit schema (ADVICE r2): a state dir mixing files written
-        # before/after the `retries` column existed must not depend on
-        # which footer the reader samples; missing columns read null
-        schema = (
-            "partition_id int, host string, fetched long, bytes long, "
-            "errors long, retries long, round int"
-        )
-        df = self._read_state("fetch_log", schema, explicit_schema=schema)
-        return df.withColumn(
+        return self._read_state("fetch_log").withColumn(
             "retries", F.coalesce(F.col("retries"), F.lit(0).cast("long"))
         )
 
@@ -247,12 +411,7 @@ class CrawlEngine:
         """J3 class-map misses (the reference raises
         UnknownDeviceClassException, linksys.py:126-133; the engine routes
         the offending rows here so they are auditable, not silently lost)."""
-        return self._read_state(
-            "quarantine",
-            "url string, rule string, reason string, detail string, round int",
-        )
-
-    _STATE_TABLES = ("seen", "items", "fetch_log", "quarantine")
+        return self._read_state("quarantine")
 
     def _state_is_empty(self, table: str) -> bool:
         """True iff ``_read_state`` would return the empty relation
@@ -306,21 +465,22 @@ class CrawlEngine:
         for i, seed in enumerate(seeds):
             url, rule, form = seed if len(seed) == 3 else (*seed, None)
             rows.append((url, rule, f"{i:09d}", form or {}))
-        df = self.spark.createDataFrame(
+        df = self._with_keys(self.spark.createDataFrame(
             rows, "url string, rule string, seq string, form_data map<string,string>"
-        )
-        return (
-            df.withColumn("canon_url", U.canonicalize_url_udf()(F.col("url")))
-            .withColumn("fetch_key", U.fetch_key_col(F.col("canon_url"), F.col("form_data")))
-            .withColumn("url_hash", F.xxhash64("fetch_key"))
-            .withColumn("host", U.url_host_udf()(F.col("url")))
-            .withColumn("depth", F.lit(0))
-            .withColumn("priority", FR.priority_score(F.col("url")))
-            .withColumn("lineage", F.create_map().cast("map<string,string>"))
-            .withColumn("round_added", F.lit(0))
-            .withColumn("retry_count", F.lit(0))
-            .select([f.name for f in FRONTIER_SCHEMA.fields])
-        )
+        ))
+        return df.withColumns({
+            "depth": F.lit(0),
+            "priority": FR.priority_score(F.col("url")),
+            "lineage": F.create_map().cast("map<string,string>"),
+            "round_added": F.lit(0),
+            "retry_count": F.lit(0),
+        }).select(*self._columns(_frontier_cols))
+
+    def _with_keys(self, df: DataFrame) -> DataFrame:
+        """``df`` (url, form_data, ...) with its frontier keys."""
+        for step in self._columns(_key_columns):
+            df = df.withColumns(step)
+        return df
 
     # -- checkpoint helpers ----------------------------------------------------
     def _write_frontier(self, df: DataFrame, rnd: int):
@@ -330,30 +490,7 @@ class CrawlEngine:
         df = self.spark.read.schema(FRONTIER_SCHEMA).parquet(
             self._p("frontier", f"round={rnd}")
         )
-        # state-dir forward compat (ADVICE r2): a frontier snapshot written
-        # before retry_count existed reads as null under the explicit
-        # schema, and null < max_retries would silently drop those rows
-        # from the retry path — coalesce to 0 so old state resumes intact
-        df = df.withColumn(
-            "retry_count", F.coalesce(F.col("retry_count"), F.lit(0))
-        )
-        # seq-width migration (ADVICE r3): snapshots written by the %06d-era
-        # engine mix pad widths with new %09d rows on resume, breaking the
-        # lexicographic==numeric DFS-order invariant ('000123' > '000000456').
-        # Left-pad every short all-digit dot-component to 9; non-numeric
-        # components (e.g. bench frontiers seeded with seq=url) pass through.
-        return df.withColumn(
-            "seq",
-            F.array_join(
-                F.transform(
-                    F.split(F.col("seq"), r"\."),
-                    lambda c: F.when(
-                        c.rlike("^[0-9]{1,8}$"), F.lpad(c, 9, "0")
-                    ).otherwise(c),
-                ),
-                ".",
-            ),
-        )
+        return df.withColumns(self._columns(_frontier_fixes))
 
     def _max_round(self, table: str) -> int:
         """Highest ``round=N`` entry under ``table``, or -1."""
@@ -414,9 +551,8 @@ class CrawlEngine:
         """The fetch stage's corpus equi-join; build side per the gate."""
         pages = self.pages().withColumnRenamed("url", "_page_url")
         build = F.broadcast(dequeued) if use_bcast else dequeued
-        return pages.join(
-            build, F.col("_page_url") == build["fetch_key"], "inner"
-        ).drop("_page_url")
+        return pages.join(build, self._columns(_fetch_on), "inner").drop(
+            "_page_url")
 
     # -- the round job -----------------------------------------------------------
     def _survey(self, frontier: DataFrame) -> tuple:
@@ -425,20 +561,11 @@ class CrawlEngine:
         robots state does not hold yet. The covered bases join the job as a
         union branch, not a join, so a round that reaches no new base pays
         no job for robots of its own."""
-        rows = frontier.select(
-            "rule", RB.url_base(F.col("canon_url")).alias("base"),
-            F.lit(False).alias("_covered"))
+        c = self._columns(_survey_columns, self.obey_robots)
+        rows = frontier.select(*c["frontier"])
         if self._robots_state is not None:
-            rows = rows.unionByName(self._robots_state.select(
-                F.lit(None).cast("string").alias("rule"),
-                F.explode("bases").alias("base"), F.lit(True).alias("_covered")))
-        fresh = F.array_except(
-            F.collect_set(F.when(~F.col("_covered"), F.col("base"))),
-            F.collect_set(F.when(F.col("_covered"), F.col("base"))))
-        present, bases = rows.agg(
-            F.collect_set("rule"),
-            fresh if self.obey_robots else F.array().cast("array<string>"),
-        ).first()
+            rows = rows.unionByName(self._robots_state.select(*c["covered"]))
+        present, bases = rows.agg(*c["agg"]).first()
         return sorted(set(present) & RP.PACKS.keys()), sorted(bases)
 
     def _robots(self, bases: list, use_bcast: bool = True) -> DataFrame:
@@ -529,9 +656,10 @@ class CrawlEngine:
             # rows included; retryable misses must pass the next anti-join.
             # Cached, it is one leaf for the seen write and the children
             # dedup instead of a copy of the whole round plan in each.
+            keys = self._columns(_seen_cols)
             seen_add = self._persist(_union([
-                df.select("url_hash", "fetch_key")
-                for df in (ok, terminal, blocked) if df is not None]))
+                df.select(*keys) for df in (ok, terminal, blocked)
+                if df is not None]))
             warm.append(pool.submit(seen_add.count))
             mark("materialize")
             children, items, quarantine = self._extract(present, ok)
@@ -539,8 +667,7 @@ class CrawlEngine:
                 rnd, deferred, retryable, children,
                 # a projection keeps the union from flattening seen_add
                 # away, so its cache still matches
-                seen_add.select("url_hash", "fetch_key").unionByName(
-                    seen.select("url_hash", "fetch_key")))
+                seen_add.select(*keys).unionByName(seen.select(*keys)))
             metrics = self._metrics(ok, terminal, retryable, blocked)
             mark("plan_build")
             for fut in warm:
@@ -588,7 +715,8 @@ class CrawlEngine:
             return self._persist(candidates), None
         # allowed and blocked filter one cached verdict-joined frame
         candidates, blocked, joined = RB.robots_filter(
-            candidates, self._robots(bases, use_bcast), persist_split=True)
+            candidates, self._robots(bases, use_bcast), persist_split=True,
+            columns=self._columns(RB.verdict_columns))
         self._round_cache.append(joined)
         return candidates, blocked
 
@@ -596,13 +724,11 @@ class CrawlEngine:
         """Politeness dequeue: (dequeued, deferred) under the per-host
         token budget, a column of the ``crawl_delay`` the verdict join
         carries."""
-        budget = None
-        if self.obey_robots and not self._budget_all_unlimited:
-            budget = RB.delay_budget(self.round_seconds, self.tokens_per_host)
-        # else the literal budget folds both politeness windows out of
-        # every consumer's plan
-        dequeued, deferred = FR.politeness_dequeue(
-            candidates, self.tokens_per_host, self.salt_buckets, budget)
+        by_delay = self.obey_robots and not self._budget_all_unlimited
+        columns = self._columns(
+            _politeness_columns, self.tokens_per_host, self.salt_buckets,
+            self.round_seconds if by_delay else None)
+        dequeued, deferred = FR.politeness_dequeue(candidates, columns=columns)
         # read by the fetch, the miss anti-join and the seen/metrics writes
         return (self._persist(dequeued.drop("crawl_delay")),
                 deferred.drop("crawl_delay"))
@@ -612,11 +738,7 @@ class CrawlEngine:
         (ok, terminal, retryable): parsed pages, failures final this round
         (404s and exhausted retries) and failures re-queued with their
         retry_count bumped (None when only misses can fail)."""
-        from firmwarescraper_spark.functions.html import (
-            PAGE_STRUCT, parse_page_udf,
-        )
-        from firmwarescraper_spark.plans.fetchers import RETRY_STATUS
-
+        c = self._columns(_fetch_columns, self.max_fetch_bytes, self.max_retries)
         self.pages()  # resolves _has_fail_col for CorpusFetcher
         fetched = self.fetcher.fetch(dequeued, use_bcast)
         resolves_all = getattr(self.fetcher, "resolves_all", True)
@@ -624,37 +746,20 @@ class CrawlEngine:
             # a fetcher that returns every row (HttpFetcher: real network
             # requests) must not be re-run by the ok/failed consumers
             fetched = self._persist(fetched)
-        is_2xx = (F.col("status") >= 200) & (F.col("status") < 300)
         capped = self.max_fetch_bytes < 2_147_483_648
         if capped:
-            # F12 download_maxsize (avm_gpl.py:27): an oversized 2xx body
-            # is a retryable failure. Only under a non-default cap, so the
-            # corpus fetcher's literal status still folds failures away.
-            fetched = fetched.withColumn("status", F.when(
-                is_2xx & (F.length("html") > F.lit(self.max_fetch_bytes)),
-                F.lit(503)).otherwise(F.col("status")))
-        ok = (
-            fetched.filter(is_2xx).drop("status")
-            .withColumn("page_bytes", F.length("html"))
-            .withColumn("parsed", parse_page_udf(
-                tuple(sorted(RP.RULE_PARSE_FIELDS.items())))(
-                    F.col("html"), F.col("rule")))
-            # raw bodies are kept only for FTP rules, whose pages are JSON
-            # listings read downstream; the rest stay out of the cache
-            .withColumn("html",
-                        F.when(F.col("rule").contains("ftp"), F.col("html")))
-        )
+            # only under a non-default cap, so the corpus fetcher's literal
+            # status still folds failures away
+            fetched = fetched.withColumns(c["capped"])
+        ok = fetched.filter(c["2xx"]).drop("status").withColumns(c["parse"])
         # cache one column per PAGE_STRUCT field (the columnar cache prunes
         # by column); the struct the rule packs read is a view Catalyst
         # folds back onto the cached columns
-        names = [f.name for f in PAGE_STRUCT.fields]
-        ok = self._persist(ok.select("*", *[
-            F.col("parsed").getField(n).alias("_pf_" + n) for n in names
-        ]).drop("parsed")).withColumn(
-            "parsed", F.struct(*[F.col("_pf_" + n).alias(n) for n in names]))
+        ok = self._persist(ok.select(*c["split"]).drop("parsed")).withColumns(
+            c["struct"])
 
         def minus(df, keys):
-            keys = keys.select("url_hash")
+            keys = keys.select(c["url_hash"])
             return df.join(F.broadcast(keys) if use_bcast else keys,
                            "url_hash", "left_anti")
 
@@ -664,16 +769,13 @@ class CrawlEngine:
             return ok, self._persist(minus(dequeued, ok)), None
         # T3 retry split: scrapy retries RETRY_HTTP_CODES (5xx/408/429,
         # oversize, network error) RETRY_TIMES times; a 404 is terminal
-        failed = fetched.filter(~is_2xx).drop("html")
+        failed = fetched.filter(c["failed"]).drop("html")
         if not resolves_all:
-            missing = minus(dequeued, ok.select("url_hash").unionByName(
-                failed.select("url_hash"))).withColumn("status", F.lit(404))
+            missing = minus(dequeued, ok.select(c["url_hash"]).unionByName(
+                failed.select(c["url_hash"]))).withColumns(c["missing"])
             failed = self._persist(failed.unionByName(missing))
         retryable = self._persist(
-            failed.filter(F.col("status").isin(*RETRY_STATUS)
-                          & (F.col("retry_count") < F.lit(self.max_retries)))
-            .drop("status")
-            .withColumn("retry_count", F.col("retry_count") + 1))
+            failed.filter(c["retry"]).drop("status").withColumns(c["retried"]))
         terminal = minus(failed.drop("status"), retryable)
         return ok, self._persist(terminal), retryable
 
@@ -684,10 +786,8 @@ class CrawlEngine:
         each None when no rule produces it. Each rule's columns are built
         the first round it is present and kept for the engine's life:
         building them is the plan cost."""
-        for rule in present:
-            if rule not in self._packs:
-                self._packs[rule] = RP.PACKS[rule]()
-        return RP.extract(ok, {rule: self._packs[rule] for rule in present})
+        rules = {rule: self._columns(RP.branches, rule) for rule in present}
+        return RP.extract(ok, rules, self._columns(RP.page_columns))
 
     def _next_frontier(self, rnd: int, deferred: DataFrame, retryable,
                        children, known: DataFrame) -> DataFrame:
@@ -695,60 +795,35 @@ class CrawlEngine:
         children are normalised in one projection after the union, filtered
         offsite and deduplicated against ``known`` keys and the rows already
         scheduled."""
-        cols = [f.name for f in FRONTIER_SCHEMA.fields]
-        carried = deferred.select(cols)
+        cols = self._columns(_frontier_cols)
+        carried = deferred.select(*cols)
         if retryable is not None:
-            carried = carried.unionByName(retryable.select(cols))
+            carried = carried.unionByName(retryable.select(*cols))
         if children is None:
             return carried
-        # F8 offsite filter: each child checks its rule family's pattern
-        family = F.substring_index(F.col("rule"), ":", 1)
-        offsite = F.coalesce(*[
-            F.when(family == f, F.col("host").rlike(p))
-            for f, p in sorted(RP.ALLOWED_HOST_PATTERNS.items())
-        ], F.lit(False))
+        c = self._columns(_child_columns,
+                          tuple(sorted(RP.ALLOWED_HOST_PATTERNS.items())))
         fresh = (
-            children
-            .withColumn("canon_url", U.canonicalize_url_udf()(F.col("url")))
-            .withColumn("fetch_key", U.fetch_key_col(F.col("canon_url"),
-                                                     F.col("form_data")))
-            .withColumn("url_hash", F.xxhash64("fetch_key"))
-            .withColumn("host", U.url_host_udf()(F.col("url")))
-            .filter(offsite)
-            .withColumn("priority", FR.priority_score(F.col("url")))
-            # seq is a lexicographically ordered DFS path key; %09d must
-            # match simulator._pad exactly
-            .withColumn("seq", F.concat_ws(
-                ".", F.col("parent_seq"),
-                F.format_string("%09d", F.col("pos"))))
-            .withColumn("round_added", F.lit(rnd + 1))
-            .withColumn("retry_count", F.lit(0))
-            .select(cols)
+            self._with_keys(children).filter(c["offsite"])
+            .withColumns({**c["fill"], "round_added": F.lit(rnd + 1)})
+            .select(*cols)
         )
         # one anti-join covers the seen set and the rows already scheduled
         # (ADVICE r1): the earlier-scheduled row wins, as with scrapy's
         # enqueue-time RFPDupeFilter
         fresh = FR.dedup_new_children(fresh, known.unionByName(
-            carried.select("url_hash", "fetch_key")))
+            carried.select(*self._columns(_seen_cols))))
         return carried.unionByName(fresh)
 
-    @staticmethod
-    def _metrics(ok, terminal, retryable, blocked) -> DataFrame:
+    def _metrics(self, ok, terminal, retryable, blocked) -> DataFrame:
         """Per-partition fetch log (T4 / north_rule): fetched, bytes,
         errors and retries per (partition_id, host). Terminal failures and
         robots-blocked rows count as errors, once."""
-        zero, n = F.lit(0).cast("long"), F.count("*")
-        parts = [(ok, n, F.sum("page_bytes"), zero, zero),
-                 (terminal, zero, zero, n, zero),
-                 (retryable, zero, zero, zero, n),
-                 (blocked, zero, zero, n, zero)]
-        return _union([
-            df.groupBy(F.spark_partition_id().alias("partition_id"), "host")
-            .agg(fetched.alias("fetched"), nbytes.alias("bytes"),
-                 errors.alias("errors"), retries.alias("retries"))
-            for df, fetched, nbytes, errors, retries in parts
-            if df is not None
-        ])
+        c = self._columns(_metrics_columns)
+        parts = {"ok": ok, "terminal": terminal, "retryable": retryable,
+                 "blocked": blocked}
+        return _union([df.groupBy(*c["by"]).agg(*c[kind])
+                       for kind, df in parts.items() if df is not None])
 
     @staticmethod
     def _write_round(pool: ThreadPoolExecutor, writes: list):

@@ -61,18 +61,20 @@ class CorpusFetcher:
     def fetch(self, dequeued: DataFrame, use_bcast: bool) -> DataFrame:
         eng = self.engine
         hits = eng._fetch_join(dequeued, use_bcast)
-        if eng._has_fail_col:
-            # T3 fault injection: the row exists but this attempt "gets a
-            # 5xx" while retry_count < fail_times
-            return hits.withColumn(
-                "status",
-                F.when(F.col("retry_count") >= F.col("fail_times"),
-                       F.lit(200)).otherwise(F.lit(503)),
-            ).withColumn(
-                "html", F.when(F.col("status") == 200, F.col("html"))
-            ).drop("fail_times")
+        return hits.withColumns(
+            eng._columns(_corpus_status, eng._has_fail_col)).drop("fail_times")
+
+
+def _corpus_status(fail_col: bool) -> dict:
+    """The status (and body) columns of a corpus hit."""
+    if not fail_col:
         # literal status: downstream not-2xx filters fold this branch away
-        return hits.withColumn("status", F.lit(200))
+        return {"status": F.lit(200)}
+    # T3 fault injection: the row exists but this attempt "gets a 5xx"
+    # while retry_count < fail_times
+    up = F.col("retry_count") >= F.col("fail_times")
+    return {"status": F.when(up, F.lit(200)).otherwise(F.lit(503)),
+            "html": F.when(up, F.col("html"))}
 
 
 class HttpFetcher:

@@ -16,12 +16,13 @@ returns a dict of up to three array Columns over one fetched page row:
               array<string>) — mirror of the reference's firmware/items.py
   quarantine: array<struct<rule, reason, detail>> — J3 class-map misses
 
-``extract`` runs the built rules over a page frame as one select per output
-kind, ``inline(CASE rule WHEN r THEN <r's array> ... END)``, and adds
-depth + 1, parent_seq and url from the page row. A Column is an unresolved
-expression of one session, so the engine builds each rule's columns once
-and reuses them every round; building them is Python work (py4j round
-trips for every ``F.*`` call) that dominates the plan cost, not Catalyst.
+``extract`` runs the built rules (``branches``) over a page frame as one
+select per output kind, ``inline(CASE rule WHEN r THEN <r's array> ...
+END)``, and adds depth + 1, parent_seq and url from the page row. A Column
+is an unresolved expression of one session, so the engine builds each
+rule's branches once and reuses them every round; building them is Python
+work (py4j round trips for every ``F.*`` call) that dominates the plan
+cost, not Catalyst.
 
 Plan shape: HTML is parsed EXACTLY ONCE per fetched page per round, inside
 ``parse_page_udf``; everything here is JVM array functions and codegen'd
@@ -115,44 +116,55 @@ ALLOWED_HOST_PATTERNS = {
     "dlink_ftp": r"^ftp\.dlink\.de$",
 }
 
-# output kind -> (element array type, page columns added to each element;
-# a function, since a Column needs a live session)
-_OUTPUTS = {
-    "children": (
-        "array<struct<url:string, rule:string, lineage:map<string,string>, "
-        "pos:int, form_data:map<string,string>>>",
-        lambda: [(F.col("depth") + 1).alias("depth"),
-                 F.col("seq").alias("parent_seq")]),
-    "items": (
-        "array<struct<vendor:array<string>, device_name:array<string>, "
-        "firmware_version:array<string>, device_class:array<string>, "
-        "release_date:array<string>, file_urls:array<string>>>",
-        lambda: []),
-    "quarantine": (
-        "array<struct<rule:string, reason:string, detail:string>>",
-        lambda: [F.col("url")]),
+# output kind -> its element array type
+_ELEMENT_TYPES = {
+    "children": "array<struct<url:string, rule:string, "
+                "lineage:map<string,string>, pos:int, "
+                "form_data:map<string,string>>>",
+    "items": "array<struct<vendor:array<string>, device_name:array<string>, "
+             "firmware_version:array<string>, device_class:array<string>, "
+             "release_date:array<string>, file_urls:array<string>>>",
+    "quarantine": "array<struct<rule:string, reason:string, detail:string>>",
 }
 
 
-def extract(pages: DataFrame, packs: dict) -> tuple:
-    """(children, items, quarantine) of the page rows ``pages`` under the
-    built rules ``packs`` (rule -> builder output): one select per output
-    kind, each a single generator over ``CASE rule``. A kind no rule
-    produces is None."""
+def branches(rule: str) -> dict:
+    """Build ``rule`` into the CASE branches ``extract`` dispatches:
+    output kind -> (the rule's condition, its array cast to the kind's
+    element type), for the kinds the rule produces."""
+    pack = PACKS[rule]()
+    return {kind: (F.col("rule") == rule, pack[kind].cast(elem_type))
+            for kind, elem_type in _ELEMENT_TYPES.items()
+            if pack.get(kind) is not None}
+
+
+def page_columns() -> dict:
+    """Output kind -> the page row columns ``extract`` adds to each
+    element."""
+    return {"children": [(F.col("depth") + 1).alias("depth"),
+                         F.col("seq").alias("parent_seq")],
+            "items": [],
+            "quarantine": [F.col("url")]}
+
+
+def extract(pages: DataFrame, rules: dict,
+            page_cols: dict | None = None) -> tuple:
+    """(children, items, quarantine) of the page rows ``pages`` under
+    ``rules`` (rule -> its ``branches``): one select per output kind, each
+    a single generator over ``CASE rule``. A kind no rule produces is
+    None. ``page_cols`` is a ``page_columns()`` build to reuse."""
     out = []
-    for kind, (elem_type, page_cols) in _OUTPUTS.items():
+    for kind, cols in (page_columns() if page_cols is None else page_cols).items():
         case = None
-        for rule, pack in packs.items():
-            if pack.get(kind) is not None:
-                hit, arr = F.col("rule") == rule, pack[kind].cast(elem_type)
-                case = F.when(hit, arr) if case is None else case.when(hit, arr)
+        for hit, arr in (b[kind] for b in rules.values() if kind in b):
+            case = F.when(hit, arr) if case is None else case.when(hit, arr)
         out.append(None if case is None
-                   else pages.select(*page_cols(), F.inline(case)))
+                   else pages.select(*cols, F.inline(case)))
     return tuple(out)
 
 
 def _apply(rule: str, pages: DataFrame) -> tuple:
-    return extract(pages, {rule: PACKS[rule]()})
+    return extract(pages, {rule: branches(rule)})
 
 
 # rule -> fn(pages) -> (children, items, quarantine): one rule's outputs as
