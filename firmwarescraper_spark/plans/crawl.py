@@ -35,6 +35,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from functools import reduce
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -491,6 +492,14 @@ class CrawlEngine:
             self._p("frontier", f"round={rnd}")
         )
         return df.withColumns(self._columns(_frontier_fixes))
+
+    def _frontier_rows(self, rnd: int) -> int:
+        """Rows of the round's frontier snapshot, summed from its parquet
+        footers on the driver, so the fixpoint check launches no Spark job.
+        ``_read_frontier`` drops no row, so this is its count."""
+        base = self._p("frontier", f"round={rnd}")
+        return sum(pq.read_metadata(os.path.join(base, f)).num_rows
+                   for f in os.listdir(base) if f.startswith("part-"))
 
     def _max_round(self, table: str) -> int:
         """Highest ``round=N`` entry under ``table``, or -1."""
@@ -991,9 +1000,7 @@ class CrawlEngine:
             rnd = 0
         rounds_run = 0
         try:
-            while rounds_run < max_rounds:
-                if self._read_frontier(rnd).isEmpty():
-                    break
+            while rounds_run < max_rounds and self._frontier_rows(rnd):
                 self.run_round(rnd)
                 rnd += 1
                 rounds_run += 1

@@ -174,6 +174,12 @@ def test_engine_rejects_politeness_below_one(spark, tmp_path, option, value):
 # (local[4], 4 shuffle partitions; the seen table is read under its own
 # schema, with no inference job). Ceiling = 32 + 25 %.
 MAX_JOBS_PER_ROUND = 40
+# Tasks of the same round's stages whose operation graph names a Python
+# node: 51. A stage that reads a cached frame counts too, since its graph
+# carries the frame's lineage; the perfbench crawl's workers run 8 Python
+# tasks per warm round (PLANS.md). Ceiling = 51 + 25 %.
+MAX_PYTHON_TASKS_PER_ROUND = 63
+PYTHON_NODE = re.compile(r"ArrowEvalPython|MapInPandas|BatchEvalPython")
 
 
 def _last_job_id(sc) -> int:
@@ -182,9 +188,11 @@ def _last_job_id(sc) -> int:
     return it.next().jobId() if it.hasNext() else -1
 
 
-def test_budgeted_round_job_count(spark, corpus, tmp_path_factory):
-    """The round's writes run on pool threads, so jobs are counted from the
-    status store (every job the session launched), not by job group."""
+@pytest.fixture(scope="module")
+def budgeted_round(spark, corpus, tmp_path_factory):
+    """The ids of the jobs that round 1 of a budgeted crawl launched. The
+    round's writes run on pool threads, so jobs are counted from the status
+    store (every job the session launched), not by job group."""
     state = str(tmp_path_factory.mktemp("state_jobs"))
     eng = CrawlEngine(spark, corpus, state, tokens_per_host=5, salt_buckets=4)
     eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
@@ -192,8 +200,54 @@ def test_budgeted_round_job_count(spark, corpus, tmp_path_factory):
     sc = spark.sparkContext._jsc.sc()
     before = _last_job_id(sc)
     eng.run_round(1)
-    jobs = _last_job_id(sc) - before
-    assert 0 < jobs <= MAX_JOBS_PER_ROUND, jobs
+    return range(before + 1, _last_job_id(sc) + 1)
+
+
+def test_budgeted_round_job_count(budgeted_round):
+    assert 0 < len(budgeted_round) <= MAX_JOBS_PER_ROUND, len(budgeted_round)
+
+
+def test_budgeted_round_python_task_count(spark, budgeted_round):
+    sc = spark.sparkContext
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    graph = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    stages = {sid for job in budgeted_round
+              for sid in tracker.getJobInfo(job).stageIds}
+    tasks = 0
+    for sid in stages:
+        info = tracker.getStageInfo(sid)
+        # a skipped stage ran no task, and the status store may have dropped
+        # it already: its cleanup removes stages with no completion time first
+        if info and info.numCompletedTasks and PYTHON_NODE.search(
+                graph.makeDotFile(store.operationGraphForStage(sid))):
+            tasks += info.numCompletedTasks
+    assert 0 < tasks <= MAX_PYTHON_TASKS_PER_ROUND, tasks
+
+
+def test_run_launches_jobs_only_in_rounds(spark, corpus, tmp_path_factory):
+    """run() reads the fixpoint from the frontier snapshot's parquet
+    footers: resuming a crawl, it launches no job outside run_round but
+    its summary counts."""
+    state = str(tmp_path_factory.mktemp("state_run_jobs"))
+    eng = CrawlEngine(spark, corpus, state, tokens_per_host=10_000, salt_buckets=4)
+    eng._write_frontier(eng.seed_frontier(G.seeds()), 0)
+    sc = spark.sparkContext._jsc.sc()
+    inner, gaps, last = eng.run_round, [], [_last_job_id(sc)]
+
+    def run_round(rnd):
+        gaps.append(_last_job_id(sc) - last[0])
+        out = inner(rnd)
+        last[0] = _last_job_id(sc)
+        return out
+
+    eng.run_round = run_round
+    summary = eng.run()
+    tail = _last_job_id(sc) - last[0]
+    before = _last_job_id(sc)
+    assert summary["seen"] == eng.seen().count()
+    assert summary["items"] == eng.items().count()
+    assert gaps == [0] * summary["rounds"]
+    assert tail == _last_job_id(sc) - before
 
 
 def test_state_reads_launch_no_job(spark, engine_state):
