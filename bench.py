@@ -325,8 +325,8 @@ def _sized_shuffle_partitions(corpus_path: str, floor: int = 4,
     same 4 partitions the r4 headline used, so scaling-pair numbers stay
     comparable; past that it grows linearly (capped at 256) and AQE
     coalesces any post-shuffle partitions that come out small. Local
-    os.walk sizing is bench-only; the engine's own size probe goes
-    through the Hadoop FileSystem API (crawl._frontier_bytes)."""
+    os.walk sizing is bench-only; the engine's own size probe sums the
+    frontier snapshot's local part files (crawl._frontier_bytes)."""
     return max(floor, min(256, -(-_dir_bytes(corpus_path) // target_bytes)))
 
 

@@ -74,7 +74,6 @@ def cmd_crawl(args, spark=None) -> dict:
         eng = CrawlEngine(
             spark, args.pages, args.state,
             obey_robots=not args.no_robots,
-            use_bloom_prefilter=args.bloom,
             compact_every=args.compact_every,
             fetcher=fetcher,
         )
@@ -171,8 +170,6 @@ def build_parser() -> argparse.ArgumentParser:
     c.add_argument("--fresh", action="store_true",
                    help="wipe state and start over (default: resume)")
     c.add_argument("--no-robots", action="store_true")
-    c.add_argument("--bloom", action="store_true",
-                   help="enable the partitioned-Bloom seen prefilter")
     c.add_argument("--http", action="store_true",
                    help="fetch pages and robots.txt over real HTTP "
                         "(mapInPandas HttpFetcher) instead of joining the "

@@ -7,10 +7,12 @@ Scale design (10^10-URL frontier, 1000 executors):
   ``url_hash`` (xxhash64 of the canonical URL). A Bloom filter is only a
   *prefilter*: Spark's own runtime bloom filters (InjectRuntimeFilter,
   Spark 3.3+) fire on this join automatically, and ``bloom_prefilter``
-  below builds an explicit broadcast Bloom when the seen side is orders of
-  magnitude larger than the frontier side. False positives never drop URLs
-  because the anti-join stays authoritative (north_rule: seen-set must
-  match the reference exactly).
+  below builds an explicit partitioned Bloom, one bitmap per ``url_hash``
+  bucket, probed bucket by bucket in a cogroup so no bitmap passes
+  through the driver at any filter size. The crawl engine runs the plain
+  anti-join; the Bloom path serves the ``bloom_anti_join`` query. False
+  positives never drop URLs because the anti-join stays authoritative
+  (north_rule: seen-set must match the reference exactly).
 
 * **Politeness dequeue** — a global per-host token budget fights
   data-parallel ranking: one hot host (download.avm.de holds >90% of the
@@ -37,26 +39,23 @@ from pyspark.sql import functions as F
 
 
 def anti_join_seen(frontier: DataFrame, seen: DataFrame,
-                   bloom: bool = False,
-                   expected_items: int | None = None, fpp: float = 0.03,
-                   buckets: int = 64, probe: str = "auto") -> DataFrame:
+                   bloom: bool = False, fpp: float = 0.03,
+                   buckets: int = 64) -> DataFrame:
     """Drop frontier rows whose ``url_hash`` is in the seen set — the
     scrapy RFPDupeFilter equivalent, placed BEFORE the fetch stage (the
     reference's key hand-optimization, SURVEY.md §4).
 
     With ``bloom=True`` the frontier is split by a partitioned-Bloom
-    membership test first: definite non-members (the overwhelming
-    majority of a fresh crawl's candidates) bypass the seen-check shuffle
-    entirely and only the "maybe seen" rows go through the exact
-    anti-join. Bloom false positives therefore cost one extra shuffled row
-    each, never a dropped URL — the anti-join stays authoritative
-    (north_rule: seen-set must match the reference exactly). Result parity
-    with the plain path is pinned by tests/test_operators.py and the
-    ``bloom_anti_join`` driver oracle."""
+    membership test first: definite non-members bypass the exact
+    anti-join and only the "maybe seen" rows go through it. Bloom false
+    positives therefore cost one extra row in the join each, never a
+    dropped URL — the anti-join stays authoritative (north_rule: seen-set
+    must match the reference exactly). Result parity with the plain path
+    is pinned by tests/test_operators.py and the ``bloom_anti_join``
+    driver oracle."""
     if not bloom:
         return frontier.join(seen.select("url_hash"), "url_hash", "left_anti")
-    flagged = bloom_prefilter(frontier, seen, expected_items, fpp,
-                              buckets=buckets, probe=probe)
+    flagged = bloom_prefilter(frontier, seen, fpp, buckets)
     fresh = flagged.filter(~F.col("_maybe_seen")).drop("_maybe_seen")
     maybes = flagged.filter(F.col("_maybe_seen")).drop("_maybe_seen")
     return fresh.unionByName(
@@ -106,24 +105,21 @@ def _bloom_test_bits(bm, h1_i64, m_bits: int, k: int):
     return res
 
 
-def build_bloom_buckets(seen: DataFrame, key: str = "url_hash",
-                        buckets: int = 64,
-                        expected_items: int | None = None,
+def build_bloom_buckets(seen: DataFrame, buckets: int = 64,
                         fpp: float = 0.03):
-    """Build a PARTITIONED Bloom filter over ``seen[key]`` (north_star:
+    """Build a PARTITIONED Bloom filter over ``seen.url_hash`` (north_star:
     "partitioned Bloom/cuckoo-filter URL-seen set"): the key space is
-    bucketed by ``pmod(key, buckets)`` and each bucket gets its own
+    bucketed by ``pmod(url_hash, buckets)`` and each bucket gets its own
     independent bitmap, built completely inside one ``applyInPandas`` task
     — no driver-side merge at all, and no single structure that has to fit
     one node. At 10^10 keys / fpp=0.03 (~7.3 bits/key ≈ 9 GB total),
-    buckets=4096 keeps every bitmap ≈ 2.2 MB: broadcastable per-bucket,
-    shippable as ordinary rows, and rebuildable per-bucket on change.
+    buckets=4096 keeps every bitmap ≈ 2.2 MB, shippable as ordinary rows.
 
-    Sizing: ``expected_items=None`` sizes from a ``seen.count()`` (ADVICE
-    r2: a fixed 1M default silently degrades fpp toward 1 as the seen set
-    grows). Keys are already 64-bit xxhash64 fingerprints, so per-bucket
-    occupancy is uniform (n/buckets) and probe positions come from
-    Kirsch–Mitzenmacher double hashing — no re-hashing of URL bytes.
+    Sizing comes from a ``seen.count()`` (ADVICE r2: a fixed item count
+    silently degrades fpp toward 1 as the seen set grows). Keys are
+    already 64-bit xxhash64 fingerprints, so per-bucket occupancy is
+    uniform (n/buckets) and probe positions come from Kirsch–Mitzenmacher
+    double hashing — no re-hashing of URL bytes.
 
     Returns (bitmaps DataFrame ``(bucket int, bm binary)``, m_bits, k)
     where m_bits/k are the per-bucket geometry."""
@@ -131,132 +127,46 @@ def build_bloom_buckets(seen: DataFrame, key: str = "url_hash",
 
     import numpy as np
 
-    n = seen.count() if expected_items is None else expected_items
-    per_bucket = max(64, math.ceil(max(n, 1) / buckets))
+    per_bucket = max(64, math.ceil(max(seen.count(), 1) / buckets))
     m_bits, k = _bloom_geometry(per_bucket, fpp)
     words = m_bits // 64
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         bm = np.zeros(words, dtype=np.uint64)
-        _bloom_set_bits(bm, pdf[key].to_numpy(dtype=np.int64), m_bits, k)
+        _bloom_set_bits(bm, pdf["url_hash"].to_numpy(dtype=np.int64), m_bits, k)
         return pd.DataFrame(
             {"bucket": [int(pdf["_bucket"].iloc[0])], "bm": [bm.tobytes()]}
         )
 
     bitmaps = (
-        seen.select(key)
-        .withColumn("_bucket", F.pmod(F.col(key), F.lit(buckets)).cast("int"))
+        seen.select("url_hash")
+        .withColumn("_bucket", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
         .groupBy("_bucket")
         .applyInPandas(_build, "bucket int, bm binary")
     )
     return bitmaps, m_bits, k
 
 
-def merge_bloom_buckets(bitmaps: DataFrame, new_seen: DataFrame,
-                        m_bits: int, k: int, key: str = "url_hash",
-                        buckets: int = 64) -> DataFrame:
-    """Incremental filter maintenance (the 10^10-URL steady state): OR the
-    new keys' probe bits into the existing per-bucket bitmaps instead of
-    rebuilding the whole filter. Implemented as a full-outer cogroup on
-    bucket — a bucket with no new keys passes through untouched, a bucket
-    with no prior bitmap starts from zeros, and only the touched buckets'
-    fixed-size bitmaps move. Bit-OR is associative/idempotent, so
-    ``merge(build(A), B) == build(A ∪ B)`` byte-for-byte at equal geometry
-    (pinned by tests/test_round3_fixes.py).
-
-    ``m_bits``/``k`` must be the geometry the bitmaps were built with
-    (returned by build_bloom_buckets)."""
-    import numpy as np
-
-    words = m_bits // 64
-
-    def _merge(bm_pdf: pd.DataFrame, keys_pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(bm_pdf):
-            bm = np.frombuffer(bm_pdf["bm"].iloc[0], dtype=np.uint64).copy()
-            bucket = int(bm_pdf["bucket"].iloc[0])
-        else:
-            bm = np.zeros(words, dtype=np.uint64)
-            bucket = int(keys_pdf["_bucket"].iloc[0])
-        if len(keys_pdf):
-            _bloom_set_bits(
-                bm, keys_pdf[key].to_numpy(dtype=np.int64), m_bits, k)
-        return pd.DataFrame({"bucket": [bucket], "bm": [bm.tobytes()]})
-
-    tagged = new_seen.select(key).withColumn(
-        "_bucket", F.pmod(F.col(key), F.lit(buckets)).cast("int")
-    )
-    return (
-        bitmaps.groupBy("bucket")
-        .cogroup(tagged.groupBy("_bucket"))
-        .applyInPandas(_merge, "bucket int, bm binary")
-    )
-
-
-# total-bitmap-bytes ceiling for the broadcast probe path; past it the
-# cogroup path keeps every bitmap executor-side
-_BLOOM_BROADCAST_CAP = 64 << 20
-
-
 def bloom_prefilter(frontier: DataFrame, seen: DataFrame,
-                    expected_items: int | None = None, fpp: float = 0.03,
-                    buckets: int = 64, probe: str = "auto") -> DataFrame:
+                    fpp: float = 0.03, buckets: int = 64) -> DataFrame:
     """Tag each frontier row with ``_maybe_seen``: a membership test
     against the partitioned Bloom filter of the seen-set's ``url_hash``.
     Consumed by ``anti_join_seen(..., bloom=True)``, which anti-joins only
     the maybes and unions the definite-unseen rows back.
 
-    Two probe strategies (``probe="auto"`` picks by total bitmap size):
-
-    * ``"broadcast"`` — collect the (fixed-size, per-bucket) bitmaps into
-      a dict and broadcast; the test is a vectorized pandas UDF indexing
-      its bucket's bitmap per batch. No shuffle of the frontier. Right
-      while the whole filter fits comfortably in executor memory.
-    * ``"cogroup"`` — group BOTH sides by bucket and probe inside
-      ``cogroup(...).applyInPandas``: each task sees one bucket's frontier
-      rows plus that one bucket's bitmap row. The driver never
-      materializes a single bitmap; total filter size is unbounded by any
-      one node. Costs one hash-partition of the frontier by bucket — the
-      10^10-key path.
-
-    Either way, false positives cost one extra shuffled row in the exact
-    anti-join, never a dropped URL."""
+    The probe groups BOTH sides by bucket in one
+    ``cogroup(...).applyInPandas``: each task sees one bucket's frontier
+    rows plus that bucket's single bitmap row. It is the one probe that
+    works at every filter size: no bitmap ever sits on the driver or in a
+    broadcast, so the total filter is bounded by no single node. It costs
+    one hash partition of the frontier by bucket. False positives cost
+    one extra row in the exact anti-join, never a dropped URL."""
     import numpy as np
-    from pyspark.sql.functions import pandas_udf
     from pyspark.sql import types as T
 
-    bitmaps, m_bits, k = build_bloom_buckets(
-        seen, "url_hash", buckets, expected_items, fpp)
-    total_bytes = buckets * (m_bits // 8)
-    if probe == "auto":
-        probe = "broadcast" if total_bytes <= _BLOOM_BROADCAST_CAP else "cogroup"
-
-    bucket_col = F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int")
-
-    if probe == "broadcast":
-        bm_by_bucket = {r["bucket"]: r["bm"] for r in bitmaps.collect()}
-        spark = frontier.sparkSession
-        bf_b = spark.sparkContext.broadcast((bm_by_bucket, m_bits, k, buckets))
-
-        @pandas_udf(T.BooleanType())
-        def maybe_seen(hashes: pd.Series) -> pd.Series:
-            table, m, kk, nb = bf_b.value
-            h1 = hashes.to_numpy(dtype=np.int64)
-            bkt = np.mod(h1, np.int64(nb))  # numpy % == floored == pmod
-            res = np.zeros(len(h1), dtype=bool)
-            for b in np.unique(bkt):
-                raw = table.get(int(b))
-                if raw is None:  # bucket empty in seen => definitely unseen
-                    continue
-                sel = bkt == b
-                bm = np.frombuffer(raw, dtype=np.uint64)
-                res[sel] = _bloom_test_bits(bm, h1[sel], m, kk)
-            return pd.Series(res, index=hashes.index)
-
-        return frontier.withColumn("_maybe_seen", maybe_seen(F.col("url_hash")))
-
-    # cogroup path: one bucket's frontier rows + that bucket's single
-    # bitmap row per task; nothing ever sits on the driver
-    tagged = frontier.withColumn("_bucket", bucket_col)
+    bitmaps, m_bits, k = build_bloom_buckets(seen, buckets, fpp)
+    tagged = frontier.withColumn(
+        "_bucket", F.pmod(F.col("url_hash"), F.lit(buckets)).cast("int"))
     out_schema = T.StructType(
         list(tagged.schema.fields) + [T.StructField("_maybe_seen", T.BooleanType())]
     )
@@ -264,7 +174,7 @@ def bloom_prefilter(frontier: DataFrame, seen: DataFrame,
     def _probe(fr_pdf: pd.DataFrame, bm_pdf: pd.DataFrame) -> pd.DataFrame:
         if len(fr_pdf) == 0:
             return fr_pdf.assign(_maybe_seen=pd.Series([], dtype=bool))
-        if len(bm_pdf) == 0:
+        if len(bm_pdf) == 0:  # bucket empty in seen => definitely unseen
             res = np.zeros(len(fr_pdf), dtype=bool)
         else:
             bm = np.frombuffer(bm_pdf["bm"].iloc[0], dtype=np.uint64)

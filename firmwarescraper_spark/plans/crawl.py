@@ -30,6 +30,7 @@ Per-partition lineage/metrics (north_rule): ``fetch_log`` records
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -46,6 +47,7 @@ from firmwarescraper_spark.functions import url as U
 from firmwarescraper_spark.operators import frontier as FR
 from firmwarescraper_spark.operators import robots as RB
 from firmwarescraper_spark.plans import rulepacks as RP
+from firmwarescraper_spark.plans.fetchers import MAX_FETCH_BYTES
 
 FRONTIER_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -242,10 +244,8 @@ class CrawlEngine:
         salt_buckets: int = 8,
         obey_robots: bool = True,
         round_seconds: float = 60.0,
-        max_fetch_bytes: int = 2_147_483_648,  # F12: 2 GiB download_maxsize
+        max_fetch_bytes: int = MAX_FETCH_BYTES,
         max_retries: int = 2,  # T3: scrapy RETRY_TIMES default
-        use_bloom_prefilter: bool = False,
-        broadcast_cap_bytes: int = 64 << 20,
         pages_table: str | None = None,
         compact_every: int | None = 64,
         fetcher=None,
@@ -254,6 +254,11 @@ class CrawlEngine:
         # buckets would divide by zero mid-round under ANSI mode
         if min(tokens_per_host, salt_buckets) < 1:
             raise ValueError("tokens_per_host and salt_buckets must be at least 1")
+        # every state reader and writer goes through os paths: a URI would
+        # be written by Spark and then not found by the driver mid-run
+        if re.match(r"[A-Za-z][A-Za-z0-9+.-]*://", state_dir):
+            raise ValueError(
+                f"state_dir must be a local path, not a URI: {state_dir!r}")
         self.spark = spark
         self.pages_path = pages_path
         self.state_dir = state_dir
@@ -263,8 +268,6 @@ class CrawlEngine:
         self.round_seconds = round_seconds
         self.max_fetch_bytes = max_fetch_bytes
         self.max_retries = max_retries
-        self.use_bloom_prefilter = use_bloom_prefilter
-        self.broadcast_cap_bytes = broadcast_cap_bytes
         self.pages_table = pages_table
         self.compact_every = compact_every
         # pluggable fetch stage (S1): CorpusFetcher joins the sandbox pages
@@ -493,13 +496,18 @@ class CrawlEngine:
         )
         return df.withColumns(self._columns(_frontier_fixes))
 
+    def _frontier_parts(self, rnd: int) -> list:
+        """Paths of the round's frontier snapshot's parquet part files."""
+        base = self._p("frontier", f"round={rnd}")
+        return [os.path.join(base, f) for f in os.listdir(base)
+                if f.startswith("part-")]
+
     def _frontier_rows(self, rnd: int) -> int:
         """Rows of the round's frontier snapshot, summed from its parquet
         footers on the driver, so the fixpoint check launches no Spark job.
         ``_read_frontier`` drops no row, so this is its count."""
-        base = self._p("frontier", f"round={rnd}")
-        return sum(pq.read_metadata(os.path.join(base, f)).num_rows
-                   for f in os.listdir(base) if f.startswith("part-"))
+        return sum(pq.read_metadata(f).num_rows
+                   for f in self._frontier_parts(rnd))
 
     def _max_round(self, table: str) -> int:
         """Highest ``round=N`` entry under ``table``, or -1."""
@@ -535,26 +543,23 @@ class CrawlEngine:
 
     # -- fetch build-side gating -------------------------------------------------
     def _frontier_bytes(self, rnd: int) -> int:
-        """On-disk size of the round's frontier snapshot — a free metadata
-        upper bound on the dequeued set (dequeued ⊆ frontier), marker files
-        included. Read through Hadoop's FileSystem API, so a state_dir on
-        any filesystem (hdfs://, s3a://, file:) measures its real size."""
-        base = self._p("frontier", f"round={rnd}")
-        jvm = self.spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(base)
-        fs = path.getFileSystem(
-            self.spark.sparkContext._jsc.hadoopConfiguration())
-        if not fs.exists(path):
+        """On-disk size of the round's frontier snapshot's part files, 0
+        when it is missing — a free metadata upper bound on the dequeued
+        set (dequeued ⊆ frontier)."""
+        if not os.path.isdir(self._p("frontier", f"round={rnd}")):
             return 0
-        return int(fs.getContentSummary(path).getLength())
+        return sum(os.path.getsize(f) for f in self._frontier_parts(rnd))
 
     def _fetch_broadcast_choice(self, rnd: int) -> bool:
         """Broadcast the fetch join's build side only while the frontier
-        snapshot is under ``broadcast_cap_bytes``: an unlimited round over a
-        huge frontier would OOM a broadcast. Past the cap the join runs
-        unhinted, and AQE picks broadcast or SMJ (shuffle-free over a
-        bucketed ``pages_table``, PLANS.md §2b) from the actual size."""
-        return self._frontier_bytes(rnd) <= self.broadcast_cap_bytes
+        snapshot fits the session's ``spark.sql.autoBroadcastJoinThreshold``
+        (-1: never): an unlimited round over a huge frontier would OOM a
+        broadcast. Past it the join runs unhinted, and AQE picks broadcast
+        or SMJ (shuffle-free over a bucketed ``pages_table``, PLANS.md §2b)
+        from the actual size."""
+        conf = self.spark._jsparkSession.sessionState().conf()
+        cap = conf.autoBroadcastJoinThreshold()
+        return cap >= 0 and self._frontier_bytes(rnd) <= cap
 
     def _fetch_join(self, dequeued: DataFrame, use_bcast: bool) -> DataFrame:
         """The fetch stage's corpus equi-join; build side per the gate."""
@@ -717,8 +722,7 @@ class CrawlEngine:
         if self._state_is_empty("seen"):
             candidates = frontier  # cold start: the anti-join is the identity
         else:
-            candidates = FR.anti_join_seen(frontier, seen,
-                                           bloom=self.use_bloom_prefilter)
+            candidates = FR.anti_join_seen(frontier, seen)
         if not self.obey_robots:
             # both dequeue outputs read it across several actions
             return self._persist(candidates), None
@@ -755,7 +759,7 @@ class CrawlEngine:
             # a fetcher that returns every row (HttpFetcher: real network
             # requests) must not be re-run by the ok/failed consumers
             fetched = self._persist(fetched)
-        capped = self.max_fetch_bytes < 2_147_483_648
+        capped = self.max_fetch_bytes < MAX_FETCH_BYTES
         if capped:
             # only under a non-default cap, so the corpus fetcher's literal
             # status still folds failures away

@@ -42,6 +42,9 @@ from pyspark.sql import types as T
 # scrapy settings) + 599 as the synthetic "network error / timeout" code
 RETRY_STATUS = (500, 502, 503, 504, 522, 524, 408, 429, 599)
 
+# F12 download_maxsize: the 2 GiB the reference's avm_gpl spider sets
+MAX_FETCH_BYTES = 2_147_483_648
+
 
 class CorpusFetcher:
     """Fetch = equi-join against the pages corpus on the canonical URL.
@@ -92,7 +95,7 @@ class HttpFetcher:
       fragments) exists only to build the dupefilter fingerprint (X2);
       scrapy fetches ``request.url`` verbatim, and real servers care
       (signed/ordered query strings, case-sensitive escapes).
-    * The body is read in bounded chunks up to ``max_bytes`` and ABORTED
+    * The body is read in bounded chunks up to the engine's cap and ABORTED
       mid-stream past it — scrapy's ``download_maxsize`` semantics
       (/root/reference/firmware/spiders/avm_gpl.py:27 sets 2 GiB for this
       protection). The engine's F12 guard filters on ``F.length`` AFTER
@@ -123,14 +126,12 @@ class HttpFetcher:
 
     def __init__(self, engine=None, timeout: float = 320.0,
                  concurrency: int = 16, user_agent: str = "firmwarescraper",
-                 max_bytes: int | None = None,
                  follow_redirects: bool = True, max_redirects: int = 20,
                  per_host_delay_ms: float = 0.0):
         self.engine = engine
         self.timeout = timeout
         self.concurrency = concurrency
         self.user_agent = user_agent
-        self.max_bytes = max_bytes
         self.follow_redirects = follow_redirects
         self.max_redirects = max_redirects
         self.per_host_delay_ms = per_host_delay_ms
@@ -140,11 +141,8 @@ class HttpFetcher:
         agent = self.user_agent
         follow, max_redirects = self.follow_redirects, self.max_redirects
         delay_s = self.per_host_delay_ms / 1000.0
-        # default the stream cap to the engine's F12 download_maxsize
-        max_bytes = self.max_bytes
-        if max_bytes is None:
-            max_bytes = getattr(self.engine, "max_fetch_bytes",
-                                2_147_483_648)
+        # the stream cap is the engine's F12 download_maxsize
+        max_bytes = getattr(self.engine, "max_fetch_bytes", MAX_FETCH_BYTES)
         out_schema = T.StructType(
             [f for f in dequeued.schema.fields]
             + [T.StructField("html", T.StringType()),

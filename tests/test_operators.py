@@ -94,6 +94,47 @@ def test_dedup_new_children_first_yielder_wins(spark):
     assert got == {"u1": "0000", "u2": "0005"}
 
 
+def test_bloom_prefilter_parity(spark):
+    """anti_join_seen(bloom=True) must return exactly the plain anti-join's
+    rows — Bloom false positives cost a row in the exact join, never a
+    lost URL. Pinned across bucket counts (the filter is partitioned: one
+    independent bitmap per pmod(url_hash, B) bucket), with sizing derived
+    from seen.count()."""
+    frontier = spark.range(0, 5000).select(
+        F.col("id"), F.xxhash64("id").alias("url_hash"))
+    seen = spark.range(0, 5000, 3).select(F.xxhash64("id").alias("url_hash"))
+    plain = {r["id"] for r in FR.anti_join_seen(frontier, seen).collect()}
+    for buckets in (2, 64):
+        bloom = {r["id"] for r in FR.anti_join_seen(
+            frontier, seen, bloom=True, fpp=0.05, buckets=buckets).collect()}
+        assert plain == bloom, buckets
+    default = {r["id"] for r in FR.anti_join_seen(
+        frontier, seen, bloom=True).collect()}
+    assert plain == default
+
+
+def test_bloom_buckets_geometry(spark):
+    """Per-bucket bitmaps are independent and sized for n/buckets keys:
+    build_bloom_buckets returns one row per non-empty bucket, every key
+    tests positive in its own bucket's bitmap, and the per-bucket geometry
+    shrinks as buckets grow (the property that keeps any single bitmap
+    ~MBs at 10^10 keys)."""
+    import numpy as np
+
+    seen = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
+    bm4, m4, k4 = FR.build_bloom_buckets(seen, buckets=4, fpp=0.03)
+    bm16, m16, k16 = FR.build_bloom_buckets(seen, buckets=16, fpp=0.03)
+    assert m16 < m4  # 4x more buckets => smaller per-bucket bitmap
+    rows = {r["bucket"]: r["bm"] for r in bm4.collect()}
+    assert set(rows) == {0, 1, 2, 3}
+    hashes = [r["url_hash"] for r in seen.collect()]
+    for h in hashes[:200]:
+        b = h % 4  # python % == pmod for positive modulus
+        bm = np.frombuffer(rows[b], dtype=np.uint64)
+        assert FR._bloom_test_bits(
+            bm, np.array([h], dtype=np.int64), m4, k4)[0]
+
+
 # --- robots -------------------------------------------------------------------
 
 ROBOTS_TXT = """User-agent: *

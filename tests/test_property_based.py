@@ -68,7 +68,7 @@ def test_bloom_partition_parity_random(spark):
     """Randomized Bloom parity sweep (driven, not @given — one Spark
     session, several drawn cases): for random seen/frontier overlaps,
     bucket counts, and fpp, the bloom-split anti-join equals the exact
-    anti-join on both probe paths."""
+    anti-join."""
     from pyspark.sql import functions as F
 
     from firmwarescraper_spark.operators import frontier as FR
@@ -79,16 +79,14 @@ def test_bloom_partition_parity_random(spark):
         step = int(rng.integers(2, 9))
         buckets = int(rng.choice([1, 3, 16, 64]))
         fpp = float(rng.choice([0.01, 0.1, 0.3]))
-        probe = str(rng.choice(["broadcast", "cogroup"]))
         frontier = spark.range(0, n_f).select(
             F.col("id"), F.xxhash64("id").alias("url_hash"))
         seen = spark.range(0, n_f, step).select(
             F.xxhash64("id").alias("url_hash"))
         plain = {r["id"] for r in FR.anti_join_seen(frontier, seen).collect()}
         bloom = {r["id"] for r in FR.anti_join_seen(
-            frontier, seen, bloom=True, fpp=fpp, buckets=buckets,
-            probe=probe).collect()}
-        assert plain == bloom, (n_f, step, buckets, fpp, probe)
+            frontier, seen, bloom=True, fpp=fpp, buckets=buckets).collect()}
+        assert plain == bloom, (n_f, step, buckets, fpp)
 
 
 def test_politeness_budget_properties_random(spark):

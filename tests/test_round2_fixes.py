@@ -1,7 +1,7 @@
 """Round-2 behaviors: T3 retries, F12 oversize guard, round-commit
 rollback, enqueue-time dedup vs deferred rows, quarantine table, JSON feed,
 download-manifest misses, banded simhash / LSH embedding dedup exactness,
-bloom-prefilter parity, and quote_plus column parity."""
+and quote_plus column parity."""
 
 import os
 
@@ -322,50 +322,6 @@ def test_bucketed_antijoin_no_shuffle(spark):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
         spark.sql("DROP TABLE IF EXISTS t_seen_b")
         spark.sql("DROP TABLE IF EXISTS t_frontier_b")
-
-
-def test_bloom_prefilter_parity(spark):
-    """anti_join_seen(bloom=True) must return exactly the plain anti-join's
-    rows — Bloom false positives cost a shuffled row, never a lost URL.
-    Pinned across BOTH probe strategies and multiple bucket counts (the
-    filter is partitioned: one independent bitmap per pmod(url_hash, B)
-    bucket), and with sizing derived from seen.count() (no expected_items
-    hint)."""
-    frontier = spark.range(0, 5000).select(
-        F.col("id"), F.xxhash64("id").alias("url_hash"))
-    seen = spark.range(0, 5000, 3).select(F.xxhash64("id").alias("url_hash"))
-    plain = {r["id"] for r in FR.anti_join_seen(frontier, seen).collect()}
-    for probe in ("broadcast", "cogroup"):
-        for buckets in (2, 64):
-            bloom = {r["id"] for r in FR.anti_join_seen(
-                frontier, seen, bloom=True, expected_items=2000, fpp=0.05,
-                buckets=buckets, probe=probe).collect()}
-            assert plain == bloom, (probe, buckets)
-    auto = {r["id"] for r in FR.anti_join_seen(
-        frontier, seen, bloom=True).collect()}  # sizing from seen.count()
-    assert plain == auto
-
-
-def test_bloom_buckets_geometry(spark):
-    """Per-bucket bitmaps are independent and sized for n/buckets keys:
-    build_bloom_buckets returns one row per non-empty bucket, every key
-    tests positive in its own bucket's bitmap, and the per-bucket geometry
-    shrinks as buckets grow (the property that keeps any single bitmap
-    ~MBs at 10^10 keys)."""
-    import numpy as np
-
-    seen = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
-    bm4, m4, k4 = FR.build_bloom_buckets(seen, buckets=4, fpp=0.03)
-    bm16, m16, k16 = FR.build_bloom_buckets(seen, buckets=16, fpp=0.03)
-    assert m16 < m4  # 4x more buckets => smaller per-bucket bitmap
-    rows = {r["bucket"]: r["bm"] for r in bm4.collect()}
-    assert set(rows) == {0, 1, 2, 3}
-    hashes = [r["url_hash"] for r in seen.collect()]
-    for h in hashes[:200]:
-        b = h % 4  # python % == pmod for positive modulus
-        bm = np.frombuffer(rows[b], dtype=np.uint64)
-        assert FR._bloom_test_bits(
-            bm, np.array([h], dtype=np.int64), m4, k4)[0]
 
 
 def test_ngram_jaccard_cap_consistency(spark):

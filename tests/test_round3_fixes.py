@@ -96,28 +96,6 @@ def test_fetch_log_mixed_schema_reads(spark, tmp_path):
     assert rows["h2"]["retries"] == 2
 
 
-def test_bloom_incremental_merge_equals_rebuild(spark):
-    """merge_bloom_buckets(build(A), B) must equal build(A ∪ B)
-    byte-for-byte at equal geometry — bit-OR is associative, so the
-    incremental path (the 10^10-URL steady state: OR only each round's
-    new seen keys into their buckets) never diverges from a full rebuild."""
-    from firmwarescraper_spark.operators import frontier as FR
-
-    a = spark.range(0, 3000).select(F.xxhash64("id").alias("url_hash"))
-    b = spark.range(3000, 4000).select(F.xxhash64("id").alias("url_hash"))
-    union = a.unionByName(b)
-    n = union.count()
-    full, m_full, k_full = FR.build_bloom_buckets(
-        union, buckets=8, expected_items=n)
-    base, m_base, k_base = FR.build_bloom_buckets(
-        a, buckets=8, expected_items=n)  # same geometry as the full build
-    assert (m_full, k_full) == (m_base, k_base)
-    merged = FR.merge_bloom_buckets(base, b, m_base, k_base, buckets=8)
-    full_rows = {r["bucket"]: bytes(r["bm"]) for r in full.collect()}
-    merged_rows = {r["bucket"]: bytes(r["bm"]) for r in merged.collect()}
-    assert full_rows == merged_rows
-
-
 def test_repetition_signals_hand_values(spark):
     """Gopher-style repetition signals against hand-computed values:
     'a b a b a b' -> top bigram 'a b' occurs 3x => 3*2/6 = 1.0 coverage;

@@ -1,25 +1,17 @@
 """Round-4 behaviors: ADVICE r3 fixes (top-bigram clamp, deterministic
 feed join key, seq-width resume migration) plus the r3 verdict's scale
-items (size-gated fetch build side, shuffle-free collect_downloads, state
-compaction, pluggable fetcher, ANN LSH oracle parity)."""
+items (shuffle-free collect_downloads, state compaction, pluggable
+fetcher, ANN LSH oracle parity). The size-gated fetch build side is
+pinned in tests/test_fetchers.py."""
 
 import os
 
-import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
 from firmwarescraper_spark.plans.crawl import CrawlEngine
 from firmwarescraper_spark.sources import generate as G
-
-SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
-          "lang string")
-
-
-def _write_pages(spark, path, pages: dict):
-    rows = G._rows_from_pages(pages)
-    spark.createDataFrame(pd.DataFrame(rows), SCHEMA).write.mode(
-        "overwrite").parquet(path)
+from tests.test_fetchers import _physical_plan, _serve, _write_pages
 
 
 # ---------------------------------------------------------------------------
@@ -110,57 +102,6 @@ def eng_schema():
     from firmwarescraper_spark.plans.crawl import FRONTIER_SCHEMA
 
     return FRONTIER_SCHEMA
-
-
-# ---------------------------------------------------------------------------
-# r3 verdict #1: size-gated fetch-join build side
-# ---------------------------------------------------------------------------
-
-def _physical_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_fetch_broadcast_autogate(spark, tmp_path):
-    """The fetch-join size gate must broadcast the dequeued set only while
-    the frontier snapshot (an upper bound on it) fits the cap; past the
-    cap the join runs unhinted — no forced BroadcastExchange of an
-    unbounded dequeued set — and the crawl result is identical."""
-    corpus = str(tmp_path / "pages")
-    G.write_corpus(spark, corpus, n_avm=2, n_linksys=2, partitions=2)
-
-    a = CrawlEngine(spark, corpus, str(tmp_path / "state_a"))
-    a.run(G.seeds(), fresh=True)
-    # default auto: tiny frontier -> broadcast chosen
-    assert a._fetch_broadcast_choice(0) is True
-
-    b = CrawlEngine(spark, corpus, str(tmp_path / "state_b"),
-                    broadcast_cap_bytes=0)  # every snapshot "too big"
-    b._write_frontier(b.seed_frontier(G.seeds()), 0)
-    res = b.run_round(0)
-    assert res["fetch_broadcast"] is False
-    b.run()  # drain to fixpoint on the non-broadcast path
-    assert ({r["fetch_key"] for r in a.seen().collect()}
-            == {r["fetch_key"] for r in b.seen().collect()})
-    assert a.items().count() == b.items().count()
-
-
-def test_fetch_join_plan_no_forced_broadcast(spark, tmp_path):
-    """Plan-shape pin: with the gate OFF the dequeued build side carries no
-    broadcast hint, so (auto-broadcast disabled) the physical plan has no
-    BroadcastExchange; with the gate ON it does."""
-    corpus = str(tmp_path / "pages")
-    G.write_corpus(spark, corpus, n_avm=2, n_linksys=2, partitions=2)
-    eng = CrawlEngine(spark, corpus, str(tmp_path / "state"))
-    dequeued = eng.seed_frontier(G.seeds())
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        assert "BroadcastExchange" not in _physical_plan(
-            eng._fetch_join(dequeued, use_bcast=False))
-        assert "BroadcastExchange" in _physical_plan(
-            eng._fetch_join(dequeued, use_bcast=True))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
 # ---------------------------------------------------------------------------
@@ -299,39 +240,6 @@ def test_compaction_bounds_file_count(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # r3 verdict #3: pluggable fetch stage — real HTTP through the round loop
 # ---------------------------------------------------------------------------
-
-def _serve(pages: dict):
-    """Serve {url: html} over localhost; returns (server, port, hits)."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import urlsplit
-
-    by_path = {urlsplit(u).path + (("?" + urlsplit(u).query)
-                                   if urlsplit(u).query else ""): h
-               for u, h in pages.items()}
-    hits = []
-
-    class H(BaseHTTPRequestHandler):
-        def do_GET(self):
-            body = by_path.get(self.path)
-            hits.append(self.path)
-            if body is None:
-                self.send_response(404)
-                self.end_headers()
-                return
-            data = body.encode()
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def log_message(self, *a):  # keep pytest output clean
-            pass
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    return srv, srv.server_address[1], hits
-
 
 def test_http_fetcher_matches_corpus_join(spark, tmp_path, monkeypatch):
     """E2E over real localhost HTTP (mapInPandas HttpFetcher): the crawl

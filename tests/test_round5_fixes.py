@@ -1,7 +1,7 @@
 """Round-5 behaviors: r4 verdict fixes (HttpFetcher requests the ORIGINAL
-URL; stream-bounded body reads; robots state lineage truncation; Hadoop-FS
-frontier size probe) plus ADVICE r4 (collect_downloads null-blob guard;
-the robots source flags are gone from the CLI)."""
+URL; robots state lineage truncation) plus ADVICE r4 (collect_downloads
+null-blob guard; the robots source flags are gone from the CLI). The
+stream-bounded body reads are pinned in tests/test_fetchers.py."""
 
 import os
 
@@ -12,49 +12,7 @@ from pyspark.sql import functions as F
 from firmwarescraper_spark.operators import robots as RB
 from firmwarescraper_spark.plans.crawl import CrawlEngine
 from firmwarescraper_spark.sources import generate as G
-
-SCHEMA = ("url string, warc_ts timestamp, html binary, text string, "
-          "lang string")
-
-
-def _write_pages(spark, path, pages: dict):
-    rows = G._rows_from_pages(pages)
-    spark.createDataFrame(pd.DataFrame(rows), SCHEMA).write.mode(
-        "overwrite").parquet(path)
-
-
-def _serve(pages: dict, chunked_body_bytes: int | None = None):
-    """Serve {url: body} over localhost; records every raw request target
-    (path?query exactly as received) in ``hits``."""
-    import threading
-    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-    from urllib.parse import urlsplit
-
-    by_path = {urlsplit(u).path + (("?" + urlsplit(u).query)
-                                   if urlsplit(u).query else ""): h
-               for u, h in pages.items()}
-    hits = []
-
-    class H(BaseHTTPRequestHandler):
-        def do_GET(self):
-            hits.append(self.path)
-            body = by_path.get(self.path)
-            if body is None:
-                self.send_response(404)
-                self.end_headers()
-                return
-            data = body.encode() if isinstance(body, str) else body
-            self.send_response(200)
-            self.send_header("Content-Length", str(len(data)))
-            self.end_headers()
-            self.wfile.write(data)
-
-        def log_message(self, *a):
-            pass
-
-    srv = ThreadingHTTPServer(("127.0.0.1", 0), H)
-    threading.Thread(target=srv.serve_forever, daemon=True).start()
-    return srv, srv.server_address[1], hits
+from tests.test_fetchers import SCHEMA, _serve, _write_pages
 
 
 # ---------------------------------------------------------------------------
@@ -88,63 +46,6 @@ def test_http_fetcher_requests_original_url(spark, tmp_path):
     keys = {r["fetch_key"] for r in eng.seen().collect()}
     assert keys == {f"http://127.0.0.1:{port}/x/?a=1&b=2"}
     assert eng.fetch_log().agg(F.sum("fetched")).first()[0] == 1
-
-
-# ---------------------------------------------------------------------------
-# r4 verdict #3: stream-bounded body reads (download_maxsize semantics)
-# ---------------------------------------------------------------------------
-
-def test_http_fetcher_streams_bounded(spark, tmp_path):
-    """An over-cap response must come back as a retryable 503 with a NULL
-    body — read in chunks and aborted at max_bytes + 1, never materialized
-    (scrapy download_maxsize; the engine's F.length guard fires only after
-    the bytes already sit in executor memory). A body of exactly max_bytes
-    still succeeds: the cap is inclusive."""
-    from firmwarescraper_spark.plans.fetchers import HttpFetcher
-
-    cap = 4096
-    exact = "A" * cap
-    over = "B" * (cap * 300)  # ~1.2 MB: many chunks past the cap
-    srv, port, _ = _serve({"http://127.0.0.1/exact": exact,
-                           "http://127.0.0.1/over": over})
-    dequeued = spark.createDataFrame(
-        [(f"http://127.0.0.1:{port}/exact", None),
-         (f"http://127.0.0.1:{port}/over", None)],
-        "url string, form_data map<string,string>")
-    try:
-        fetcher = HttpFetcher(timeout=60, concurrency=2, max_bytes=cap)
-        rows = {r["url"].rsplit("/", 1)[1]: r
-                for r in fetcher.fetch(dequeued, use_bcast=False).collect()}
-    finally:
-        srv.shutdown()
-    assert rows["exact"]["status"] == 200
-    assert rows["exact"]["html"] == exact
-    assert rows["over"]["status"] == 503     # retryable -> terminal (T3)
-    assert rows["over"]["html"] is None      # body never materialized
-
-
-def test_http_fetcher_cap_defaults_to_engine_max_fetch_bytes(spark, tmp_path):
-    """Wired through the engine: an oversize response is retried
-    max_retries times then terminally logged — the same T3 path as a
-    simulated 5xx, with the body bounded at every attempt."""
-    from firmwarescraper_spark.plans.fetchers import HttpFetcher
-
-    srv, port, hits = _serve({"http://127.0.0.1/big/": "C" * 50_000})
-    url = f"http://127.0.0.1:{port}/big/"
-    corpus = str(tmp_path / "pages")
-    _write_pages(spark, corpus, {url: "x"})
-    try:
-        eng = CrawlEngine(spark, corpus, str(tmp_path / "state"),
-                          obey_robots=False, max_fetch_bytes=1000,
-                          fetcher=HttpFetcher(timeout=60, concurrency=2))
-        summary = eng.run([(url, "avm:parse")], fresh=True)
-    finally:
-        srv.shutdown()
-    assert summary["rounds"] == 3  # attempt + 2 retries
-    log = eng.fetch_log().agg(
-        F.sum("errors").alias("e"), F.sum("retries").alias("r")).first()
-    assert (log["e"], log["r"]) == (1, 2)
-    assert len(hits) == 3
 
 
 # ---------------------------------------------------------------------------
@@ -327,34 +228,6 @@ def test_robots_http_lineage_bounded(spark, tmp_path):
     assert bases == []
     eng._robots(bases)
     assert eng._robots_state is before
-
-
-# ---------------------------------------------------------------------------
-# r4 verdict #6: frontier size probe goes through Hadoop FileSystem
-# ---------------------------------------------------------------------------
-
-def test_frontier_bytes_hadoop_fs(spark, tmp_path):
-    """A state_dir addressed by URI (file:) — where os.listdir would see
-    nothing and silently return 0, force-broadcasting everything — must
-    still measure the snapshot and drive the gate correctly."""
-    state = str(tmp_path / "state")
-    eng = CrawlEngine(spark, str(tmp_path / "nopages"), "file://" + state)
-    eng._write_frontier(eng.seed_frontier(
-        [(f"http://h.example/p{i}", "avm:parse") for i in range(50)]), 0)
-    n = eng._frontier_bytes(0)
-    assert n > 0
-    # cross-check against the local view of the same directory (skip the
-    # .crc sidecars — Hadoop's ChecksumFileSystem hides them from its own
-    # accounting, and they are absent on HDFS/S3 anyway)
-    local = sum(os.path.getsize(os.path.join(state, "frontier", "round=0", f))
-                for f in os.listdir(os.path.join(state, "frontier", "round=0"))
-                if not f.startswith((".", "_")))
-    assert n >= local > 0
-    assert eng._frontier_bytes(7) == 0  # missing snapshot: no crash
-    # gate wiring: under the cap -> broadcast; cap 0 -> never
-    assert eng._fetch_broadcast_choice(0) is True
-    eng.broadcast_cap_bytes = 0
-    assert eng._fetch_broadcast_choice(0) is False
 
 
 # ---------------------------------------------------------------------------
@@ -645,6 +518,7 @@ def test_bench_headline_alldirty_fallback_is_minarm():
     (["--http", "--robots-from-pages"], False), # removed flag
     ([], True),                                 # default sandbox mode
     (["--robots-http"], False),                 # removed flag
+    (["--bloom"], False),                       # removed flag
 ])
 def test_cli_robots_http_wiring(argv, parses):
     """There is no robots source to pick: both former flags are rejected
